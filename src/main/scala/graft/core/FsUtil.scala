@@ -38,22 +38,34 @@ object FsUtil {
     * a durable path, where the equivalent lever is the object store's
     * commit protocol, not tmpfs.
     * Placement can be forced with `GRAFT_SCRATCH_DIR` (e.g. a big disk
-    * path when tmpfs is too small for the SF being run), and tmpfs is
-    * only chosen while it has usable headroom (r17 advisor: /dev/shm is
-    * typically capped at 50% of RAM, and an ENOSPC mid-bench at a larger
-    * SF would fail where the old disk-backed /tmp succeeded). */
+    * path when tmpfs is too small for the SF being run) — an override that
+    * is not a writable directory fails fast rather than silently falling
+    * back (a typo would otherwise reintroduce the very ENOSPC the override
+    * was set to avoid) — and tmpfs is only chosen while it has usable
+    * headroom (r17 advisor: /dev/shm is typically capped at 50% of RAM, and
+    * an ENOSPC mid-bench at a larger SF would fail where the old
+    * disk-backed /tmp succeeded). */
   private[graft] val ScratchMinUsableBytes = 8L * 1024 * 1024 * 1024
-  def scratchDir(prefix: String): Path = {
-    val forced = sys.env.get("GRAFT_SCRATCH_DIR").map(java.nio.file.Paths.get(_))
+  def scratchDir(prefix: String): Path =
+    scratchDir(prefix, sys.env.get("GRAFT_SCRATCH_DIR"))
+
+  /** [[scratchDir]] with the `GRAFT_SCRATCH_DIR` value passed in. */
+  private[graft] def scratchDir(prefix: String, forcedDir: Option[String]): Path = {
+    val forced = forcedDir.map { d =>
+      val p = java.nio.file.Paths.get(d)
+      if (!Files.isDirectory(p) || !Files.isWritable(p))
+        throw new IllegalArgumentException(
+          s"GRAFT_SCRATCH_DIR=$d is not a writable directory")
+      p
+    }
     val shm = java.nio.file.Paths.get("/dev/shm")
-    val root = forced.filter(p => Files.isDirectory(p) && Files.isWritable(p))
-      .getOrElse {
-        val shmOk = Files.isDirectory(shm) && Files.isWritable(shm) &&
-          (try Files.getFileStore(shm).getUsableSpace >= ScratchMinUsableBytes
-           catch { case _: Throwable => false })
-        if (shmOk) shm
-        else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-      }
+    val root = forced.getOrElse {
+      val shmOk = Files.isDirectory(shm) && Files.isWritable(shm) &&
+        (try Files.getFileStore(shm).getUsableSpace >= ScratchMinUsableBytes
+         catch { case _: Throwable => false })
+      if (shmOk) shm
+      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    }
     Files.createTempDirectory(root, prefix)
   }
 }

@@ -95,9 +95,11 @@ final case class IndexStats(
  * appends), and the one anomaly they can produce — the same chunkKey
  * appended to payloads by both, each having passed its left-anti against
  * the same stale snapshot — is contained: every read path resolves map
- * rows through a per-chunkKey exemplar, so `get`/`getStream`/
- * `reconstructAll` return correct bytes THROUGH the duplicate window, and
- * [[repairIndex]] merely reclaims the wasted bytes afterwards.
+ * rows through a per-chunkKey exemplar (point reads through
+ * [[PayloadStore.fetch]]'s one-payload-per-key map, `reconstructAll`
+ * through a pre-join `dropDuplicates("chunkKey")`), so reads return
+ * correct bytes THROUGH the duplicate window, and [[repairIndex]] merely
+ * reclaims the wasted bytes afterwards.
  */
 final class DedupeEngine(
     val spark: SparkSession, basePath: String,
@@ -166,11 +168,11 @@ final class DedupeEngine(
   // ---------------------------------------------------------------- ingest
 
   /** Store one object; rejects a duplicate key like the reference
-    * (DedupeLibrary.cs:203). */
+    * (DedupeLibrary.cs:203) — through `ingest`'s existing-key check, which
+    * runs before any commit. */
   def write(key: String, data: Array[Byte]): Unit = {
     require(key != null && key.nonEmpty, "object key required")
     require(data != null && data.nonEmpty, "data required")
-    if (exists(key)) throw new IllegalArgumentException(s"object key already exists: $key")
     ingest(Seq(key -> data))
   }
 
@@ -211,27 +213,13 @@ final class DedupeEngine(
       throw new IllegalArgumentException(
         s"duplicate object key within ingest batch: ${inBatchDup.head.getString(0)}")
 
-    val existingKeys = objects.select($"objectKey")
-    val dupes = chunked.select($"objectKey").distinct()
-      .join(existingKeys, Seq("objectKey"), "left_semi").limit(1).collect()
+    val batchKeys = chunked.select($"objectKey").distinct()
+    val dupes = batchKeys.join(objects.select($"objectKey"), Seq("objectKey"), "left_semi")
+      .limit(1).collect()
     if (dupes.nonEmpty)
       throw new IllegalArgumentException(s"object key already exists: ${dupes.head.getString(0)}")
 
-    // crash debris: a prior attempt that died between its objmap and
-    // objects commits left map rows for keys now absent from objects —
-    // appending over them would interleave two writes into one object.
-    // Cheap probe first (narrow early-terminating key-column scan, same
-    // cost class as the duplicate check above); the full purge runs only
-    // in the rare after-a-crash case
-    val batchKeys = chunked.select($"objectKey").distinct()
-    val hasDebris = !objmap.select($"objectKey")
-      .join(batchKeys, Seq("objectKey"), "left_semi").limit(1).isEmpty
-    if (hasDebris) {
-      val debris = objmap.select($"objectKey")
-        .join(batchKeys, Seq("objectKey"), "left_semi")
-        .distinct().as[String].collect()
-      objmapT.deleteKeys("objectKey", debris.toSeq)
-    }
+    purgeDebris(batchKeys)
 
     // incremental commits: each table gains ONE new segment holding only the
     // batch's rows (O(new data) — at scale an ingest never rewrites tables)
@@ -271,7 +259,7 @@ final class DedupeEngine(
       batchBytes: Long = 64L << 20): Unit = {
     require(key != null && key.nonEmpty, "object key required")
     if (exists(key)) throw new IllegalArgumentException(s"object key already exists: $key")
-    purgeDebrisFor(Seq(key)) // a dead prior attempt's map rows must not merge in
+    purgeDebris(Seq(key).toDF("objectKey"))
     val stage = s"$basePath/.stage-${java.util.UUID.randomUUID().toString.take(8)}"
     try {
       val it = settings.chunkStream(in)
@@ -309,14 +297,16 @@ final class DedupeEngine(
     }
   }
 
-  /** Remove crash-debris map rows for keys about to be (re)written: a prior
-    * attempt that died between its objmap commit and its objects commit left
-    * rows that would silently merge with the new write's map. Cheap when
-    * clean — one point-filtered existence probe, no table rewrite. */
-  private def purgeDebrisFor(keys: Seq[String]): Unit = {
-    val debris = objmap.filter($"objectKey".isInCollection(keys))
-      .select($"objectKey").distinct().as[String].collect()
-    if (debris.nonEmpty) objmapT.deleteKeys("objectKey", debris.toSeq)
+  /** Remove crash-debris map rows for the `keys` (one `objectKey` column)
+    * about to be written: a prior attempt that died between its objmap and
+    * objects commits left rows that would silently interleave with the new
+    * write's map. Cheap when clean — one narrow early-terminating probe of
+    * objmap's key column; the purge runs only in the rare after-a-crash
+    * case. */
+  private def purgeDebris(keys: DataFrame): Unit = {
+    val debris = objmap.select($"objectKey").join(keys, Seq("objectKey"), "left_semi")
+    if (!debris.limit(1).isEmpty)
+      objmapT.deleteKeys("objectKey", debris.distinct().as[String].collect().toSeq)
   }
 
   /** Ingest every file under `path` (recursively) as one object each,
@@ -389,14 +379,14 @@ final class DedupeEngine(
   def exists(key: String): Boolean =
     !objects.filter($"objectKey" === key).limit(1).isEmpty
 
-  /** Point metadata lookup enriched with ordered map + chunk info
-    * (reference: SqliteProvider.cs:282-305). Exactly TWO Spark jobs — the
-    * point-read latency contract `openStream` set: job 1 collects the object
-    * row AND its map rows in one union scan; job 2 computes the global
-    * refcounts for just this object's chunk keys (an IN filter pushed under
-    * the objmap agg — refcounts are cross-object, so they need their own
-    * pass). Never a job per table, never a broadcast build job. */
-  def getMetadata(key: String): Option[ObjectMetadata] = {
+  /** The object row and its address-ordered map rows IFF the objects row
+    * committed — the one point lookup every point read goes through: ONE
+    * union scan of objects and objmap, never a job per table. This is the
+    * crash-debris guard the contract doc promises: a writer that died
+    * between its objmap and objects commits leaves map rows that must be
+    * invisible to EVERY read path (exists = false, so get/getStream/
+    * openStream/getMetadata = None). */
+  private def lookup(key: String): Option[(ObjectRow, Seq[MapRow])] = {
     val o = objects.filter($"objectKey" === key)
       .select(lit("o").as("kind"), $"objectKey", $"originalLength",
         $"compressedLength", $"chunkCount", $"createdUtc",
@@ -411,15 +401,35 @@ final class DedupeEngine(
         lit(null).cast(LongType).as("chunkCount"),
         lit(null).cast(TimestampType).as("createdUtc"),
         $"chunkKey", $"chunkLength", $"chunkPosition", $"chunkAddress")
-    val rows = o.unionByName(m).collect() // job 1
-    val objRow = rows.find(_.getString(0) == "o").map(r => ObjectRow(
-      r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getTimestamp(5)))
-    objRow.map { obj =>
+    val rows = o.unionByName(m).collect()
+    rows.find(_.getString(0) == "o").map { r =>
+      val obj = ObjectRow(
+        r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getTimestamp(5))
       val mapRows = rows.iterator.filter(_.getString(0) == "m").map(r => MapRow(
         r.getString(1), r.getString(6), r.getInt(7), r.getInt(8), r.getLong(9)))
         .toSeq.sortBy(_.chunkAddress)
+      (obj, mapRows)
+    }
+  }
+
+  /** ONE batched payload fetch for all of a map's chunks — the point reads'
+    * shared fetch (never one Spark job per chunk). The store returns one
+    * payload per key, so duplicate payload rows from the out-of-contract
+    * concurrent-append race resolve to a single exemplar here. */
+  private def payloadsFor(m: Seq[MapRow]): Map[String, Array[Byte]] =
+    store.fetch(m.map(_.chunkKey).distinct)
+
+  /** Point metadata lookup enriched with ordered map + chunk info
+    * (reference: SqliteProvider.cs:282-305): [[lookup]]'s union scan, then
+    * the global refcounts for just this object's chunk keys (an IN filter
+    * pushed into the objmap scan — refcounts are cross-object, so they need
+    * their own pass). Two query executions; each can add a file-listing job
+    * when its scan names more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` segment paths. */
+  def getMetadata(key: String): Option[ObjectMetadata] =
+    lookup(key).map { case (obj, mapRows) =>
       val keys = mapRows.map(_.chunkKey).distinct
-      // job 2: one shuffle-free filtered scan of the map edges touching this
+      // one shuffle-free filtered scan of the map edges touching this
       // object's chunks, aggregated driver-side (a groupBy would be correct
       // but AQE runs its shuffle as an extra job; collected rows = sum of
       // these chunks' refcounts — point-lookup sized by construction)
@@ -430,7 +440,6 @@ final class DedupeEngine(
       }.toSeq
       ObjectMetadata(obj, mapRows, ck)
     }
-  }
 
   /** Chunk metadata point lookup (reference: SqliteProvider.cs:312-326). */
   def getChunkMetadata(chunkKey: String): Option[ChunkInfo] =
@@ -459,7 +468,7 @@ final class DedupeEngine(
     require(dstKey != null && dstKey.nonEmpty, "object key required")
     if (!exists(srcKey)) throw new NoSuchElementException(s"no such object: $srcKey")
     if (exists(dstKey)) throw new IllegalArgumentException(s"object key already exists: $dstKey")
-    purgeDebrisFor(Seq(dstKey))
+    purgeDebris(Seq(dstKey).toDF("objectKey"))
     objmapT.append(objmap.filter($"objectKey" === srcKey).toDF()
       .withColumn("objectKey", lit(dstKey))
       .select($"objectKey", $"chunkKey", $"chunkLength", $"chunkPosition", $"chunkAddress"))
@@ -471,81 +480,44 @@ final class DedupeEngine(
 
   // ---------------------------------------------------------------- read
 
-  /** Reconstruct an object: filter map → join payloads → order → concat
-    * (reference: DedupeLibrary.cs:377-404). */
-  def get(key: String): Option[Array[Byte]] = {
-    if (!exists(key)) return None
-    val parts = objmap.filter($"objectKey" === key)
-      .join(payloads, Seq("chunkKey"))
-      .select($"chunkAddress", $"data")
-      // out-of-contract concurrent ingests can leave the SAME chunkKey at
-      // two payload versions (both passed their left-anti against one stale
-      // snapshot); each map row must then resolve to ONE exemplar or the
-      // join doubles the chunk. chunkAddress is unique per object (the
-      // tiling invariant), and payloads for one key are byte-identical
-      // (SHA-256 content keys), so any survivor is correct. Post-join on
-      // the point path: dedupes this object's few rows — never forces an
-      // exchange of the whole payload table the way a pre-join
-      // dropDuplicates("chunkKey") would here.
-      .dropDuplicates("chunkAddress")
-      .orderBy($"chunkAddress")
-      .collect()
+  /** Reconstruct an object: [[lookup]] the ordered map, fetch its chunks in
+    * one pass, concat in address order (reference: DedupeLibrary.cs:377-404).
+    * A committed object with no map rows reads back as empty bytes. */
+  def get(key: String): Option[Array[Byte]] = lookup(key).map { case (_, m) =>
+    val payloads = payloadsFor(m)
     val out = new java.io.ByteArrayOutputStream()
-    parts.foreach(r => out.write(r.getAs[Array[Byte]]("data")))
-    Some(out.toByteArray)
+    m.foreach(r => out.write(payloads(r.chunkKey)))
+    out.toByteArray
   }
 
   /** Chunk-at-a-time read (reference DedupeStream, DedupeStream.cs:13-175):
-    * an iterator over address-ordered chunks. All of the object's payloads
-    * are prefetched in ONE batched pass (a point-read API must not run one
-    * Spark job per chunk — a 100-chunk object would launch 100 query
-    * executions); objects are at most a few thousand chunks by construction,
-    * so the prefetch is the same memory envelope as `get`. */
+    * an iterator over address-ordered chunks, all prefetched by
+    * [[payloadsFor]]'s one pass; objects are at most a few thousand chunks
+    * by construction, so the prefetch is the same memory envelope as `get`.
+    * None for a committed object with no map rows. */
   def getStream(key: String): Option[Iterator[Array[Byte]]] =
-    committedMap(key).filter(_.nonEmpty).map { ms =>
-      val m = ms.sortBy(_.chunkAddress).map(_.chunkKey)
-      val prefetched = store.fetch(m.distinct) // ONE pass for all chunks
-      m.iterator.map(prefetched(_))
+    lookup(key).collect { case (_, m) if m.nonEmpty =>
+      val payloads = payloadsFor(m)
+      m.iterator.map(r => payloads(r.chunkKey))
     }
-
-  /** The object's map rows IFF its objects-table row is committed — ONE
-    * union scan (getMetadata's shape), preserving the point-read job
-    * budget. This is the crash-debris guard the contract doc promises:
-    * a writeStream that died between its objmap and objects commits must
-    * be invisible to EVERY read path, and an objmap-only read here would
-    * instead return Some(...) for a key where exists=false/get=None —
-    * worse, its iterator would throw when the never-committed payloads
-    * are missing from the prefetch. */
-  private def committedMap(key: String): Option[Seq[MapRow]] = {
-    val rows = objects.filter($"objectKey" === key)
-      .select(lit("o").as("kind"), lit(null).cast(StringType).as("chunkKey"),
-        lit(0).as("chunkLength"), lit(0).as("chunkPosition"),
-        lit(0L).as("chunkAddress"))
-      .unionByName(objmap.filter($"objectKey" === key)
-        .select(lit("m").as("kind"), $"chunkKey", $"chunkLength",
-          $"chunkPosition", $"chunkAddress"))
-      .collect()
-    if (!rows.exists(_.getString(0) == "o")) None
-    else Some(rows.toSeq.filter(_.getString(0) == "m").map(r =>
-      MapRow(key, r.getString(1), r.getInt(2), r.getInt(3), r.getLong(4))))
-  }
 
   /** Seekable java.io.InputStream over a deduped object (the reference's
     * DedupeStream facade) — each refill resolves the covering chunk via the
-    * position lookup (C1) and copies the overlap. Opening costs exactly two
-    * Spark jobs (map collect + batched payload prefetch — never one job per
-    * chunk); reads and seeks after open touch no Spark at all. Diverges
+    * position lookup (C1) and copies the overlap. Opening costs the same two
+    * query executions as `get` ([[lookup]] + the batched payload fetch —
+    * never one job per chunk; a scan naming more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` segment paths
+    * adds a file-listing job); reads and seeks after open touch no Spark at
+    * all. None for a committed object with no map rows. Diverges
     * deliberately from two reference bugs (SURVEY §7): reads past EOF return
     * -1 (not a buffer-offset bail, DedupeStream.cs:89) and seeking to any
     * position in [0, length] is allowed (DedupeStream.cs:125 rejects
     * offset == Length).
     */
   def openStream(key: String): Option[DedupeObjectStream] =
-    committedMap(key).filter(_.nonEmpty).map { m =>
+    lookup(key).collect { case (_, m) if m.nonEmpty =>
       val length = m.iterator.map(r => r.chunkAddress + r.chunkLength).max
-      val prefetched = store.fetch(m.map(_.chunkKey).distinct)
-      new DedupeObjectStream(length, m.sortBy(_.chunkAddress),
-        ck => prefetched.getOrElse(ck, store.fetch(Seq(ck))(ck)))
+      new DedupeObjectStream(length, m, payloadsFor(m))
     }
 
   /** Distributed bulk reconstruction — every object (or a filtered set)
@@ -696,7 +668,7 @@ final class DedupeEngine(
     * derived stats. Repair ALSO heals duplicate payload rows (the
     * out-of-contract concurrent-append race). Reads were already correct
     * through the duplicate window — every read path resolves map rows
-    * through a per-chunkKey exemplar (see [[get]]/[[reconstructAll]]) —
+    * through a per-chunkKey exemplar (see [[payloadsFor]]/[[reconstructAll]]) —
     * so healing reclaims the duplicated bytes, nothing more. Sweeps `.stage-*`
     * directories a killed writeStream left behind. Run it with no writer
     * in flight — an in-flight writeStream's staging dir must not be

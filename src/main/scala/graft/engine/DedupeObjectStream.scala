@@ -12,8 +12,8 @@ final class DedupeObjectStream(
     map: Seq[MapRow],
     fetch: String => Array[Byte]) extends java.io.InputStream {
 
-  // address-sorted map for binary search (callers pass it sorted already;
-  // sort defensively, it is tiny relative to payloads)
+  // address-sorted map: rowFor's binary search depends on this order, so
+  // the stream sorts for itself (the map is tiny relative to payloads)
   private val sorted: Array[MapRow] = map.sortBy(_.chunkAddress).toArray
   private var pos: Long = 0L
   private var cachedKey: String = _

@@ -24,10 +24,10 @@ import java.nio.file.{Files, Paths}
  *     `read()` may therefore expose duplicate chunkKey rows until
  *     [[healDuplicates]] runs. Payloads for one key are byte-identical by
  *     construction (SHA-256 content keys), so every engine read path
- *     resolves map rows through a per-key EXEMPLAR (post-join address
- *     dedupe on point gets, pre-join `dropDuplicates("chunkKey")` on bulk
- *     reconstruction) — reads stay correct through the window; healing
- *     only reclaims the wasted bytes;
+ *     resolves map rows through a per-key EXEMPLAR (`fetch`'s
+ *     one-payload-per-key map on every point read, pre-join
+ *     `dropDuplicates("chunkKey")` on bulk reconstruction) — reads stay
+ *     correct through the window; healing only reclaims the wasted bytes;
  *   - `fetch` must resolve all requested keys in one pass (at most one
  *     Spark job), never one job per key — the point-read latency
  *     contract — and return exactly ONE payload per key (a Map, so

@@ -169,13 +169,15 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
       s"manifest of $path kept vanishing mid-read after 8 attempts — writers are outpacing the grace window")
   }
 
-  /** Current snapshot as a DataFrame; empty (with schema) before first commit. */
-  override def read(): DataFrame = {
-    val (_, segs) = currentSnapshot()
+  /** The rows of `segs` — an empty frame with the schema when there are
+    * none (before the first commit, or a version whose commits emptied it). */
+  private def readSegments(segs: Seq[Segment]): DataFrame =
     if (segs.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else spark.read.schema(schema).parquet(segs.map(s => dir.resolve(s.name).toString): _*)
-  }
+
+  /** Current snapshot as a DataFrame; empty (with schema) before first commit. */
+  override def read(): DataFrame = readSegments(currentSnapshot()._2)
 
   /** Number of segments in the current version (compaction signal). */
   def segmentCount: Int = currentSnapshot()._2.size
@@ -199,10 +201,7 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
     if (!Files.exists(manifestPath(v)))
       throw new IllegalArgumentException(
         s"version $v of $path is not retained (have: ${retainedVersions.mkString(",")})")
-    val segs = segments(v)
-    if (segs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(segs.map(s => dir.resolve(s.name).toString): _*)
+    readSegments(segments(v))
   }
 
   /** Append-only commit: write `df` as one new segment, manifest = old + new.
@@ -230,9 +229,7 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
       val bySize = topOrder.map(top => top -> dirBytes(dir.resolve(top))).sortBy(_._2)
       val foldTops = bySize.take(topOrder.size - compactThreshold / 2).map(_._1).toSet
       val (folded, kept) = segs.partition(s => foldTops(s.name.takeWhile(_ != '/')))
-      val foldedDf = spark.read.schema(schema)
-        .parquet(folded.map(s => dir.resolve(s.name).toString): _*)
-      commit(v, kept, foldedDf.unionByName(df))
+      commit(v, kept, readSegments(folded).unionByName(df))
     }
   }
 
@@ -286,11 +283,7 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
     * [[publishIfVersion]]; see AnnIndexStore.compactDeletes). */
   def readWithVersion(): (Long, DataFrame) = {
     val (v, segs) = currentSnapshot()
-    val df =
-      if (segs.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(segs.map(s => dir.resolve(s.name).toString): _*)
-    (v, df)
+    (v, readSegments(segs))
   }
 
   /** Full-snapshot commit that claims exactly version `expected`+1 —
@@ -353,8 +346,7 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
       else (segs, Seq.empty[Segment])
     if (touched.isEmpty) return // no segment can hold a victim: free no-op
     asConflict("targeted delete") {
-      val survivors = spark.read.schema(schema)
-        .parquet(touched.map(s => dir.resolve(s.name).toString): _*)
+      val survivors = readSegments(touched)
         // !isInCollection is NULL (not true) for a null key under SQL
         // three-valued logic — keep null-key rows explicitly or they would
         // vanish along with the victims

@@ -29,8 +29,14 @@ class DedupeEngineSpec extends SparkSpec {
 
   test("duplicate key write is rejected") {
     val e = newEngine()
-    e.write("k", randomBytes(500, 2))
+    val first = randomBytes(500, 2)
+    e.write("k", first)
+    val statsBefore = e.indexStats()
     assertThrows[IllegalArgumentException](e.write("k", randomBytes(500, 3)))
+    // the rejection must come before any commit: nothing of the second
+    // write may reach the index
+    assert(java.util.Arrays.equals(e.get("k").get, first), "the first object reads back intact")
+    assert(e.indexStats() === statsBefore, "a rejected write commits nothing")
   }
 
   test("N identical objects dedupe to ~1 physical copy (test.bat golden)") {
@@ -409,7 +415,7 @@ class DedupeEngineSpec extends SparkSpec {
     assert(e.objmap.filter(_.objectKey == "doomed").count() > 0,
       "this test must actually produce the narrow-window debris")
     // the debris must be invisible to EVERY read path, not just exists/get:
-    // the stream paths consult the objects table (committedMap), and the
+    // the stream paths consult the objects table (the engine's lookup), and the
     // bulk reconstruction semi-joins against it — an objmap-only read here
     // would surface a phantom (and, for the stream paths, throw when the
     // never-committed payloads miss the prefetch)

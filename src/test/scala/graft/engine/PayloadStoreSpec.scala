@@ -61,43 +61,53 @@ class PayloadStoreSpec extends SparkSpec {
     }
   }
 
-  test("openStream + full sequential read executes at most 2 Spark jobs") {
-    val e = engines().head._2
-    val data = randomBytes(30000, 23) // many 256..2048-byte chunks
-    e.write("big", data)
+  /** Spark jobs started while `body` runs (the listener bus is async, so
+    * give it a moment before reading the count). */
+  private def jobsDuring(body: => Unit): Int = {
     val jobs = new AtomicInteger(0)
     val listener = new SparkListener {
       override def onJobStart(jobStart: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(listener)
-    try {
-      val st = e.openStream("big").get
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](512)
-      var n = st.read(buf, 0, buf.length)
-      while (n > 0) { out.write(buf, 0, n); n = st.read(buf, 0, buf.length) }
-      assert(java.util.Arrays.equals(out.toByteArray, data))
-      // listener events are delivered async; give the bus a moment
-      Thread.sleep(1500)
-      val count = jobs.get()
-      assert(count >= 1, "listener must have observed the open")
-      assert(count <= 2,
-        s"point read ran $count Spark jobs — the payload prefetch must be ONE batched job, not one per chunk")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    try { body; Thread.sleep(1500); jobs.get() }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("openStream + full sequential read executes at most 2 Spark jobs") {
+    // get is held to the same budget — one lookup plus one batched payload
+    // fetch — over both payload stores, each behind the parquet index
+    val flatDir = Files.createTempDirectory("graft-ps-budget-flat").toString
+    val stores = Seq(
+      "parquet" -> engines().head._2,
+      "flat-file" -> new DedupeEngine(spark, flatDir, DedupeSettings(256, 2048, 8, 1),
+        Some(new FlatFilePayloadStore(spark, s"$flatDir/payloads-ff"))))
+    for ((label, e) <- stores) {
+      val data = randomBytes(30000, 23) // many 256..2048-byte chunks
+      e.write("big", data)
+      val streamJobs = jobsDuring {
+        val st = e.openStream("big").get
+        val out = new java.io.ByteArrayOutputStream()
+        val buf = new Array[Byte](512)
+        var n = st.read(buf, 0, buf.length)
+        while (n > 0) { out.write(buf, 0, n); n = st.read(buf, 0, buf.length) }
+        assert(java.util.Arrays.equals(out.toByteArray, data), s"[$label] stream bytes")
+      }
+      val getJobs = jobsDuring(
+        assert(java.util.Arrays.equals(e.get("big").get, data), s"[$label] get bytes"))
+      for ((op, count) <- Seq("openStream" -> streamJobs, "get" -> getJobs)) {
+        assert(count >= 1, s"[$label] listener must have observed $op")
+        assert(count <= 2,
+          s"[$label] $op ran $count Spark jobs — the payload prefetch must be ONE batched job, not one per chunk")
+      }
+    }
   }
 
   test("getMetadata executes at most 2 Spark jobs") {
     val e = engines().head._2
     e.write("meta", randomBytes(20000, 29)) // several chunks, some shared refs
     e.write("meta2", randomBytes(20000, 29).take(10000)) // overlapping prefix content
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val count = jobsDuring {
       val md = e.getMetadata("meta").get
       assert(md.obj.objectKey == "meta")
       assert(md.map.nonEmpty && md.chunks.nonEmpty)
@@ -105,12 +115,10 @@ class PayloadStoreSpec extends SparkSpec {
         "map rows must come back address-ordered")
       assert(md.chunks.map(_.chunkKey).toSet == md.map.map(_.chunkKey).toSet,
         "chunk info covers exactly this object's chunks")
-      Thread.sleep(1500) // listener bus is async
-      val count = jobs.get()
-      assert(count >= 1, "listener must have observed the lookup")
-      assert(count <= 2,
-        s"getMetadata ran $count Spark jobs — object+map must share one union scan, refcounts one more")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(count >= 1, "listener must have observed the lookup")
+    assert(count <= 2,
+      s"getMetadata ran $count Spark jobs — object+map must share one union scan, refcounts one more")
   }
 
   test("ingest rejects a batch that duplicates a key within itself") {
