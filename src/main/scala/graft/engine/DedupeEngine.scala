@@ -142,16 +142,13 @@ final class DedupeEngine(
   def objmap: Dataset[MapRow] = objmapT.read().as[MapRow]
   def payloads: Dataset[PayloadRow] = store.read().as[PayloadRow]
 
-  /** ONE payload exemplar per NEW chunkKey — the dedupe-on-write pipeline
-    * shared verbatim by `ingest` and `writeStream` (it used to exist
-    * twice; the dedupe and sort contracts here are load-bearing, so a fix
-    * applied to one copy and not the other would silently diverge the two
-    * ingest paths). First occurrence wins (payloads for one key are
-    * byte-identical — SHA-256 content key); the left-anti drops keys the
-    * store already holds; the final sort is FREE (already hash-partitioned
-    * by chunkKey from the dropDuplicates shuffle) and makes each parquet
-    * row-group cover a narrow key range so point lookups prune via footer
-    * stats. */
+  /** ONE payload exemplar per NEW chunkKey — the dedupe-on-write step of
+    * [[commitChunks]], so of both `ingest` and `writeStream`. First
+    * occurrence wins (payloads for one key are byte-identical — SHA-256
+    * content key); the left-anti drops keys the store already holds; the
+    * final sort is FREE (already hash-partitioned by chunkKey from the
+    * dropDuplicates shuffle) and makes each parquet row-group cover a
+    * narrow key range so point lookups prune via footer stats. */
   private def newPayloadRows(chunkRows: DataFrame): DataFrame =
     chunkRows.select($"chunkKey", $"data")
       .dropDuplicates("chunkKey")
@@ -167,9 +164,9 @@ final class DedupeEngine(
 
   // ---------------------------------------------------------------- ingest
 
-  /** Store one object; rejects a duplicate key like the reference
-    * (DedupeLibrary.cs:203) — through `ingest`'s existing-key check, which
-    * runs before any commit. */
+  /** Store one object through `ingest` — so through [[admit]], which
+    * rejects a duplicate key like the reference (DedupeLibrary.cs:203)
+    * before any commit. */
   def write(key: String, data: Array[Byte]): Unit = {
     require(key != null && key.nonEmpty, "object key required")
     require(data != null && data.nonEmpty, "data required")
@@ -184,13 +181,11 @@ final class DedupeEngine(
 
   /**
    * Bulk distributed ingest — the scale path. Chunks each object inside a
-   * flatMap (pure function, no driver round-trips), then derives all three
-   * tables from the single chunked dataset:
-   *   objmap += every (key, chunkKey, len, pos, addr);
-   *   payloads += one exemplar payload per chunkKey not already stored
-   *               (dedupe-on-write via left-anti against existing keys);
-   *   objects += per-key rollup agg.
-   * One wide transform + one shuffle per derived table; no per-object loop.
+   * flatMap (pure function, no driver round-trips), runs [[admit]] over the
+   * batch's keys (one position-0 chunk row per object), then hands the
+   * single chunked dataset to [[commitChunks]], which derives all three
+   * tables from it. One wide transform + one shuffle per derived table; no
+   * per-object loop.
    */
   def ingest(batch: Seq[(String, Array[Byte])]): Unit =
     ingest(spark.createDataset(batch))
@@ -201,42 +196,11 @@ final class DedupeEngine(
       s.chunkWithData(bytes).map(c => // profile-aware: md5-window or gear
         (key, c.ref.chunkKey, c.ref.length, c.ref.position, c.ref.address, c.data))
     }.toDF("objectKey", "chunkKey", "chunkLength", "chunkPosition", "chunkAddress", "data")
-      .localCheckpoint() // chunk once; three tables derive from this
-
-    // a key duplicated INSIDE the batch would silently interleave two
-    // payloads into one object (the reference rejects duplicate keys on
-    // every write); every object has exactly one position-0 chunk, so >1
-    // such row per key means the batch itself collides
-    val inBatchDup = chunked.filter($"chunkPosition" === 0)
-      .groupBy($"objectKey").count().filter($"count" > 1).limit(1).collect()
-    if (inBatchDup.nonEmpty)
-      throw new IllegalArgumentException(
-        s"duplicate object key within ingest batch: ${inBatchDup.head.getString(0)}")
-
-    val batchKeys = chunked.select($"objectKey").distinct()
-    val dupes = batchKeys.join(objects.select($"objectKey"), Seq("objectKey"), "left_semi")
-      .limit(1).collect()
-    if (dupes.nonEmpty)
-      throw new IllegalArgumentException(s"object key already exists: ${dupes.head.getString(0)}")
-
-    purgeDebris(batchKeys)
-
-    // incremental commits: each table gains ONE new segment holding only the
-    // batch's rows (O(new data) — at scale an ingest never rewrites tables)
-    val newMap = chunked.select($"objectKey", $"chunkKey", $"chunkLength",
-      $"chunkPosition", $"chunkAddress")
-    objmapT.append(newMap)
-
-    store.append(newPayloadRows(chunked))
-
-    val now = new Timestamp(System.currentTimeMillis())
-    val newObjects = chunked.groupBy($"objectKey").agg(
-      sum($"chunkLength").cast(LongType).as("originalLength"),
-      sum($"chunkLength").cast(LongType).as("compressedLength"),
-      count(lit(1)).as("chunkCount"))
-      .withColumn("createdUtc", lit(now))
-      .select($"objectKey", $"originalLength", $"compressedLength", $"chunkCount", $"createdUtc")
-    objectsT.append(newObjects)
+      .localCheckpoint() // chunk once; admission and three tables derive from this
+    // every object has exactly one position-0 chunk, so a key on two such
+    // rows is a key the batch itself repeats
+    admit(chunked.filter($"chunkPosition" === 0))
+    commitChunks(chunked)
   }
 
   /**
@@ -245,27 +209,22 @@ final class DedupeEngine(
    * consumes a Stream, never whole-file bytes: DedupeLibrary.cs:605-717;
    * its CLI pipes stdin, Cli/Program.cs:211-228).
    *
-   * Chunks spool in ~`batchBytes` slabs into a staging parquet directory
-   * under the index (plain files, NOT table commits), then the three tables
-   * commit exactly ONCE each — so a 2 TB object costs 3 commits, not
-   * thousands (per-slab table appends would re-trigger the segment-fold
-   * compaction every 32 slabs: quadratic write amplification). The OBJECTS
-   * row commits LAST, so a crash degrades to unreachable rows at worst
-   * (exists = false, get = None) and usually to nothing but a staging dir
-   * the next [[repairIndex]]-free retry ignores; staging is removed on both
-   * success and failure.
+   * [[admit]] runs first, so a taken key fails before the stream is read.
+   * Chunks then spool in ~`batchBytes` slabs into a staging parquet
+   * directory under the index (plain files, NOT table commits), which
+   * [[commitChunks]] commits exactly ONCE per table — so a 2 TB object
+   * costs 3 commits, not thousands (per-slab table appends would
+   * re-trigger the segment-fold compaction every 32 slabs: quadratic write
+   * amplification). Staging is removed on both success and failure.
    */
   def writeStream(key: String, in: java.io.InputStream,
       batchBytes: Long = 64L << 20): Unit = {
     require(key != null && key.nonEmpty, "object key required")
-    if (exists(key)) throw new IllegalArgumentException(s"object key already exists: $key")
-    purgeDebris(Seq(key).toDF("objectKey"))
+    admit(Seq(key).toDF("objectKey"))
     val stage = s"$basePath/.stage-${java.util.UUID.randomUUID().toString.take(8)}"
     try {
       val it = settings.chunkStream(in)
       require(it.hasNext, "data required")
-      var totalLen = 0L
-      var totalChunks = 0L
       val batch = scala.collection.mutable.ArrayBuffer.empty[graft.core.ChunkWithData]
       var batchSize = 0L
       def flush(): Unit = if (batch.nonEmpty) {
@@ -278,35 +237,67 @@ final class DedupeEngine(
       }
       while (it.hasNext) {
         val c = it.next()
-        totalLen += c.ref.length
-        totalChunks += 1
         batch += c
         batchSize += c.ref.length
         if (batchSize >= batchBytes) flush()
       }
       flush()
-      val staged = spark.read.parquet(stage)
-      objmapT.append(staged.select($"objectKey", $"chunkKey", $"chunkLength",
-        $"chunkPosition", $"chunkAddress"))
-      store.append(newPayloadRows(staged))
-      val now = new Timestamp(System.currentTimeMillis())
-      objectsT.append(spark.createDataset(Seq(
-        ObjectRow(key, totalLen, totalLen, totalChunks, now))).toDF())
+      commitChunks(spark.read.parquet(stage))
     } finally {
       graft.core.FsUtil.deleteRecursively(java.nio.file.Paths.get(stage))
     }
   }
 
-  /** Remove crash-debris map rows for the `keys` (one `objectKey` column)
-    * about to be written: a prior attempt that died between its objmap and
-    * objects commits left rows that would silently interleave with the new
-    * write's map. Cheap when clean — one narrow early-terminating probe of
-    * objmap's key column; the purge runs only in the rare after-a-crash
-    * case. */
-  private def purgeDebris(keys: DataFrame): Unit = {
-    val debris = objmap.select($"objectKey").join(keys, Seq("objectKey"), "left_semi")
-    if (!debris.limit(1).isEmpty)
-      objmapT.deleteKeys("objectKey", debris.distinct().as[String].collect().toSeq)
+  /** The one admission step every writer runs before its first commit:
+    * ONE query over the batch's `keys` (an `objectKey` column, one row per
+    * object) unioned with the objects and objmap key columns semi-joined
+    * to the batch, grouped by key. In this order it rejects a key the
+    * batch repeats (two payloads would silently interleave into one
+    * object), then a key the index already holds (the reference rejects
+    * duplicate keys on every write, DedupeLibrary.cs:203); otherwise it
+    * purges crash debris — map rows of a key found in objmap only, left by
+    * a writer that died between its objmap and objects commits, which
+    * would interleave with the new write's map. The purge runs only in
+    * the rare after-a-crash case. */
+  private def admit(keys: DataFrame): Unit = {
+    val batch = keys.select($"objectKey")
+    def tagged(df: DataFrame, inBatch: Int, inObjects: Int, inMap: Int) =
+      df.select($"objectKey", lit(inBatch).as("inBatch"),
+        lit(inObjects).as("inObjects"), lit(inMap).as("inMap"))
+    def held(t: DataFrame) = t.select($"objectKey").join(batch, Seq("objectKey"), "left_semi")
+    val hits = tagged(batch, 1, 0, 0)
+      .unionByName(tagged(held(objects.toDF()), 0, 1, 0))
+      .unionByName(tagged(held(objmap.toDF()), 0, 0, 1))
+      .groupBy($"objectKey")
+      .agg(sum($"inBatch").as("inBatch"), max($"inObjects").as("inObjects"),
+        max($"inMap").as("inMap"))
+      .filter($"inBatch" > 1 || $"inObjects" > 0 || $"inMap" > 0)
+      .as[(String, Long, Int, Int)].collect()
+    hits.find(_._2 > 1).foreach(h => throw new IllegalArgumentException(
+      s"duplicate object key within ingest batch: ${h._1}"))
+    hits.find(_._3 > 0).foreach(h => throw new IllegalArgumentException(
+      s"object key already exists: ${h._1}"))
+    if (hits.nonEmpty) objmapT.deleteKeys("objectKey", hits.map(_._1).toSeq)
+  }
+
+  /** The one commit sequence behind `ingest` and `writeStream`: each table
+    * gains ONE new segment holding only these chunk rows (O(new data) — an
+    * ingest never rewrites tables). objmap first, then the payloads
+    * [[newPayloadRows]] keeps, then the per-object rollup LAST — so a crash
+    * in between leaves map rows whose objects row never committed: debris
+    * every read path hides (exists = false, get = None) and the next
+    * [[admit]] of the key purges. */
+  private def commitChunks(chunked: DataFrame): Unit = {
+    objmapT.append(chunked.select($"objectKey", $"chunkKey", $"chunkLength",
+      $"chunkPosition", $"chunkAddress"))
+    store.append(newPayloadRows(chunked))
+    val now = new Timestamp(System.currentTimeMillis())
+    objectsT.append(chunked.groupBy($"objectKey").agg(
+      sum($"chunkLength").cast(LongType).as("originalLength"),
+      sum($"chunkLength").cast(LongType).as("compressedLength"),
+      count(lit(1)).as("chunkCount"))
+      .withColumn("createdUtc", lit(now))
+      .select($"objectKey", $"originalLength", $"compressedLength", $"chunkCount", $"createdUtc"))
   }
 
   /** Ingest every file under `path` (recursively) as one object each,
@@ -455,20 +446,20 @@ final class DedupeEngine(
 
   /** Dedupe-aware object clone — copy an object WITHOUT touching a single
     * payload byte: the CAS benefit the reference's content-keyed design
-    * implies but never ships as a verb. The destination gets the source's
-    * map rows re-keyed plus a fresh objects row; every shared chunk's
-    * refcount rises by construction (refcounts are DERIVED from objmap,
-    * so there is no counter to race on). Cost is O(source chunk count)
-    * index appends and ZERO payload I/O — cloning a 1 TB object moves
-    * kilobytes of index. Source and clone then share chunks exactly like
-    * two independently-written identical objects: deleting either leaves
-    * the other fully readable (F1's anti-join GC sees the survivor's
+    * implies but never ships as a verb. After the source check, [[admit]]
+    * vets the destination key; the destination then gets the source's map
+    * rows re-keyed plus a fresh objects row (committed last, as in
+    * [[commitChunks]]). Every shared chunk's refcount rises by construction
+    * (refcounts are DERIVED from objmap, so there is no counter to race
+    * on). Cost is O(source chunk count) index rows and ZERO payload bytes.
+    * Source and clone then share chunks exactly like two
+    * independently-written identical objects: deleting either leaves the
+    * other fully readable (F1's anti-join GC sees the survivor's
     * references). */
   def cloneObject(srcKey: String, dstKey: String): Unit = {
     require(dstKey != null && dstKey.nonEmpty, "object key required")
     if (!exists(srcKey)) throw new NoSuchElementException(s"no such object: $srcKey")
-    if (exists(dstKey)) throw new IllegalArgumentException(s"object key already exists: $dstKey")
-    purgeDebris(Seq(dstKey).toDF("objectKey"))
+    admit(Seq(dstKey).toDF("objectKey"))
     objmapT.append(objmap.filter($"objectKey" === srcKey).toDF()
       .withColumn("objectKey", lit(dstKey))
       .select($"objectKey", $"chunkKey", $"chunkLength", $"chunkPosition", $"chunkAddress"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.CommitConflictException.retryConflicts
 import graft.sources.VersionedTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -254,41 +255,6 @@ object AnnIndexStore {
       } finally pinned.foreach(df =>
         try df.unpersist() catch { case _: Throwable => () })
     }
-
-  /** Retry budget for a CAS round that keeps losing its claim, and the
-    * backoff cap per lost round. 64 attempts with 1,2,4,…,256 ms-capped
-    * exponential backoff gives ≥ 15 s of cumulative yield — far beyond
-    * any commit's critical section here — before surfacing the conflict;
-    * the r15 CasLiveness sweep saw ≤ 140 lost claims across a WHOLE
-    * 8-writer run, so a single round losing 64 straight is a stuck peer
-    * or a livelock, and hiding it behind an unbounded spin (the r15
-    * advisor finding) would burn a core with no progress diagnostics. */
-  private[operators] val MaxCasAttempts = 64
-  private[operators] val MaxBackoffMs = 256L
-
-  /** Run one CAS round (`body` throws [[graft.sources.CommitConflictException]]
-    * on a lost claim) until it lands, with capped exponential backoff
-    * between lost rounds, surfacing the LAST conflict — attempt count in
-    * the message — once [[MaxCasAttempts]] is exhausted. `maxAttempts`
-    * is injectable so the spec proves the give-up path in milliseconds. */
-  private[operators] def retryConflicts[T](op: String,
-      maxAttempts: Int = MaxCasAttempts)(body: => T): T = {
-    var attempt = 0
-    while (true) {
-      try return body
-      catch {
-        case e: graft.sources.CommitConflictException =>
-          attempt += 1
-          if (attempt >= maxAttempts)
-            throw new graft.sources.CommitConflictException(
-              s"$op: lost the CAS claim $attempt consecutive times " +
-                s"(last: ${e.getMessage}) - a peer is stuck or livelocked",
-              e) // chain the last real conflict so its stack trace survives
-          Thread.sleep(math.min(MaxBackoffMs, 1L << math.min(attempt, 8)))
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Segment count of the coded table — the append-cost witness the
     * lifecycle spec asserts (base publish + one O(new) append = 2). */

@@ -14,6 +14,45 @@ import scala.jdk.CollectionConverters._
 final class CommitConflictException(msg: String, cause: Throwable = null)
   extends RuntimeException(msg, cause)
 
+object CommitConflictException {
+
+  /** Retry budget for a CAS round that keeps losing its claim, and the
+    * backoff cap per lost round. 64 attempts with 1,2,4,…,256 ms-capped
+    * exponential backoff gives ≥ 15 s of cumulative yield — far beyond
+    * any commit's critical section here — before surfacing the conflict;
+    * the r15 CasLiveness sweep saw ≤ 140 lost claims across a WHOLE
+    * 8-writer run, so a single round losing 64 straight is a stuck peer,
+    * a livelock or a conflict that never clears (a segment the manifest
+    * still references was deleted), and hiding it behind an unbounded
+    * spin would burn a core with no progress diagnostics. */
+  private[graft] val MaxCasAttempts = 64
+  private[graft] val MaxBackoffMs = 256L
+
+  /** Run one CAS round (`body` throws [[CommitConflictException]] on a
+    * lost claim) until it lands, with capped exponential backoff between
+    * lost rounds, surfacing the LAST conflict — attempt count in the
+    * message — once [[MaxCasAttempts]] is exhausted. `maxAttempts` is
+    * injectable so the spec proves the give-up path in milliseconds. */
+  private[graft] def retryConflicts[T](op: String,
+      maxAttempts: Int = MaxCasAttempts)(body: => T): T = {
+    var attempt = 0
+    while (true) {
+      try return body
+      catch {
+        case e: CommitConflictException =>
+          attempt += 1
+          if (attempt >= maxAttempts)
+            throw new CommitConflictException(
+              s"$op: lost the CAS claim $attempt consecutive times " +
+                s"(last: ${e.getMessage}) - a peer is stuck or livelocked",
+              e) // chain the last real conflict so its stack trace survives
+          Thread.sleep(math.min(MaxBackoffMs, 1L << math.min(attempt, 8)))
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+}
+
 /** Advisory CAS-contention counters (r15): session-global, monotonic,
   * consumed by tools/CasLiveness to PRICE multi-writer goodput — never
   * by any engine decision (the safety story is the CAS itself; these
@@ -303,10 +342,12 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
     * the read and the writeback — instead each attempt pins (version,
     * rows) and claims version+1, re-reading on conflict. Answer-neutral
     * by construction either way; the retry makes it LOSSLESS under
-    * concurrent writers too. */
-  def compact(): Unit = {
-    var done = false
-    while (!done) {
+    * concurrent writers too. The retry is bounded with backoff
+    * ([[CommitConflictException.retryConflicts]]): a conflict that never
+    * clears — a referenced segment deleted out from under the manifest —
+    * surfaces as a [[CommitConflictException]] instead of a hot spin. */
+  def compact(): Unit =
+    CommitConflictException.retryConflicts(s"compaction of $path") {
       var pinned: Option[DataFrame] = None
       try {
         // the read + eager checkpoint can itself race a faster writer's
@@ -318,15 +359,13 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
         }
         pinned = Some(df)
         publishIfVersion(df, v)
-        done = true
-      } catch { case _: CommitConflictException => () }
+      }
       // release the attempt's pinned RDD blocks win or lose (a winner's
       // rows are on disk in the new segment; a loser's would otherwise
       // accumulate in executor storage across conflict retries)
       finally pinned.foreach(df =>
         try df.unpersist() catch { case _: Throwable => () })
     }
-  }
 
   /** Remove rows whose `keyCol` is in `keys`, rewriting ONLY segments whose
     * key-range stats can contain a victim — O(touched segments), not

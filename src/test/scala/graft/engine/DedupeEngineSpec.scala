@@ -424,17 +424,31 @@ class DedupeEngineSpec extends SparkSpec {
     assert(e.reconstructAll().filter(_._1 == "doomed").isEmpty,
       "bulk reconstruction must not emit a phantom object")
     assert(e.reconstructAll().count() == 1L, "the survivor still exports")
-    // path 1: a plain retry purges the debris itself and round-trips
+    def assertClean(expected: Array[Byte], via: String): Unit = {
+      assert(java.util.Arrays.equals(e.get("doomed").get, expected), s"$via: bytes")
+      val md = e.getMetadata("doomed").get
+      assert(md.map.map(_.chunkLength.toLong).sum === expected.length.toLong,
+        s"$via: a write after a crash must not interleave debris map rows")
+    }
+    def recreateDebris(): Unit = {
+      e.delete("doomed")
+      objectsTable.armed = true
+      intercept[RuntimeException](
+        e.writeStream("doomed", new java.io.ByteArrayInputStream(data), batchBytes = 4096L))
+      assert(!e.exists("doomed") && e.objmap.filter(_.objectKey == "doomed").count() > 0)
+    }
+    // path 1: a plain retry purges the debris itself and round-trips — through
+    // writeStream, write and cloneObject alike (one shared admission step)
     e.writeStream("doomed", new java.io.ByteArrayInputStream(data), batchBytes = 4096L)
-    assert(java.util.Arrays.equals(e.get("doomed").get, data))
-    val md = e.getMetadata("doomed").get
-    assert(md.map.map(_.chunkLength.toLong).sum === data.length.toLong,
-      "retry after crash must not interleave debris map rows")
-    // path 2: delete it, re-create debris, and let repairIndex reclaim
-    e.delete("doomed")
-    objectsTable.armed = true
-    intercept[RuntimeException](
-      e.writeStream("doomed", new java.io.ByteArrayInputStream(data), batchBytes = 4096L))
+    assertClean(data, "writeStream")
+    recreateDebris()
+    e.write("doomed", data)
+    assertClean(data, "write")
+    recreateDebris()
+    e.cloneObject("survivor", "doomed")
+    assertClean(survivor, "cloneObject")
+    // path 2: re-create the debris and let repairIndex reclaim
+    recreateDebris()
     val r = e.repairIndex()
     assert(r.orphanObjects == Seq("doomed"))
     assert(r.orphanChunks.nonEmpty, "the doomed object's unshared chunks must be reclaimed")

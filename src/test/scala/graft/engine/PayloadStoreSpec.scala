@@ -58,6 +58,12 @@ class PayloadStoreSpec extends SparkSpec {
       // streams work over both stores
       val rebuilt = e.getStream("c").get.reduce(_ ++ _)
       assert(java.util.Arrays.equals(rebuilt, unique), s"[$label] stream c")
+      // the existing-key rejection reads both index tables through this
+      // backend, and must fire before any commit
+      val before = e.indexStats()
+      val ex = intercept[IllegalArgumentException](e.write("c", randomBytes(700, 25)))
+      assert(ex.getMessage == "object key already exists: c", s"[$label] ${ex.getMessage}")
+      assert(e.indexStats() === before, s"[$label] a rejected write commits nothing")
     }
   }
 
@@ -101,6 +107,16 @@ class PayloadStoreSpec extends SparkSpec {
           s"[$label] $op ran $count Spark jobs — the payload prefetch must be ONE batched job, not one per chunk")
       }
     }
+  }
+
+  test("write of a fresh key stays within its Spark job budget") {
+    // chunk checkpoint, ONE admission query (in-batch duplicate, existing
+    // key and crash-debris checks together), then the three commits
+    val e = engines().head._2
+    e.write("seed", randomBytes(20000, 34))
+    val count = jobsDuring(e.write("fresh", randomBytes(30000, 35)))
+    assert(count >= 1, "listener must have observed the write")
+    assert(count <= 17, s"write ran $count Spark jobs (budget 17)")
   }
 
   test("getMetadata executes at most 2 Spark jobs") {

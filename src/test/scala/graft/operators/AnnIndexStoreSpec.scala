@@ -315,7 +315,7 @@ class AnnIndexStoreSpec extends SparkSpec {
     var calls = 0
     val t0 = System.nanoTime()
     val e = intercept[graft.sources.CommitConflictException] {
-      AnnIndexStore.retryConflicts("spec permanent-conflict", maxAttempts = 5) {
+      graft.sources.CommitConflictException.retryConflicts("spec permanent-conflict", maxAttempts = 5) {
         calls += 1
         throw new graft.sources.CommitConflictException("spec: claim lost")
       }
@@ -334,7 +334,7 @@ class AnnIndexStoreSpec extends SparkSpec {
     assert((System.nanoTime() - t0) / 1e6 >= 25.0, "no backoff between lost rounds")
     // a transient conflict still lands and returns the body's value
     var n = 0
-    val out = AnnIndexStore.retryConflicts("spec transient", maxAttempts = 5) {
+    val out = graft.sources.CommitConflictException.retryConflicts("spec transient", maxAttempts = 5) {
       n += 1
       if (n < 3) throw new graft.sources.CommitConflictException("spec: lost")
       "landed"
@@ -342,7 +342,7 @@ class AnnIndexStoreSpec extends SparkSpec {
     assert(out === "landed" && n === 3)
     // non-conflict exceptions pass straight through (never swallowed)
     intercept[IllegalArgumentException] {
-      AnnIndexStore.retryConflicts("spec other")(throw new IllegalArgumentException("x"))
+      graft.sources.CommitConflictException.retryConflicts("spec other")(throw new IllegalArgumentException("x"))
     }
   }
 }

@@ -415,4 +415,23 @@ class VersionedTableSpec extends SparkSpec {
     assert(t.read().count() === 2 && t.segmentCount === 1,
       "the missing-file race must convert to a clean retry, not a crash")
   }
+
+  test("compact surfaces a conflict that never clears instead of spinning") {
+    // a segment the manifest still references is deleted: every re-read
+    // folds the missing path into a CommitConflictException, so an
+    // unbounded retry loop would never return — the time limit turns
+    // such a hang into a failure (the thread signaler interrupts it)
+    val (dir, t) = fresh()
+    t.append(df("a" -> 1L))
+    t.append(df("b" -> 2L))
+    graft.core.FsUtil.deleteRecursively(java.nio.file.Paths.get(dir, segDirs(dir).head))
+    implicit val signaler: org.scalatest.concurrent.Signaler =
+      org.scalatest.concurrent.ThreadSignaler
+    val e = org.scalatest.concurrent.TimeLimits.failAfter(
+      org.scalatest.time.Span(120, org.scalatest.time.Seconds)) {
+      intercept[CommitConflictException](t.compact())
+    }
+    assert(e.getMessage.contains(
+      s"${CommitConflictException.MaxCasAttempts} consecutive times"), e.getMessage)
+  }
 }
