@@ -5,6 +5,8 @@ import graft.sources.VersionedTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /**
  * Train-once / serve-many persistence for the ANN + dedupe indexes — the
@@ -83,12 +85,7 @@ object AnnIndexStore {
     // serialization keeps one build per memo; `coded` is sequenced after
     // both quantizer futures, so it reads settled memo entries only.
     // AnnIndexStoreSpec pins read-after-persist equivalence.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    try {
+    runChains(3) { implicit ec =>
       val fCoarse = Future {
         val coarse = SimilarityQueries.trainedCentroids(spark, dir, "full", 10, 3)
           .toDF("cell", "centroid")
@@ -113,7 +110,24 @@ object AnnIndexStore {
             .publish(SimilarityQueries.codedVectors(spark, dir))
         }
       } yield ()
-      Await.result(Future.sequence(Seq(fCoded, fBands)), Duration.Inf)
+      Seq(fCoarse, fBooks, fBands, fCoded)
+    }
+  }
+
+  /** Run publish chains on a `threads`-wide pool and return once EVERY
+    * chain has settled; the first failure (in `chains`' order) is rethrown
+    * only then, so no chain publishes after the caller has seen the error.
+    * `chains` returns every future it started — the intermediate ones too,
+    * since a dependent future fails as soon as one input does while that
+    * input's siblings run on. */
+  private def runChains(threads: Int)(
+      chains: ExecutionContext => Seq[Future[Any]]): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val fs = chains(ExecutionContext.fromExecutorService(pool))
+      fs.foreach(Await.ready(_, Duration.Inf))
+      fs.flatMap(_.value).collectFirst { case scala.util.Failure(e) => e }
+        .foreach(throw _)
     } finally pool.shutdown()
   }
 
@@ -390,12 +404,7 @@ object AnnIndexStore {
     // r18: same guide §2.6 overlap as [[persist]] — the old-slice Lloyd
     // and PQ chains are independent job chains; the coded encode needs
     // both. Distinct table dirs, memo-serialized builds (see persist).
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    try {
+    runChains(2) { implicit ec =>
       val fCoarse = Future {
         val coarse = SimilarityQueries.trainedCentroids(spark, dir, "old", 10, 3)
         table(spark, root, "coarse", coarseSchema)
@@ -415,8 +424,8 @@ object AnnIndexStore {
         table(spark, root, "coded", codedSchema)
           .publish(SimilarityQueries.encodeWith(old, coarse, cents))
       }
-      Await.result(fCoded, Duration.Inf)
-    } finally pool.shutdown()
+      Seq(fCoarse, fBooks, fCoded)
+    }
   }
 
   /** The index-maintenance ARRIVAL path: encode `pred`'s vectors with the

@@ -163,6 +163,39 @@ class DedupeCliSpec extends SparkSpec {
     assert(taken.code == 5)
   }
 
+  test("compact and vacuum keep every object byte-identical through a reopen") {
+    val dir = newIndex()
+    val e = DedupeEngine.open(spark, dir)
+    val extra = new Array[Byte](7000)
+    new scala.util.Random(19).nextBytes(extra)
+    e.write("late", extra) // a second segment per table for compaction to fold
+    e.delete("k002")
+    val data = e.get("k001").get
+    val stats = e.indexStats()
+    def assertIntact(step: String): Unit = {
+      val r = DedupeEngine.open(spark, dir)
+      assert(r.indexStats() === stats, s"stats after $step")
+      for (i <- 1 to 25 if i != 2)
+        assert(java.util.Arrays.equals(r.get(f"k$i%03d").get, data), s"k$i%03d after $step")
+      assert(java.util.Arrays.equals(r.get("late").get, extra), s"late after $step")
+      assert(r.get("k002").isEmpty, s"deleted key stays deleted after $step")
+    }
+    assert(captureOut(DedupeCli.run(spark, dir, "compact", Array()))
+      .exists(_.contains("compacted index")))
+    assertIntact("compact")
+    assert(new graft.sources.VersionedTable(spark, s"$dir/objects",
+      org.apache.spark.sql.Encoders.product[graft.engine.ObjectRow].schema).segmentCount == 1,
+      "compaction folds the objects table into one segment")
+    // an unclaimed segment directory is what a crashed writer leaves behind
+    val debris = java.nio.file.Paths.get(dir, "objmap", "seg-999-deadbeef")
+    Files.createDirectories(debris)
+    Files.write(debris.resolve("part-0.parquet"), Array[Byte](1, 2, 3))
+    assert(captureOut(DedupeCli.run(spark, dir, "vacuum", Array()))
+      .exists(_.contains("vacuumed index")))
+    assert(!Files.exists(debris), "vacuum sweeps the unclaimed segment")
+    assertIntact("vacuum")
+  }
+
   test("unknown command exits 2") {
     val dir = newIndex()
     val e = intercept[DedupeCli.CliExit](

@@ -42,7 +42,10 @@ class DedupeEngineSpec extends SparkSpec {
   test("N identical objects dedupe to ~1 physical copy (test.bat golden)") {
     val e = newEngine()
     val data = randomBytes(50000, 4)
-    e.ingest((1 to 10).map(i => f"obj$i%03d" -> data))
+    val keys = (1 to 10).map(i => f"obj$i%03d")
+    // one commit per object: the references to each chunk span ten objmap
+    // segments, so the refcount scan merges per-partition counts
+    keys.foreach(e.write(_, data))
     val st = e.indexStats()
     assert(st.objectCount == 10)
     assert(st.logicalBytes == 500000L)
@@ -51,6 +54,30 @@ class DedupeEngineSpec extends SparkSpec {
     assert(st.ratioPercent > 89)
     // refcounts: every chunk referenced 10 times
     assert(e.chunks.collect().forall(_.refCount == 10))
+    val md = e.getMetadata(keys.head).get
+    val chunkKeys = md.map.map(_.chunkKey).toSet
+    assert(md.chunks.map(_.chunkKey).toSet == chunkKeys)
+    assert(md.chunks.forall(_.refCount == 10), s"refcounts ${md.chunks.map(_.refCount)}")
+    // every delete but the last leaves a sharer behind; the last GCs it all
+    keys.init.foreach(k => assert(e.delete(k).isEmpty, s"deleting $k must GC nothing"))
+    assert(e.delete(keys.last).toSet == chunkKeys, "the last sharer's delete GCs every chunk")
+    assert(e.payloads.count() == 0)
+  }
+
+  test("getChunkMetadata: refcount of a shared chunk, None for an unknown key") {
+    val e = newEngine()
+    val shared = randomBytes(20000, 41)
+    e.write("x", shared)
+    e.write("y", shared ++ randomBytes(5000, 42))
+    e.write("z", randomBytes(8000, 43))
+    // the shared prefix chunks identically in x and y
+    val first = e.getMetadata("x").get.map.head
+    assert(e.getChunkMetadata(first.chunkKey) ==
+      Some(ChunkInfo(first.chunkKey, first.chunkLength, 2L)))
+    val own = e.getMetadata("z").get.map.head
+    assert(e.getChunkMetadata(own.chunkKey) ==
+      Some(ChunkInfo(own.chunkKey, own.chunkLength, 1L)))
+    assert(e.getChunkMetadata("0" * 64).isEmpty)
   }
 
   test("cloneObject copies via the index only: zero payload writes, GC-safe") {

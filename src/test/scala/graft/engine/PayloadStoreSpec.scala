@@ -119,6 +119,18 @@ class PayloadStoreSpec extends SparkSpec {
     assert(count <= 17, s"write ran $count Spark jobs (budget 17)")
   }
 
+  test("delete of an object with one sharer stays within its Spark job budget") {
+    // getMetadata's two query executions carry the GC decision, then the
+    // objects and objmap deletes and the payload GC
+    val e = engines().head._2
+    val shared = randomBytes(20000, 36)
+    e.ingest(Seq("victim" -> (shared ++ randomBytes(6000, 37)), "sharer" -> shared))
+    val count = jobsDuring(assert(e.delete("victim").nonEmpty, "the victim's own chunks are GC'd"))
+    assert(java.util.Arrays.equals(e.get("sharer").get, shared), "the sharer reads back intact")
+    assert(count >= 1, "listener must have observed the delete")
+    assert(count <= 12, s"delete ran $count Spark jobs (budget 12)")
+  }
+
   test("getMetadata executes at most 2 Spark jobs") {
     val e = engines().head._2
     e.write("meta", randomBytes(20000, 29)) // several chunks, some shared refs

@@ -345,4 +345,29 @@ class AnnIndexStoreSpec extends SparkSpec {
       graft.sources.CommitConflictException.retryConflicts("spec other")(throw new IllegalArgumentException("x"))
     }
   }
+
+  test("a chain whose publish fails leaves no table publishing after persist returns") {
+    // a plain file where one table's directory goes fails that chain's
+    // publish; every other chain must settle before the failure surfaces
+    val schemas = Seq("coarse" -> AnnIndexStore.coarseSchema,
+      "codebooks" -> AnnIndexStore.codebookSchema,
+      "coded" -> AnnIndexStore.codedSchema, "bands" -> AnnIndexStore.bandSchema)
+    def versions(root: String): Map[String, Seq[Long]] = schemas.map { case (n, sc) =>
+      n -> new graft.sources.VersionedTable(spark, s"$root/$n", sc).retainedVersions
+    }.toMap
+    val cases = Seq[(String, (String, String) => Unit, String, Seq[String])](
+      ("persist", AnnIndexStore.persist(spark, _, _), "coarse", Seq("codebooks", "bands")),
+      ("persistOldTrained", AnnIndexStore.persistOldTrained(spark, _, _), "codebooks",
+        Seq("coarse")))
+    for ((label, run, blocked, siblings) <- cases) {
+      val root = java.nio.file.Files.createTempDirectory("annidx-fail").toString
+      java.nio.file.Files.write(java.nio.file.Paths.get(root, blocked), Array[Byte](1))
+      intercept[Exception](run(sfDir, root))
+      val atReturn = versions(root)
+      siblings.foreach(n => assert(atReturn(n).nonEmpty, s"[$label] $n settled before the rethrow"))
+      assert(atReturn("coded").isEmpty, s"[$label] coded needs the failed chain's output")
+      Thread.sleep(5000)
+      assert(versions(root) == atReturn, s"[$label] a table published after $label returned")
+    }
+  }
 }
