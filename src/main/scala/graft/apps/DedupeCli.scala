@@ -83,7 +83,7 @@ object DedupeCli {
       case "create" =>
         // --bucketed: persist the hash-key index layout (buckets by leading
         // key char) so deletes on content-hash object keys stay O(touched
-        // buckets). --jdbc: keep the index tables in an embedded relational
+        // buckets). --jdbc: keep the index table in an embedded relational
         // DB (the reference's external-DbProvider swap). Both are recorded
         // in config, so later opens wire the same backend/layout.
         val (pos, flags) = parseArgs(rest)
@@ -222,8 +222,7 @@ object DedupeCli {
         println(s"exported $n objects -> ${rest(0)}")
       case "repair" =>
         val r = engine().repairIndex()
-        println(s"repaired: ${r.orphanObjects.size} orphaned object keys, " +
-          s"${r.orphanChunks.size} orphaned chunks, " +
+        println(s"repaired: ${r.orphanChunks.size} orphaned chunks, " +
           s"${r.healedDuplicates.size} duplicated payloads healed")
       case "compact" =>
         engine().compactIndex()

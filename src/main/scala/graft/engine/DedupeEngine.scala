@@ -75,13 +75,20 @@ final case class IndexStats(
  * Spark-native deduplicating object store: the reference's whole API surface
  * (write / writeOrReplace / get / exists / list / stats / delete / position
  * lookup — reference: src/DedupeLibrary/DedupeLibrary.cs) re-expressed as
- * DataFrame algebra over three snapshot tables:
+ * DataFrame algebra over two snapshot tables:
  *
- *   objects  (objectKey, originalLength, compressedLength, chunkCount, createdUtc)
- *   objmap   (objectKey, chunkKey, chunkLength, chunkPosition, chunkAddress)
+ *   index    (kind, objectKey, originalLength, compressedLength, chunkCount,
+ *             createdUtc, chunkKey, chunkLength, chunkPosition, chunkAddress)
  *   payloads (chunkKey, data BINARY)
  *
- * refCount is never stored: it is the number of objmap rows per chunkKey,
+ * The index holds one `kind = "o"` row per object and one `kind = "m"` row
+ * per object↔chunk edge; the `objects` and `objmap` views read one kind
+ * each. Every write, clone or delete is ONE index commit, like the
+ * reference's one SQLite transaction (SqliteProvider.cs:495). Payloads land
+ * before it and are garbage-collected after it, so a writer that dies in
+ * between leaves only unreferenced payloads, reclaimed by [[repairIndex]].
+ *
+ * refCount is never stored: it is the number of map rows per chunkKey,
  * counted by one shared scan ([[refCounts]]), so garbage collection compares
  * that count with the victim's own references instead of a locked counter.
  *
@@ -92,7 +99,7 @@ final case class IndexStats(
  * (SqliteProvider.cs:29-30). On a conflict, retry the whole ingest/delete:
  * its dedupe decisions (payload left-anti, duplicate-key checks) were
  * derived from a snapshot another writer has since advanced. Concurrent
- * ingests of DIFFERENT keys never conflict on the index tables (pure
+ * ingests of DIFFERENT keys never conflict on the index table (pure
  * appends), and the one anomaly they can produce — the same chunkKey
  * appended to payloads by both, each having passed its left-anti against
  * the same stale snapshot — is contained: every read path resolves map
@@ -111,36 +118,34 @@ final class DedupeEngine(
 
   import spark.implicits._
 
-  /** Index tables behind the [[graft.sources.TableStore]] seam (the
+  /** The index table behind the [[graft.sources.TableStore]] seam (the
     * reference's DbProvider swap point, DbProvider.cs:10-155); parquet
-    * VersionedTable by default, any backend by injection.
+    * VersionedTable by default, any backend by injection. The parquet
+    * table's objectKey stats make deletes O(intersecting segments), and it
+    * files each kind apart, so a read of one kind opens only its files.
     *
-    * `bucketedIndex = true` partitions each index commit by the leading
-    * character of the object key — the right call when USER keys are
-    * content hashes (a common pattern: callers of the reference often key
-    * objects by their own digest). Hash keys span the keyspace, so flat
+    * `bucketedIndex = true` also partitions each index commit by the
+    * leading character of the object key — the right call when USER keys
+    * are content hashes (a common pattern: callers of the reference often
+    * key objects by their own digest). Hash keys span the keyspace, so flat
     * per-commit min/max stats never let a delete skip a segment; bucketing
     * restores O(touched buckets) deletes, exactly as the payload table
     * already does for chunkKey. Leave it false for name/time-ordered keys,
     * where whole-commit stats are already narrow. */
-  private val newTable: (String, org.apache.spark.sql.types.StructType) => TableStore =
-    indexBackend.getOrElse((p, s) => new VersionedTable(spark, p, s,
-      // leading key column feeds per-segment min/max stats, making deletes
-      // O(intersecting segments) (objects/objmap key on objectKey)
-      statsCol = s.fieldNames.headOption.filter(Set("objectKey", "chunkKey")),
-      bucketed = bucketedIndex))
-  private val objectsT = newTable(s"$basePath/objects",
-    implicitly[org.apache.spark.sql.Encoder[ObjectRow]].schema)
-  private val objmapT = newTable(s"$basePath/objmap",
-    implicitly[org.apache.spark.sql.Encoder[MapRow]].schema)
+  private val index: TableStore =
+    indexBackend.getOrElse((p: String, s: StructType) => new VersionedTable(spark, p, s,
+      statsCol = Some("objectKey"), bucketed = bucketedIndex, splitCol = Some("kind"))
+    )(s"$basePath/index", DedupeEngine.IndexSchema)
   /** Payload bytes behind the storage-strategy seam (reference keeps them
     * behind user callbacks, DedupeCallbacks.cs:15-58); parquet snapshot
     * table by default, any [[PayloadStore]] by injection. */
   private val store: PayloadStore =
     payloadStore.getOrElse(new ParquetPayloadStore(spark, s"$basePath/payloads"))
 
-  def objects: Dataset[ObjectRow] = objectsT.read().as[ObjectRow]
-  def objmap: Dataset[MapRow] = objmapT.read().as[MapRow]
+  def objects: Dataset[ObjectRow] = index.readWhere("kind", "o")
+    .select(DedupeEngine.ObjectSchema.fieldNames.map(col).toIndexedSeq: _*).as[ObjectRow]
+  def objmap: Dataset[MapRow] = index.readWhere("kind", "m")
+    .select(DedupeEngine.MapSchema.fieldNames.map(col).toIndexedSeq: _*).as[MapRow]
   def payloads: Dataset[PayloadRow] = store.read().as[PayloadRow]
 
   /** ONE payload exemplar per NEW chunkKey — the dedupe-on-write step of
@@ -184,9 +189,8 @@ final class DedupeEngine(
    * Bulk distributed ingest — the scale path. Chunks each object inside a
    * flatMap (pure function, no driver round-trips), runs [[admit]] over the
    * batch's keys (one position-0 chunk row per object), then hands the
-   * single chunked dataset to [[commitChunks]], which derives all three
-   * tables from it. One wide transform + one shuffle per derived table; no
-   * per-object loop.
+   * single chunked dataset to [[commitChunks]], which derives the payload
+   * and index commits from it. No per-object loop.
    */
   def ingest(batch: Seq[(String, Array[Byte])]): Unit =
     ingest(spark.createDataset(batch))
@@ -197,7 +201,7 @@ final class DedupeEngine(
       s.chunkWithData(bytes).map(c => // profile-aware: md5-window or gear
         (key, c.ref.chunkKey, c.ref.length, c.ref.position, c.ref.address, c.data))
     }.toDF("objectKey", "chunkKey", "chunkLength", "chunkPosition", "chunkAddress", "data")
-      .localCheckpoint() // chunk once; admission and three tables derive from this
+      .localCheckpoint() // chunk once; admission and both commits derive from this
     // every object has exactly one position-0 chunk, so a key on two such
     // rows is a key the batch itself repeats
     admit(chunked.filter($"chunkPosition" === 0))
@@ -214,7 +218,7 @@ final class DedupeEngine(
    * Chunks then spool in ~`batchBytes` slabs into a staging parquet
    * directory under the index (plain files, NOT table commits), which
    * [[commitChunks]] commits exactly ONCE per table — so a 2 TB object
-   * costs 3 commits, not thousands (per-slab table appends would
+   * costs 2 commits, not thousands (per-slab table appends would
    * re-trigger the segment-fold compaction every 32 slabs: quadratic write
    * amplification). Staging is removed on both success and failure.
    */
@@ -251,54 +255,52 @@ final class DedupeEngine(
 
   /** The one admission step every writer runs before its first commit:
     * ONE query over the batch's `keys` (an `objectKey` column, one row per
-    * object) unioned with the objects and objmap key columns semi-joined
-    * to the batch, grouped by key. In this order it rejects a key the
-    * batch repeats (two payloads would silently interleave into one
-    * object), then a key the index already holds (the reference rejects
-    * duplicate keys on every write, DedupeLibrary.cs:203); otherwise it
-    * purges crash debris — map rows of a key found in objmap only, left by
-    * a writer that died between its objmap and objects commits, which
-    * would interleave with the new write's map. The purge runs only in
-    * the rare after-a-crash case. */
+    * object) unioned with the index's object keys semi-joined to the batch,
+    * grouped by key. In this order it rejects a key the batch repeats (two
+    * payloads would silently interleave into one object), then a key the
+    * index already holds (the reference rejects duplicate keys on every
+    * write, DedupeLibrary.cs:203). Map rows never outlive or precede their
+    * object row, so the object keys are the whole answer. */
   private def admit(keys: DataFrame): Unit = {
     val batch = keys.select($"objectKey")
-    def tagged(df: DataFrame, inBatch: Int, inObjects: Int, inMap: Int) =
-      df.select($"objectKey", lit(inBatch).as("inBatch"),
-        lit(inObjects).as("inObjects"), lit(inMap).as("inMap"))
-    def held(t: DataFrame) = t.select($"objectKey").join(batch, Seq("objectKey"), "left_semi")
-    val hits = tagged(batch, 1, 0, 0)
-      .unionByName(tagged(held(objects.toDF()), 0, 1, 0))
-      .unionByName(tagged(held(objmap.toDF()), 0, 0, 1))
+    val hits = batch.select($"objectKey", lit(1).as("inBatch"))
+      .unionByName(objects.select($"objectKey").join(batch, Seq("objectKey"), "left_semi")
+        .select($"objectKey", lit(0).as("inBatch")))
       .groupBy($"objectKey")
-      .agg(sum($"inBatch").as("inBatch"), max($"inObjects").as("inObjects"),
-        max($"inMap").as("inMap"))
-      .filter($"inBatch" > 1 || $"inObjects" > 0 || $"inMap" > 0)
-      .as[(String, Long, Int, Int)].collect()
+      .agg(sum($"inBatch").as("inBatch"), count(lit(1)).as("rows"))
+      .filter($"rows" > 1)
+      .as[(String, Long, Long)].collect()
     hits.find(_._2 > 1).foreach(h => throw new IllegalArgumentException(
       s"duplicate object key within ingest batch: ${h._1}"))
-    hits.find(_._3 > 0).foreach(h => throw new IllegalArgumentException(
+    hits.headOption.foreach(h => throw new IllegalArgumentException(
       s"object key already exists: ${h._1}"))
-    if (hits.nonEmpty) objmapT.deleteKeys("objectKey", hits.map(_._1).toSeq)
   }
 
-  /** The one commit sequence behind `ingest` and `writeStream`: each table
-    * gains ONE new segment holding only these chunk rows (O(new data) — an
-    * ingest never rewrites tables). objmap first, then the payloads
-    * [[newPayloadRows]] keeps, then the per-object rollup LAST — so a crash
-    * in between leaves map rows whose objects row never committed: debris
-    * every read path hides (exists = false, get = None) and the next
-    * [[admit]] of the key purges. */
+  /** `df`'s rows as index rows of `kind`: its own index columns, typed
+    * nulls for the other kind's. */
+  private def indexRows(kind: String, df: DataFrame): DataFrame =
+    df.select(DedupeEngine.IndexSchema.fields.toIndexedSeq.map {
+      case f if f.name == "kind" => lit(kind).as("kind")
+      case f if df.columns.contains(f.name) => col(f.name).cast(f.dataType).as(f.name)
+      case f => lit(null).cast(f.dataType).as(f.name)
+    }: _*)
+
+  /** The one commit sequence behind `ingest` and `writeStream`: the payloads
+    * [[newPayloadRows]] keeps land first, then ONE index commit carries the
+    * map rows and the per-object rollups together. Each table gains one
+    * new segment holding only these rows (O(new data) — an ingest never
+    * rewrites tables). A crash before the index commit leaves only
+    * unreferenced payloads, which no read can reach and [[repairIndex]]
+    * reclaims. */
   private def commitChunks(chunked: DataFrame): Unit = {
-    objmapT.append(chunked.select($"objectKey", $"chunkKey", $"chunkLength",
-      $"chunkPosition", $"chunkAddress"))
     store.append(newPayloadRows(chunked))
     val now = new Timestamp(System.currentTimeMillis())
-    objectsT.append(chunked.groupBy($"objectKey").agg(
-      sum($"chunkLength").cast(LongType).as("originalLength"),
-      sum($"chunkLength").cast(LongType).as("compressedLength"),
-      count(lit(1)).as("chunkCount"))
-      .withColumn("createdUtc", lit(now))
-      .select($"objectKey", $"originalLength", $"compressedLength", $"chunkCount", $"createdUtc"))
+    index.append(indexRows("m", chunked).unionByName(indexRows("o", chunked
+      .groupBy($"objectKey").agg(
+        sum($"chunkLength").cast(LongType).as("originalLength"),
+        sum($"chunkLength").cast(LongType).as("compressedLength"),
+        count(lit(1)).as("chunkCount"))
+      .withColumn("createdUtc", lit(now)))))
   }
 
   /** Ingest every file under `path` (recursively) as one object each,
@@ -371,29 +373,11 @@ final class DedupeEngine(
   def exists(key: String): Boolean =
     !objects.filter($"objectKey" === key).limit(1).isEmpty
 
-  /** The object row and its address-ordered map rows IFF the objects row
-    * committed — the one point lookup every point read goes through: ONE
-    * union scan of objects and objmap, never a job per table. This is the
-    * crash-debris guard the contract doc promises: a writer that died
-    * between its objmap and objects commits leaves map rows that must be
-    * invisible to EVERY read path (exists = false, so get/getStream/
-    * openStream/getMetadata = None). */
+  /** The object row and its address-ordered map rows — the one point
+    * lookup every point read goes through: ONE scan of the index for the
+    * key, both kinds at once, never a job per kind. */
   private def lookup(key: String): Option[(ObjectRow, Seq[MapRow])] = {
-    val o = objects.filter($"objectKey" === key)
-      .select(lit("o").as("kind"), $"objectKey", $"originalLength",
-        $"compressedLength", $"chunkCount", $"createdUtc",
-        lit(null).cast(StringType).as("chunkKey"),
-        lit(null).cast(IntegerType).as("chunkLength"),
-        lit(null).cast(IntegerType).as("chunkPosition"),
-        lit(null).cast(LongType).as("chunkAddress"))
-    val m = objmap.filter($"objectKey" === key)
-      .select(lit("m").as("kind"), $"objectKey",
-        lit(null).cast(LongType).as("originalLength"),
-        lit(null).cast(LongType).as("compressedLength"),
-        lit(null).cast(LongType).as("chunkCount"),
-        lit(null).cast(TimestampType).as("createdUtc"),
-        $"chunkKey", $"chunkLength", $"chunkPosition", $"chunkAddress")
-    val rows = o.unionByName(m).collect()
+    val rows = index.read().filter($"objectKey" === key).collect()
     rows.find(_.getString(0) == "o").map { r =>
       val obj = ObjectRow(
         r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getTimestamp(5))
@@ -461,27 +445,25 @@ final class DedupeEngine(
 
   /** Dedupe-aware object clone — copy an object WITHOUT touching a single
     * payload byte: the CAS benefit the reference's content-keyed design
-    * implies but never ships as a verb. After the source check, [[admit]]
-    * vets the destination key; the destination then gets the source's map
-    * rows re-keyed plus a fresh objects row (committed last, as in
-    * [[commitChunks]]). Every shared chunk's refcount rises by construction
-    * (refcounts are DERIVED from objmap, so there is no counter to race
-    * on). Cost is O(source chunk count) index rows and ZERO payload bytes.
+    * implies but never ships as a verb. The source's [[lookup]] supplies
+    * its object and map rows, [[admit]] vets the destination key, and ONE
+    * index commit adds the rows re-keyed to the destination with a fresh
+    * createdUtc. Every shared chunk's refcount rises by construction
+    * (refcounts are DERIVED from the map rows, so there is no counter to
+    * race on). Cost is O(source chunk count) index rows — the map passes
+    * through the driver, as in [[delete]] — and ZERO payload bytes.
     * Source and clone then share chunks exactly like two
     * independently-written identical objects: deleting either leaves the
     * other fully readable ([[delete]]'s refcount GC counts the survivor's
     * references). */
   def cloneObject(srcKey: String, dstKey: String): Unit = {
     require(dstKey != null && dstKey.nonEmpty, "object key required")
-    if (!exists(srcKey)) throw new NoSuchElementException(s"no such object: $srcKey")
+    val (obj, m) = lookup(srcKey).getOrElse(
+      throw new NoSuchElementException(s"no such object: $srcKey"))
     admit(Seq(dstKey).toDF("objectKey"))
-    objmapT.append(objmap.filter($"objectKey" === srcKey).toDF()
-      .withColumn("objectKey", lit(dstKey))
-      .select($"objectKey", $"chunkKey", $"chunkLength", $"chunkPosition", $"chunkAddress"))
-    objectsT.append(objects.filter($"objectKey" === srcKey).toDF()
-      .withColumn("objectKey", lit(dstKey))
-      .withColumn("createdUtc", lit(new Timestamp(System.currentTimeMillis())))
-      .select($"objectKey", $"originalLength", $"compressedLength", $"chunkCount", $"createdUtc"))
+    val now = new Timestamp(System.currentTimeMillis())
+    index.append(indexRows("o", Seq(obj.copy(objectKey = dstKey, createdUtc = now)).toDF())
+      .unionByName(indexRows("m", m.map(_.copy(objectKey = dstKey)).toDF())))
   }
 
   // ---------------------------------------------------------------- read
@@ -531,16 +513,8 @@ final class DedupeEngine(
     * join payloads on chunkKey, group by object, concat by address. No
     * driver loop, no per-object query; the 100 TB path. */
   def reconstructAll(keys: Option[Seq[String]] = None): Dataset[(String, Array[Byte])] = {
-    // debris guard: only map rows whose OBJECT row committed participate —
-    // a writeStream that died between its objmap and objects commits (or a
-    // delete that died between objects and objmap) must not surface as a
-    // phantom/truncated/resurrected object in a bulk export. The semi-join
-    // build side is the objects table (object-count rows, far below the
-    // map's chunk-count rows) — AQE broadcasts it in the common case.
-    val committed = objmap.toDF()
-      .join(objects.select($"objectKey"), Seq("objectKey"), "left_semi")
-    val m = keys.fold(committed)(ks =>
-      committed.join(spark.createDataset(ks).toDF("objectKey"), Seq("objectKey"), "left_semi"))
+    val m = keys.fold(objmap.toDF())(ks =>
+      objmap.join(spark.createDataset(ks).toDF("objectKey"), Seq("objectKey"), "left_semi"))
     // exemplar view: concurrent-ingest races can duplicate a chunkKey across
     // payload versions; deduping the payload side BEFORE the join costs no
     // extra shuffle — the dedupe's exchange+sort on chunkKey is exactly the
@@ -588,21 +562,17 @@ final class DedupeEngine(
     * fan-out DedupeLibrary.cs:507-522). The victim's [[getMetadata]]
     * carries its map and the [[refCounts]] of its chunks: a chunk is
     * garbage exactly when all of its references are the victim's own map
-    * rows. Returns the GC'd chunk keys. */
+    * rows. ONE index commit retires the object row and its map rows
+    * together — deleteKeys rewrites only segments whose key range covers
+    * the victim, O(touched segments) — and the payload GC runs after it,
+    * so a delete that dies in between leaves only unreferenced payloads
+    * for [[repairIndex]]. Returns the GC'd chunk keys. */
   def delete(key: String): Seq[String] = {
     val md = getMetadata(key).getOrElse(
       throw new NoSuchElementException(s"object not found: $key"))
     val own = md.map.groupMapReduce(_.chunkKey)(_ => 1L)(_ + _)
     val gc = md.chunks.collect { case c if c.refCount == own(c.chunkKey) => c.chunkKey }
-    // commit order matters (the three commits are not one transaction —
-    // the reference wraps these in one SQLite tx, SqliteProvider.cs:495):
-    // retire the OBJECTS row first, so a crash mid-delete degrades to
-    // orphaned-but-unreachable map/payload rows (exists=false, get=None,
-    // list hides it) instead of a live key whose get() returns empty bytes.
-    // deleteKeys rewrites only segments whose key range covers the victim —
-    // O(touched segments), never a full-table republish
-    objectsT.deleteKeys("objectKey", Seq(key))
-    objmapT.deleteKeys("objectKey", Seq(key))
+    index.deleteKeys("objectKey", Seq(key))
     // deleting an object whose chunks are all still shared must not pay a
     // full payload-table rewrite for a no-op
     if (gc.nonEmpty) store.delete(gc)
@@ -633,24 +603,24 @@ final class DedupeEngine(
     throw new IllegalStateException("unreachable")
   }
 
-  /** LSM "major compaction" for the whole index: rewrite each table as one
-    * globally key-SORTED snapshot. Appends leave a chain of segments (the
-    * tiered fold bounds fan-in but never fully merges) whose key ranges
-    * overlap — after enough churn every delete touches most segments. A
-    * sorted single-snapshot commit gives each output file a disjoint key
-    * range, so segment stats and parquet row-group footers prune maximally
-    * again. O(table) by design; a rare, explicit maintenance op (CLI:
-    * `compact`), run with no writer in flight — same contract as
-    * [[repairIndex]]. The sort is one range-partitioned shuffle per table;
+  /** LSM "major compaction" for the whole index: rewrite the index and the
+    * payload table each as one globally key-SORTED snapshot. Appends leave
+    * a chain of segments (the tiered fold bounds fan-in but never fully
+    * merges) whose key ranges overlap — after enough churn every delete
+    * touches most segments. A sorted single-snapshot commit gives each
+    * output file a disjoint key range, so segment stats and parquet
+    * row-group footers prune maximally again. O(table) by design; a rare,
+    * explicit maintenance op (CLI: `compact`), run with no writer in
+    * flight — same contract as [[repairIndex]]. The sort is one
+    * range-partitioned shuffle per table;
     * at 100 TB you run it per-partition/incrementally via the same
     * publish seam. */
   def compactIndex(): Unit = {
     // each backend decides what compaction MEANS: snapshot tables re-sort
     // into one segment; the JDBC backend is a documented no-op (the DB has
-    // no snapshot fragmentation, and its objmap is corpus-proportional —
-    // it must never round-trip through a driver-side publish)
-    objectsT.compactSorted(Seq("objectKey"))
-    objmapT.compactSorted(Seq("objectKey", "chunkPosition"))
+    // no snapshot fragmentation, and its map rows are corpus-proportional —
+    // they must never round-trip through a driver-side publish)
+    index.compactSorted(Seq("kind", "objectKey", "chunkPosition"))
     store.compact()
   }
 
@@ -661,33 +631,26 @@ final class DedupeEngine(
     * writer's fresh segment is unreferenced until its claim lands). CLI:
     * `vacuum`. */
   def vacuumIndex(): Unit = {
-    objectsT.vacuum()
-    objmapT.vacuum()
+    index.vacuum()
     store.vacuum()
   }
 
-  /** Reclaim unreachable crash debris: map rows whose objects row never
-    * committed (a `writeStream` died mid-spool) and payload rows no
-    * surviving map row references (either crash, or a `delete` that died
-    * between its index commits and its GC). The commit ORDER makes that
-    * debris invisible to reads — objects row lands last on ingest and
-    * first on delete — so those steps only reclaim space and re-tighten
-    * derived stats. Repair ALSO heals duplicate payload rows (the
-    * out-of-contract concurrent-append race). Reads were already correct
-    * through the duplicate window — every read path resolves map rows
-    * through a per-chunkKey exemplar (see [[payloadsFor]]/[[reconstructAll]]) —
-    * so healing reclaims the duplicated bytes, nothing more. Sweeps `.stage-*`
-    * directories a killed writeStream left behind. Run it with no writer
-    * in flight — an in-flight writeStream's staging dir must not be
-    * swept. */
+  /** Reclaim unreachable crash debris: payload rows no map row references
+    * — left by a write that died between its payload and index commits, or
+    * by a `delete` that died between its index commit and its GC. The
+    * index commit is atomic, so that debris is invisible to reads; this
+    * step only reclaims space. Repair ALSO heals duplicate payload rows
+    * (the out-of-contract concurrent-append race). Reads were already
+    * correct through the duplicate window — every read path resolves map
+    * rows through a per-chunkKey exemplar (see [[payloadsFor]]/
+    * [[reconstructAll]]) — so healing reclaims the duplicated bytes,
+    * nothing more. Sweeps `.stage-*` directories a killed writeStream left
+    * behind. Run it with no writer in flight — an in-flight write's
+    * payloads are unreferenced until its index commit lands, and an
+    * in-flight writeStream's staging dir must not be swept. */
   def repairIndex(): RepairReport = {
-    val orphanObjs = objmap.select($"objectKey").distinct()
-      .join(objects.select($"objectKey"), Seq("objectKey"), "left_anti")
-      .as[String].collect().toSeq
-    if (orphanObjs.nonEmpty) objmapT.deleteKeys("objectKey", orphanObjs)
-    // computed AFTER the map cleanup so chunks the debris alone referenced
-    // are reclaimed in the same pass; distinct on the payload side because
-    // a duplicated-and-orphaned key must be deleted (and reported) once
+    // distinct on the payload side: a duplicated-and-orphaned key must be
+    // deleted (and reported) once
     val orphanChunks = payloads.select($"chunkKey").distinct()
       .join(objmap.select($"chunkKey").distinct(), Seq("chunkKey"), "left_anti")
       .as[String].collect().toSeq
@@ -706,14 +669,12 @@ final class DedupeEngine(
         .foreach(graft.core.FsUtil.deleteRecursively)
       finally s.close()
     }
-    RepairReport(orphanObjs, orphanChunks, healed)
+    RepairReport(orphanChunks, healed)
   }
 }
 
 /** What [[DedupeEngine.repairIndex]] reclaimed and healed. */
-final case class RepairReport(
-    orphanObjects: Seq[String], orphanChunks: Seq[String],
-    healedDuplicates: Seq[String])
+final case class RepairReport(orphanChunks: Seq[String], healedDuplicates: Seq[String])
 
 /** Index lifecycle + config persistence (reference A7: InitializeIndex /
   * IsInitialized / config upsert-lookup, SqliteProvider.cs:65-149,
@@ -726,6 +687,13 @@ object DedupeEngine {
     * near 2^31). Objects beyond it must go through [[DedupeEngine.writeStream]]. */
   val MaxObjectBytes: Long = Int.MaxValue.toLong - 64
 
+  private val ObjectSchema = org.apache.spark.sql.Encoders.product[ObjectRow].schema
+  private val MapSchema = org.apache.spark.sql.Encoders.product[MapRow].schema
+  /** The index row: `kind` ("o" object, "m" map), the object columns, then
+    * the map columns after objectKey; a row leaves the other kind's null. */
+  private[graft] val IndexSchema = StructType((StructField("kind", StringType) +:
+    (ObjectSchema.fields ++ MapSchema.fields.tail)).map(_.copy(nullable = true)).toSeq)
+
   private def configPath(basePath: String) =
     java.nio.file.Paths.get(basePath, "config.properties")
 
@@ -736,7 +704,7 @@ object DedupeEngine {
     * index storage layout. Pass `bucketedIndex = true` when user object
     * keys are content hashes — the layout choice lives with the index, so
     * every later [[open]] commits with the same bucketing. Pass
-    * `jdbcIndex = true` to keep the index tables in an embedded relational
+    * `jdbcIndex = true` to keep the index table in an embedded relational
     * DB under the index directory instead of parquet snapshots (the
     * reference persists its provider choice the same way — the database
     * file IS the config; src/Test.External swaps it for MySQL): the choice
@@ -764,6 +732,13 @@ object DedupeEngine {
   /** Open an existing index with its persisted chunking params and layout. */
   def open(spark: SparkSession, basePath: String): DedupeEngine = {
     require(isInitialized(basePath), s"index not initialized: $basePath (create first)")
+    // opening the retired two-table layout would show an empty index
+    val retired = Seq("objects", "objmap")
+      .filter(t => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(basePath, t)))
+    if (retired.nonEmpty)
+      throw new IllegalStateException(
+        s"index directory $basePath holds ${retired.mkString(" and ")} tables of the retired " +
+          "two-table layout, which this version cannot read; re-ingest its objects into a new index")
     val m = new String(java.nio.file.Files.readAllBytes(configPath(basePath)), "UTF-8")
       .linesIterator.filter(_.contains("=")).map { l =>
         val Array(k, v) = l.split("=", 2); k.trim -> v.trim

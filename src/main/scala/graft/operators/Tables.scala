@@ -79,16 +79,20 @@ object Tables {
     // SECOND physical lineage per call and — under AQE, if a caller ever
     // passed a frame containing an exchange — would materialize upstream
     // query stages (real Spark jobs) at plan-construction time.
-    // sparkPlan.collectLeaves() never executes anything; FileSourceScanExec
-    // packs its splits driver-side from the (cached) file index. Callers
-    // pass narrow scan-lineage frames, so the leaf scan count IS the
-    // frame's partition count. Any non-file-scan leaf means the frame is
-    // not the single-small-parquet regime this helper exists for — leave
-    // it alone (the scale-safe default: no shuffle).
+    // sparkPlan.collectLeaves() never executes anything; a file scan —
+    // DSv1 FileSourceScanExec, or DSv2 BatchScanExec when a source is
+    // dropped from spark.sql.sources.useV1SourceList — packs its splits
+    // driver-side from the (cached) file index. Callers pass narrow
+    // scan-lineage frames, so the leaf scan count IS the frame's partition
+    // count. Any other leaf means the frame is not the single-small-parquet
+    // regime this helper exists for — leave it alone (the scale-safe
+    // default: no shuffle).
     val leaves = df.queryExecution.sparkPlan.collectLeaves()
     val scanParts = leaves.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>
         f.inputRDDs().map(_.getNumPartitions).sum
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.inputRDDs().map(_.getNumPartitions).sum
     }
     if (scanParts.size != leaves.size || scanParts.sum >= target) df
     else df.repartition(target, col(key))

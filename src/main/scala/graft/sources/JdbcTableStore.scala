@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /**
- * JDBC-backed [[TableStore]]: the index tables live in a relational
+ * JDBC-backed [[TableStore]]: the index table lives in a relational
  * database instead of parquet snapshots — the reference's external
  * `DbProvider` seam made real (reference: src/Test.External/Database.cs:16
  * and Program.cs:182-192 swap SQLite for MySQL; here the same swap point
@@ -20,8 +20,11 @@ import org.apache.spark.sql.types._
  *     database (a `WHERE objectKey = ?` point lookup becomes an indexed
  *     SQL query, not a table scan shipped to Spark), and at scale the read
  *     can be partitioned with the standard partitionColumn options.
- *   - `append(df)` is the Spark JDBC writer: executor-parallel inserts,
- *     O(new data), the ingest hot path.
+ *   - `append(df)` is the Spark JDBC writer writing ONE partition: Spark
+ *     commits a database transaction per written partition, so one
+ *     partition makes the append one transaction — the engine's object
+ *     and map rows for a write land together or not at all. O(new data),
+ *     the ingest hot path.
  *   - `publish(df)` / `deleteKeys` run ONE driver-side transaction:
  *     readers see the old or the new snapshot, never a half-replaced one —
  *     the database's transaction does what VersionedTable's CAS commit
@@ -123,7 +126,7 @@ final class JdbcTableStore(
   override def append(df: DataFrame): Unit =
     df.write.mode("append")
       .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-      .option("numPartitions", 8) // index metadata: cap writer connections
+      .option("numPartitions", 1) // one partition = one transaction: atomic
       .jdbc(url, s""""$table"""", props)
 
   /** Atomic snapshot replace: DELETE + INSERT inside one transaction — a
@@ -177,7 +180,7 @@ final class JdbcTableStore(
     * physical organization (heap/btree), so there is nothing to re-sort.
     * Critically, the default (sorted `publish`) would pull the WHOLE table
     * through the driver-side transactional rewrite: fine for commit deltas,
-    * unbounded for objmap (one row per chunk — corpus-proportional).
+    * unbounded for the index (one map row per chunk — corpus-proportional).
     * `append`/`read`/`deleteKeys`, the hot paths, stay O(new/deleted). */
   override def compactSorted(sortCols: Seq[String]): Unit = ()
 
@@ -230,8 +233,8 @@ object JdbcTableStore {
   def ensureDialect(): Unit = dialectRegistered
 
   /** Index-backend factory for [[graft.engine.DedupeEngine]]: one embedded
-    * Derby database per index at `dbDir`, one table per engine table (the
-    * path's last segment — `objects`, `objmap`). */
+    * Derby database per index at `dbDir`, holding the engine's index table
+    * (named by the path's last segment, `index`). */
   def factory(spark: SparkSession, dbDir: String): (String, StructType) => TableStore =
     (path, schema) => {
       val table = path.substring(path.lastIndexOf('/') + 1)

@@ -8,15 +8,22 @@ import scala.jdk.CollectionConverters._
  * Index-table backend seam — the reference abstracts its whole index behind
  * `DbProvider` (reference: src/DedupeLibrary/Database/DbProvider.cs:10-155)
  * so SQLite can be swapped for external MySQL/Postgres
- * (reference: src/Test.External/Program.cs:182-192). The engine touches its
- * index tables only through these three methods, so a backend swap (Delta
- * table, JDBC catalog, in-memory) is confined to one implementation of this
- * trait.
+ * (reference: src/Test.External/Program.cs:182-192). The engine keeps its
+ * whole index in ONE such table, so each index mutation is one commit, and
+ * a backend swap (Delta table, JDBC catalog, in-memory) is confined to one
+ * implementation of this trait.
  */
 trait TableStore {
   /** Current snapshot (empty-with-schema before the first commit). */
   def read(): DataFrame
-  /** Append-only commit of new rows — O(new data). */
+
+  /** The rows whose `colName` equals `value`; a [[VersionedTable]] split
+    * on that column opens only the matching files. */
+  private[graft] def readWhere(colName: String, value: String): DataFrame =
+    read().filter(org.apache.spark.sql.functions.col(colName) === value)
+
+  /** Append-only commit of new rows — O(new data) and atomic: readers see
+    * all of `df` or none of it. */
   def append(df: DataFrame): Unit
   /** Full-snapshot commit (delete/compaction path). */
   def publish(df: DataFrame): Unit
@@ -33,7 +40,7 @@ trait TableStore {
     * rewrite restores maximal segment/row-group pruning). Backends with no
     * snapshot fragmentation — a relational database keeps its own physical
     * organization and indexes — override this as a no-op: routing a
-    * corpus-proportional table (objmap is one row PER CHUNK) through a
+    * corpus-proportional table (the index holds one map row PER CHUNK) through a
     * driver-side publish would be pointless there and unbounded at scale. */
   def compactSorted(sortCols: Seq[String]): Unit =
     publish(read().orderBy(sortCols.map(org.apache.spark.sql.functions.col): _*))

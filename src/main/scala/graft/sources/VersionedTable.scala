@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, concat, count, hex, lit, substring, max => sqlMax, min => sqlMin}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardOpenOption}
 import java.util.Base64
 import scala.jdk.CollectionConverters._
@@ -149,12 +149,17 @@ object Segment {
  *   - `publish(df)` writes a full single-segment snapshot — the compaction
  *     path (O(table), rare by design).
  *
+ * With `splitCol`, a commit files its rows apart per value of that column
+ * (alphanumeric values: they name directories), so one commit carries
+ * several kinds atomically and [[readWhere]] on it opens one kind's files.
+ *
  * At 100 TB you would swap this for Delta (MERGE/OPTIMIZE/deletion vectors);
  * the engine only touches this class through the [[TableStore]] seam, so
  * that swap is confined here.
  */
 class VersionedTable(spark: SparkSession, path: String, schema: StructType,
-    statsCol: Option[String] = None, bucketed: Boolean = false)
+    statsCol: Option[String] = None, bucketed: Boolean = false,
+    splitCol: Option[String] = None)
     extends TableStore {
 
   private val dir = Paths.get(path)
@@ -217,6 +222,11 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
 
   /** Current snapshot as a DataFrame; empty (with schema) before first commit. */
   override def read(): DataFrame = readSegments(currentSnapshot()._2)
+
+  /** On the split column, only the entries filed under `value` are opened. */
+  override private[graft] def readWhere(colName: String, value: String): DataFrame =
+    if (!splitCol.contains(colName)) super.readWhere(colName, value)
+    else readSegments(currentSnapshot()._2.filter(_.name.split('/').contains(s"__$colName=$value")))
 
   /** Number of segments in the current version (compaction signal). */
   def segmentCount: Int = currentSnapshot()._2.size
@@ -404,48 +414,43 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
     val attempt = java.util.UUID.randomUUID().toString.take(8)
     val segName = s"seg-$next-$attempt" // unique per attempt: racing writers never clobber
     val segPath = dir.resolve(segName)
-    // stats (and emptiness) come from one narrow readback of the new files:
-    // the agg prunes to the key column, so the cost is one small column scan
-    // of the NEW rows only
-    val newSegs: Seq[Segment] = statsCol match {
-      case Some(c) if bucketed =>
-        // key-range bucketing for content-hash keys: a hash key's min/max
-        // spans the whole keyspace, so per-commit stats alone never let a
-        // delete skip a segment. Partitioning each commit by the key's
-        // leading character yields sub-segments with one-character key
-        // ranges — a delete then touches only the buckets its victims hash
-        // into, even on uniformly-distributed keys. The bucket NAME is the
-        // hex of the leading char's UTF-8 bytes ('b' prefix keeps it
-        // inference-proof): user keys may start with characters Hadoop
-        // escapes in partition paths ('%', ':', '=', …), and an escaped
-        // on-disk name recorded unescaped in the manifest would make every
-        // later read miss the path — hex is alnum, never escaped, so disk
-        // and manifest always agree. Pruning is unaffected: mayContain
-        // reads the per-bucket min/max STATS, never the bucket name.
-        newData
-          .withColumn("__bucket", concat(lit("b"), hex(substring(col(c), 0, 1))))
-          .write.mode("overwrite").partitionBy("__bucket").parquet(segPath.toString)
-        val stats =
-          try spark.read.parquet(segPath.toString) // partition col re-inferred
-            .groupBy(col("__bucket"))
-            .agg(sqlMin(col(c)).cast("string").as("lo"), sqlMax(col(c)).cast("string").as("hi"))
-            .collect().toSeq
-          catch { // an empty write leaves no files to infer a schema from
-            case _: org.apache.spark.sql.AnalysisException => Nil
-          }
-        stats.map(r => Segment(s"$segName/__bucket=${r.getString(0)}",
-          Option(r.getString(1)), Option(r.getString(2)))).sortBy(_.name)
-      case Some(c) =>
-        newData.write.mode("overwrite").parquet(segPath.toString)
-        val r = spark.read.schema(schema).parquet(segPath.toString)
-          .agg(count(lit(1)), sqlMin(col(c)).cast("string"), sqlMax(col(c)).cast("string"))
-          .head()
-        if (r.getLong(0) == 0L) Nil
-        else Seq(Segment(segName, Option(r.getString(1)), Option(r.getString(2))))
-      case None =>
+    // one manifest entry per partition: the split column's value, then on
+    // a bucketed table the key's leading character. A content-hash key's
+    // min/max spans the keyspace, so only one-character buckets let a
+    // delete skip segments. The bucket NAME is the hex of that char's
+    // UTF-8 bytes ('b' prefix keeps it inference-proof): Hadoop escapes
+    // '%', ':', '=', … in partition paths, and an escaped on-disk name
+    // recorded unescaped in the manifest would make every later read miss
+    // the path. mayContain reads the per-entry STATS, never the name.
+    val parts = splitCol.toSeq.map(c => s"__$c" -> col(c)) ++
+      statsCol.filter(_ => bucketed).map(c => "__bucket" -> concat(lit("b"), hex(substring(col(c), 0, 1))))
+    val names = parts.map(_._1)
+    val newSegs: Seq[Segment] =
+      if (names.isEmpty && statsCol.isEmpty) {
         newData.write.mode("overwrite").parquet(segPath.toString)
         Seq(Segment(segName, None, None))
-    }
+      } else {
+        parts.foldLeft(newData) { case (d, (n, c)) => d.withColumn(n, c) }
+          .write.mode("overwrite").partitionBy(names: _*).parquet(segPath.toString)
+        // entries, stats and emptiness come from one narrow readback of the
+        // NEW files (the agg prunes to the key column); partition columns
+        // are declared strings, never inferred
+        val stats =
+          try spark.read.schema(StructType(schema.fields ++ names.map(StructField(_, StringType))))
+            .parquet(segPath.toString)
+            .groupBy(names.map(col): _*)
+            .agg(count(lit(1)), statsCol.toSeq.flatMap(c =>
+              Seq(sqlMin(col(c)).cast("string"), sqlMax(col(c)).cast("string"))): _*)
+            .collect().toSeq
+          catch { // an empty write may leave no files to read
+            case _: org.apache.spark.sql.AnalysisException => Nil
+          }
+        stats.filter(_.getLong(names.size) > 0).map { r =>
+          val sub = names.indices.map(i => s"/${names(i)}=${r.getString(i)}").mkString
+          def stat(i: Int) = statsCol.flatMap(_ => Option(r.getString(names.size + i)))
+          Segment(segName + sub, stat(1), stat(2))
+        }.sortBy(_.name)
+      }
     if (newSegs.isEmpty) deleteRecursively(segPath)
     val segs = keepSegs ++ newSegs
     val body = segs.map(segLine).mkString("", "\n", "\n")
@@ -506,9 +511,9 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
     }
   }
 
-  /** Delete one manifest entry (a whole segment dir, or one bucket subdir of
-    * a bucketed commit — in which case the parent goes too once only marker
-    * files remain). */
+  /** Delete one manifest entry (a whole segment dir, or one partition
+    * subdir of a split or bucketed commit — in which case the parent goes
+    * too once only marker files remain). */
   private def deleteSegEntry(name: String): Unit = {
     deleteRecursively(dir.resolve(name))
     val slash = name.indexOf('/')

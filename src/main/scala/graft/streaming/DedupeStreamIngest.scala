@@ -61,7 +61,7 @@ object DedupeStreamIngest {
           .join(engine.objects.select(col("objectKey")), Seq("objectKey"), "left_anti")
           .as[(String, Array[Byte])]
         // a fully-replayed batch dedupes to nothing: skip the commit rather
-        // than advancing three table versions with empty segments
+        // than advancing the table versions with empty segments
         if (!fresh.isEmpty) engine.ingest(fresh)
       }
       .start()

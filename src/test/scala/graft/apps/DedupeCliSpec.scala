@@ -46,8 +46,8 @@ class DedupeCliSpec extends SparkSpec {
     new scala.util.Random(17).nextBytes(data)
     e.write("deadbeef01", data)
     assert(java.util.Arrays.equals(e.get("deadbeef01").get, data))
-    val segFiles = fileFingerprints(s"$dir/objects").keySet
-    assert(segFiles.exists(_.contains("__bucket=")), "objects commit must be bucketed")
+    val segFiles = fileFingerprints(s"$dir/index").keySet
+    assert(segFiles.exists(_.contains("__bucket=")), "index commit must be bucketed")
   }
 
   test("get '-' streams raw object bytes to stdout (reference stdout parity)") {
@@ -183,11 +183,11 @@ class DedupeCliSpec extends SparkSpec {
     assert(captureOut(DedupeCli.run(spark, dir, "compact", Array()))
       .exists(_.contains("compacted index")))
     assertIntact("compact")
-    assert(new graft.sources.VersionedTable(spark, s"$dir/objects",
-      org.apache.spark.sql.Encoders.product[graft.engine.ObjectRow].schema).segmentCount == 1,
-      "compaction folds the objects table into one segment")
+    assert(new graft.sources.VersionedTable(spark, s"$dir/index",
+      graft.engine.DedupeEngine.IndexSchema).segmentCount == 2,
+      "compaction folds the index into one commit: one object and one map segment")
     // an unclaimed segment directory is what a crashed writer leaves behind
-    val debris = java.nio.file.Paths.get(dir, "objmap", "seg-999-deadbeef")
+    val debris = java.nio.file.Paths.get(dir, "index", "seg-999-deadbeef")
     Files.createDirectories(debris)
     Files.write(debris.resolve("part-0.parquet"), Array[Byte](1, 2, 3))
     assert(captureOut(DedupeCli.run(spark, dir, "vacuum", Array()))

@@ -2,7 +2,10 @@ package graft.engine
 
 import graft.SparkSpec
 import graft.core.DedupeSettings
+import graft.sources.{TableStore, VersionedTable}
+import org.apache.spark.sql.types.StructType
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Integration spec: the reference SampleApp + test.bat scenarios
   * (reference: src/SampleApp/Program.cs:9-36, src/Cli/test.bat). */
@@ -179,19 +182,18 @@ class DedupeEngineSpec extends SparkSpec {
   test("delete touches only index segments whose key range covers the victim") {
     val dir = Files.createTempDirectory("graft-engine-del").toString
     val e = new DedupeEngine(spark, dir, DedupeSettings(256, 2048, 8, 1))
-    // three ingest batches with disjoint, ordered key ranges → each index
+    // three ingest batches with disjoint, ordered key ranges → the index
     // table gets three segments with non-overlapping objectKey stats
     e.ingest(Seq("a1" -> randomBytes(3000, 61), "a2" -> randomBytes(3000, 62)))
     e.ingest(Seq("b1" -> randomBytes(3000, 63), "b2" -> randomBytes(3000, 64)))
     e.ingest(Seq("c1" -> randomBytes(3000, 65), "c2" -> randomBytes(3000, 66)))
     def fingerprints(sub: String) = fileFingerprints(s"$dir/$sub")
-    val objBefore = fingerprints("objects")
-    val mapBefore = fingerprints("objmap")
+    val idxBefore = fingerprints("index")
     val payBefore = fingerprints("payloads")
     e.delete("b1")
     // a- and c-batch segments must be byte-identical (never read or
     // rewritten); only the b segment is replaced
-    for ((sub, before) <- Seq("objects" -> objBefore, "objmap" -> mapBefore)) {
+    for ((sub, before) <- Seq("index" -> idxBefore)) {
       val after = fingerprints(sub)
       val survivors = before.keySet.intersect(after.keySet)
       for (f <- survivors)
@@ -230,10 +232,9 @@ class DedupeEngineSpec extends SparkSpec {
     val victim = objs.map(_._1).groupBy(_.head).values
       .filter(_.size >= 2).flatten.toSeq.sorted.head
     def fingerprints(sub: String) = fileFingerprints(s"$dir/$sub")
-    val objBefore = fingerprints("objects")
-    val mapBefore = fingerprints("objmap")
+    val idxBefore = fingerprints("index")
     e.delete(victim)
-    for ((sub, before) <- Seq("objects" -> objBefore, "objmap" -> mapBefore)) {
+    for ((sub, before) <- Seq("index" -> idxBefore)) {
       val after = fingerprints(sub)
       val survivors = before.keySet.intersect(after.keySet).filter(_.contains("seg-"))
       assert(survivors.nonEmpty, s"$sub: non-victim buckets must survive the delete untouched")
@@ -255,11 +256,11 @@ class DedupeEngineSpec extends SparkSpec {
     }
     assert(e.indexStats().objectCount === 19)
     // the layout choice is persisted with the index: a plain open() commits
-    // bucketed too (new objects segments carry __bucket= partition dirs)
+    // bucketed too (new index segments carry __bucket= partition dirs)
     val reopened = DedupeEngine.open(spark, dir)
-    val objAfterDelete = fingerprints("objects")
+    val objAfterDelete = fingerprints("index")
     reopened.write(hkey(99), randomBytes(3000, 299))
-    val newFiles = fingerprints("objects").keySet.diff(objAfterDelete.keySet)
+    val newFiles = fingerprints("index").keySet.diff(objAfterDelete.keySet)
     assert(newFiles.exists(_.contains("__bucket=")),
       "reopened engine must keep committing bucketed index segments")
     assert(reopened.indexStats().objectCount === 20)
@@ -283,11 +284,10 @@ class DedupeEngineSpec extends SparkSpec {
       new String(Files.readAllBytes(latest), "UTF-8").linesIterator
         .filter(_.nonEmpty).map(_.takeWhile(c => c != '/' && c != '\t')).toSet.size
     }
-    assert(topCommits("objects") === 5, "each write commits its own segment")
+    assert(topCommits("index") === 5, "each write commits its own segment")
     val statsBefore = e.indexStats()
     e.compactIndex()
-    assert(topCommits("objects") === 1, "compaction folds objects to one snapshot")
-    assert(topCommits("objmap") === 1, "compaction folds objmap to one snapshot")
+    assert(topCommits("index") === 1, "compaction folds the index to one snapshot")
     assert(e.indexStats() === statsBefore, "compaction changes layout, never content")
     for ((k, d) <- objs) assert(java.util.Arrays.equals(e.get(k).get, d))
     // post-compaction deletes and writes keep working on the folded table
@@ -326,8 +326,8 @@ class DedupeEngineSpec extends SparkSpec {
     val objs = (1 to 3).map(i => f"v$i" -> randomBytes(3000, 500 + i))
     objs.foreach { case (k, d) => e.write(k, d) }
     // plant the debris a crashed writer leaves: a written-but-never-claimed
-    // segment dir and a stale temp manifest, in an index table AND payloads
-    for (sub <- Seq("objects", "payloads")) {
+    // segment dir and a stale temp manifest, in the index AND payloads
+    for (sub <- Seq("index", "payloads")) {
       val seg = java.nio.file.Paths.get(dir, sub, "seg-99-deadbeef")
       Files.createDirectories(seg)
       Files.write(seg.resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
@@ -336,7 +336,7 @@ class DedupeEngineSpec extends SparkSpec {
     }
     val statsBefore = e.indexStats()
     e.vacuumIndex()
-    for (sub <- Seq("objects", "payloads")) {
+    for (sub <- Seq("index", "payloads")) {
       assert(!Files.exists(java.nio.file.Paths.get(dir, sub, "seg-99-deadbeef")),
         s"$sub: unclaimed segment must be swept")
       assert(!Files.exists(java.nio.file.Paths.get(dir, sub, ".manifest-99.tmp-dead")),
@@ -368,8 +368,7 @@ class DedupeEngineSpec extends SparkSpec {
     // duplicate-key contract holds on the stream path too
     assertThrows[IllegalArgumentException](
       e.writeStream("streamed", new java.io.ByteArrayInputStream(data)))
-    // crash-degradation contract: objects row commits last, so both paths
-    // agree on the reconstructed bytes
+    // both paths agree on the reconstructed bytes
     assert(java.util.Arrays.equals(e.get("arrayed").get, e.get("streamed").get))
   }
 
@@ -405,83 +404,158 @@ class DedupeEngineSpec extends SparkSpec {
     assert(java.util.Arrays.equals(e.get("survivor").get, survivor))
   }
 
-  test("a crash between objmap and objects commits: debris invisible, retry self-heals, repairIndex reclaims") {
-    // simulate the narrow crash window with an objects table that dies on
-    // its next append (the LAST commit of the write sequence)
-    val dir = Files.createTempDirectory("graft-crashwin").toString
-    final class FailingOnce(inner: graft.sources.TableStore) extends graft.sources.TableStore {
-      @volatile var armed = false
-      override def read() = inner.read()
-      override def append(df: org.apache.spark.sql.DataFrame): Unit = {
-        if (armed) { armed = false; throw new RuntimeException("simulated crash before objects commit") }
-        inner.append(df)
+  /** Every read path must miss `key` and the index must read as it did at
+    * `statsBefore`: what a write or delete that died mid-way must leave. */
+  private def assertInvisible(e: DedupeEngine, key: String, statsBefore: IndexStats): Unit = {
+    assert(!e.exists(key), s"$key: exists")
+    assert(e.get(key).isEmpty, s"$key: get")
+    assert(e.getStream(key).isEmpty, s"$key: getStream")
+    assert(e.openStream(key).isEmpty, s"$key: openStream")
+    assert(e.getMetadata(key).isEmpty, s"$key: getMetadata")
+    assert(e.mapForPosition(key, 0).isEmpty, s"$key: mapForPosition")
+    assert(!e.listObjects().objects.exists(_.objectKey == key), s"$key: listObjects")
+    assert(e.reconstructAll().filter(_._1 == key).isEmpty, s"$key: reconstructAll")
+    assert(e.objmap.filter(_.objectKey == key).count() === 0, s"$key: objmap rows")
+    assert(e.indexStats() === statsBefore, s"$key: indexStats")
+  }
+
+  /** Segment dirs of the index that no retained manifest names. */
+  private def unclaimedSegments(dir: String): Set[String] = {
+    val d = java.nio.file.Paths.get(dir, "index")
+    val s = Files.list(d)
+    val names = try s.iterator().asScala.map(_.getFileName.toString).toList finally s.close()
+    val named = names.filter(_.matches("manifest-\\d+\\.txt")).flatMap(m =>
+      new String(Files.readAllBytes(d.resolve(m)), "UTF-8").linesIterator
+        .map(_.takeWhile(c => c != '/' && c != '\t'))).toSet
+    names.filter(n => n.startsWith("seg-") && !named(n)).toSet
+  }
+
+  /** An index whose next append throws once armed: the crash lands after
+    * the payloads and before any index file is written. */
+  private final class FailingAppend(inner: TableStore) extends TableStore {
+    @volatile var armed = false
+    override def read() = inner.read()
+    override private[graft] def readWhere(c: String, v: String) = inner.readWhere(c, v)
+    override def append(df: org.apache.spark.sql.DataFrame): Unit = {
+      if (armed) { armed = false; throw new RuntimeException("simulated crash in the index append") }
+      inner.append(df)
+    }
+    override def publish(df: org.apache.spark.sql.DataFrame): Unit = inner.publish(df)
+    override def deleteKeys(keyCol: String, keys: Seq[String]): Unit = inner.deleteKeys(keyCol, keys)
+    override def vacuum(): Unit = inner.vacuum()
+  }
+
+  /** The engine's default index table, dying between its segment write and
+    * its manifest claim once armed: the segment is on disk, never claimed. */
+  private final class DiesBeforeClaim(p: String, s: StructType)
+      extends VersionedTable(spark, p, s, statsCol = Some("objectKey"), splitCol = Some("kind")) {
+    @volatile var armed = false
+    override protected def onBeforeManifestClaim(): Unit =
+      if (armed) { armed = false; throw new RuntimeException("simulated crash before the index claim") }
+  }
+
+  for ((mode, claimed) <- Seq("the index append throws" -> false,
+      "the index segment is written but never claimed" -> true))
+    test(s"a write that dies before its index commit leaves nothing visible: $mode") {
+      import spark.implicits._
+      val dir = Files.createTempDirectory("graft-crashwin").toString
+      var arm: () => Unit = null
+      val e = new DedupeEngine(spark, dir, DedupeSettings(256, 2048, 8, 1), None,
+        Some((p, s) =>
+          if (claimed) { val t = new DiesBeforeClaim(p, s); arm = () => t.armed = true; t }
+          else {
+            val t = new FailingAppend(new VersionedTable(spark, p, s,
+              statsCol = Some("objectKey"), splitCol = Some("kind")))
+            arm = () => t.armed = true; t
+          }))
+      val survivor = randomBytes(8000, 83)
+      e.write("survivor", survivor)
+      val streamed = randomBytes(30000, 84)
+      val written = randomBytes(20000, 85)
+      // writeStream, write and cloneObject share one commit path; each must
+      // fail clean. A clone writes no payloads, so it orphans none.
+      val writers: Seq[(String, String => Unit, Array[Byte])] = Seq(
+        ("writeStream", k => e.writeStream(k, new java.io.ByteArrayInputStream(streamed),
+          batchBytes = 4096L), streamed),
+        ("write", k => e.write(k, written), written),
+        ("cloneObject", k => e.cloneObject("survivor", k), survivor))
+      for ((via, writeTo, expected) <- writers) {
+        val key = s"doomed-$via"
+        val statsBefore = e.indexStats()
+        val payloadsBefore = e.payloads.map(_.chunkKey).collect().toSet
+        arm()
+        intercept[RuntimeException](writeTo(key))
+        assertInvisible(e, key, statsBefore)
+        val landed = e.payloads.map(_.chunkKey).collect().toSet -- payloadsBefore
+        assert(landed.nonEmpty === (via != "cloneObject"),
+          s"$via: the payloads land before the index commit")
+        assert(unclaimedSegments(dir).nonEmpty === claimed, s"$via: the unclaimed segment is on disk")
+        // recovery: repair reclaims exactly the orphaned chunks, vacuum the
+        // unclaimed segment, and a plain retry round-trips
+        assert(e.repairIndex().orphanChunks.toSet === landed, s"$via: repair reclaims the orphans only")
+        e.vacuumIndex()
+        assert(unclaimedSegments(dir).isEmpty, s"$via: vacuum sweeps the unclaimed segment")
+        assert(e.indexStats() === statsBefore, s"$via: recovery leaves the index as it was")
+        assert(java.util.Arrays.equals(e.get("survivor").get, survivor), s"$via: survivor intact")
+        writeTo(key)
+        assert(java.util.Arrays.equals(e.get(key).get, expected), s"$via: retry round-trips")
+        assert(e.getMetadata(key).get.map.map(_.chunkLength.toLong).sum === expected.length.toLong)
       }
-      override def publish(df: org.apache.spark.sql.DataFrame): Unit = inner.publish(df)
-      override def deleteKeys(keyCol: String, keys: Seq[String]): Unit =
-        inner.deleteKeys(keyCol, keys)
+      assert(e.repairIndex() === RepairReport(Nil, Nil), "nothing is left to repair")
     }
-    var objectsTable: FailingOnce = null
-    val e = new DedupeEngine(spark, dir, DedupeSettings(256, 2048, 8, 1), None,
-      Some((p, s) => {
-        val inner = new graft.sources.VersionedTable(spark, p, s,
-          statsCol = s.fieldNames.headOption.filter(Set("objectKey", "chunkKey")))
-        if (s.fieldNames.contains("originalLength")) {
-          objectsTable = new FailingOnce(inner); objectsTable
-        } else inner
-      }))
-    val survivor = randomBytes(8000, 83)
-    e.write("survivor", survivor)
+
+  test("a delete that dies after its index commit: the key is gone, repairIndex reclaims its chunks") {
+    val dir = Files.createTempDirectory("graft-delcrash").toString
+    val inner = new ParquetPayloadStore(spark, s"$dir/payloads")
+    @volatile var armed = false
+    val failingGc = new PayloadStore {
+      def read() = inner.read()
+      def append(payloads: org.apache.spark.sql.DataFrame): Unit = inner.append(payloads)
+      def fetch(keys: Seq[String]) = inner.fetch(keys)
+      def healDuplicates() = inner.healDuplicates()
+      def delete(keys: Seq[String]): Unit = {
+        if (armed) { armed = false; throw new RuntimeException("simulated crash before the payload GC") }
+        inner.delete(keys)
+      }
+    }
+    val e = new DedupeEngine(spark, dir, DedupeSettings(256, 2048, 8, 1), payloadStore = Some(failingGc))
+    val keep = randomBytes(8000, 86)
+    e.write("keep", keep)
     val statsBefore = e.indexStats()
-    val data = randomBytes(30000, 84)
-    objectsTable.armed = true
-    intercept[RuntimeException](
-      e.writeStream("doomed", new java.io.ByteArrayInputStream(data), batchBytes = 4096L))
-    // debris: map+payload rows committed, objects row missing
-    assert(!e.exists("doomed"))
-    assert(e.get("doomed").isEmpty)
-    assert(e.objmap.filter(_.objectKey == "doomed").count() > 0,
-      "this test must actually produce the narrow-window debris")
-    // the debris must be invisible to EVERY read path, not just exists/get:
-    // the stream paths consult the objects table (the engine's lookup), and the
-    // bulk reconstruction semi-joins against it — an objmap-only read here
-    // would surface a phantom (and, for the stream paths, throw when the
-    // never-committed payloads miss the prefetch)
-    assert(e.getStream("doomed").isEmpty, "getStream must not serve debris")
-    assert(e.openStream("doomed").isEmpty, "openStream must not serve debris")
-    assert(e.reconstructAll().filter(_._1 == "doomed").isEmpty,
-      "bulk reconstruction must not emit a phantom object")
-    assert(e.reconstructAll().count() == 1L, "the survivor still exports")
-    def assertClean(expected: Array[Byte], via: String): Unit = {
-      assert(java.util.Arrays.equals(e.get("doomed").get, expected), s"$via: bytes")
-      val md = e.getMetadata("doomed").get
-      assert(md.map.map(_.chunkLength.toLong).sum === expected.length.toLong,
-        s"$via: a write after a crash must not interleave debris map rows")
-    }
-    def recreateDebris(): Unit = {
-      e.delete("doomed")
-      objectsTable.armed = true
-      intercept[RuntimeException](
-        e.writeStream("doomed", new java.io.ByteArrayInputStream(data), batchBytes = 4096L))
-      assert(!e.exists("doomed") && e.objmap.filter(_.objectKey == "doomed").count() > 0)
-    }
-    // path 1: a plain retry purges the debris itself and round-trips — through
-    // writeStream, write and cloneObject alike (one shared admission step)
-    e.writeStream("doomed", new java.io.ByteArrayInputStream(data), batchBytes = 4096L)
-    assertClean(data, "writeStream")
-    recreateDebris()
-    e.write("doomed", data)
-    assertClean(data, "write")
-    recreateDebris()
-    e.cloneObject("survivor", "doomed")
-    assertClean(survivor, "cloneObject")
-    // path 2: re-create the debris and let repairIndex reclaim
-    recreateDebris()
-    val r = e.repairIndex()
-    assert(r.orphanObjects == Seq("doomed"))
-    assert(r.orphanChunks.nonEmpty, "the doomed object's unshared chunks must be reclaimed")
-    assert(e.indexStats() === statsBefore, "derived stats re-tighten to the pre-crash state")
-    assert(java.util.Arrays.equals(e.get("survivor").get, survivor), "repair never touches live data")
-    assert(e.repairIndex() === RepairReport(Nil, Nil, Nil), "repair is idempotent")
+    e.write("victim", randomBytes(12000, 87))
+    val victimChunks = e.getMetadata("victim").get.map.map(_.chunkKey).toSet
+    armed = true
+    intercept[RuntimeException](e.delete("victim"))
+    assertInvisible(e, "victim", statsBefore)
+    assert(e.repairIndex().orphanChunks.toSet === victimChunks, "repair reclaims the victim's chunks")
+    assert(e.payloads.count() === statsBefore.chunkCount, "only the survivor's payloads remain")
+    assert(java.util.Arrays.equals(e.get("keep").get, keep))
+  }
+
+  test("each write, clone and delete commits the index exactly once") {
+    val dir = Files.createTempDirectory("graft-onecommit").toString
+    val e = new DedupeEngine(spark, dir, DedupeSettings(256, 2048, 8, 1))
+    val idx = new VersionedTable(spark, s"$dir/index", DedupeEngine.IndexSchema)
+    def version: Long = idx.retainedVersions.lastOption.getOrElse(-1L)
+    def commits(body: => Unit): Long = { val v = version; body; version - v }
+    assert(commits(e.write("a", randomBytes(6000, 88))) === 1L, "write")
+    assert(commits(e.write("b", randomBytes(6000, 89))) === 1L, "write")
+    assert(commits(e.ingest(Seq("c" -> randomBytes(4000, 90), "d" -> randomBytes(4000, 91)))) === 1L,
+      "ingest")
+    assert(commits(e.writeStream("s", new java.io.ByteArrayInputStream(randomBytes(9000, 92)),
+      batchBytes = 2048L)) === 1L, "writeStream")
+    assert(commits(e.cloneObject("a", "a2")) === 1L, "cloneObject")
+    assert(commits(e.delete("a")) === 1L, "delete")
+    assert(commits(e.delete("b")) === 1L, "delete")
+    assert(e.indexStats().objectCount === 4)
+  }
+
+  test("open refuses an index directory of the retired two-table layout and names it") {
+    val dir = Files.createTempDirectory("graft-oldlayout").toString
+    DedupeEngine.create(spark, dir, DedupeSettings(256, 2048, 8, 1))
+    Files.createDirectories(java.nio.file.Paths.get(dir, "objmap", "seg-0-deadbeef"))
+    val ex = intercept[IllegalStateException](DedupeEngine.open(spark, dir))
+    assert(ex.getMessage.contains(dir) && ex.getMessage.contains("objmap"), ex.getMessage)
   }
 
   test("repairIndex heals duplicate payload rows from out-of-contract concurrent appends") {

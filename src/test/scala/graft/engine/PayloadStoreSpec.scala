@@ -58,8 +58,8 @@ class PayloadStoreSpec extends SparkSpec {
       // streams work over both stores
       val rebuilt = e.getStream("c").get.reduce(_ ++ _)
       assert(java.util.Arrays.equals(rebuilt, unique), s"[$label] stream c")
-      // the existing-key rejection reads both index tables through this
-      // backend, and must fire before any commit
+      // the existing-key rejection reads the index through this backend,
+      // and must fire before any commit
       val before = e.indexStats()
       val ex = intercept[IllegalArgumentException](e.write("c", randomBytes(700, 25)))
       assert(ex.getMessage == "object key already exists: c", s"[$label] ${ex.getMessage}")
@@ -110,25 +110,25 @@ class PayloadStoreSpec extends SparkSpec {
   }
 
   test("write of a fresh key stays within its Spark job budget") {
-    // chunk checkpoint, ONE admission query (in-batch duplicate, existing
-    // key and crash-debris checks together), then the three commits
+    // chunk checkpoint, ONE admission query (in-batch duplicate and
+    // existing-key checks together), then the payload and index commits
     val e = engines().head._2
     e.write("seed", randomBytes(20000, 34))
     val count = jobsDuring(e.write("fresh", randomBytes(30000, 35)))
     assert(count >= 1, "listener must have observed the write")
-    assert(count <= 17, s"write ran $count Spark jobs (budget 17)")
+    assert(count <= 13, s"write ran $count Spark jobs (budget 13)")
   }
 
   test("delete of an object with one sharer stays within its Spark job budget") {
     // getMetadata's two query executions carry the GC decision, then the
-    // objects and objmap deletes and the payload GC
+    // one index delete and the payload GC
     val e = engines().head._2
     val shared = randomBytes(20000, 36)
     e.ingest(Seq("victim" -> (shared ++ randomBytes(6000, 37)), "sharer" -> shared))
     val count = jobsDuring(assert(e.delete("victim").nonEmpty, "the victim's own chunks are GC'd"))
     assert(java.util.Arrays.equals(e.get("sharer").get, shared), "the sharer reads back intact")
     assert(count >= 1, "listener must have observed the delete")
-    assert(count <= 12, s"delete ran $count Spark jobs (budget 12)")
+    assert(count <= 8, s"delete ran $count Spark jobs (budget 8)")
   }
 
   test("getMetadata executes at most 2 Spark jobs") {

@@ -109,8 +109,8 @@ class JdbcTableStoreSpec extends SparkSpec {
     assert(java.util.Arrays.equals(e.get("via-jdbc").get, data))
     assert(Files.exists(java.nio.file.Paths.get(dir, "derby-index")),
       "index rows must land in the embedded DB under the index dir")
-    assert(!Files.exists(java.nio.file.Paths.get(dir, "objects")),
-      "no parquet index tables may exist when the JDBC backend is persisted")
+    assert(!Files.exists(java.nio.file.Paths.get(dir, "index")),
+      "no parquet index table may exist when the JDBC backend is persisted")
     // a second open (fresh engine) reads the same DB
     val e2 = DedupeEngine.open(spark, dir)
     assert(e2.exists("via-jdbc") && e2.indexStats().objectCount == 1)
@@ -167,16 +167,19 @@ class JdbcTableStoreSpec extends SparkSpec {
     e.writeOrReplace("bb1", v2)
     assert(java.util.Arrays.equals(e.get("bb1").get, v2))
 
-    // repair: a manually-orphaned map row (objects row deleted out from
-    // under it) is reclaimed by repairIndex through the JDBC deleteKeys
-    e.write("orphan-me", unique)
-    val factory = JdbcTableStore.factory(spark, s"$dir/derby-idx")
-    val objectsT = factory(s"$dir/objects", e.objects.schema)
-    objectsT.deleteKeys("objectKey", Seq("orphan-me"))
-    assert(!e.exists("orphan-me"), "engine reads the same DB the raw store mutated")
+    // atomicity: one ingest is one database transaction, so a batch with a
+    // key too long for the VARCHAR(4096) column fails WHOLE — its valid
+    // keys keep no object or map row — and leaves only the payloads that
+    // landed first, which repairIndex reclaims
+    val valid = new Array[Byte](9000); r.nextBytes(valid)
+    val tooLong = new Array[Byte](5000); r.nextBytes(tooLong)
+    intercept[Exception](e.ingest(Seq("ok-1" -> valid, ("x" * 4097) -> tooLong)))
+    assert(e.objects.filter(_.objectKey == "ok-1").count() === 0, "no object row for a valid key")
+    assert(e.objmap.filter(_.objectKey == "ok-1").count() === 0, "no map row for a valid key")
+    assert(!e.exists("ok-1") && e.get("ok-1").isEmpty)
     val rep = e.repairIndex()
-    assert(rep.orphanObjects.contains("orphan-me"))
-    assert(rep.orphanChunks.nonEmpty, "the orphan's unshared chunks must be reclaimed")
+    assert(rep.orphanChunks.nonEmpty, "the failed ingest's payloads must be reclaimed")
+    assert(e.repairIndex().orphanChunks.isEmpty, "repair is idempotent")
     assert(java.util.Arrays.equals(e.get("bb1").get, v2), "repair must not touch live objects")
 
     // a reopened engine sees the same index (rows live in Derby, not the JVM)

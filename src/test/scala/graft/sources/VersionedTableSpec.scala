@@ -315,6 +315,28 @@ class VersionedTableSpec extends SparkSpec {
     assert(t.read().count() === 11)
   }
 
+  test("split table: one commit carries every kind, a one-kind read opens only its files") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("vt_split").toString
+    val kinds = StructType(Seq(StructField("kind", StringType), StructField("k", StringType),
+      StructField("n", LongType)))
+    val t = new VersionedTable(spark, dir, kinds, statsCol = Some("k"), bucketed = true,
+      splitCol = Some("kind"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).sorted.toSeq
+    t.append(Seq(("o", "Aa", 1L), ("m", "Aa", 2L), ("m", "Zz", 3L)).toDF("kind", "k", "n"))
+    assert(t.retainedVersions === Seq(0L), "both kinds land in ONE commit")
+    assert(rows(t.readWhere("kind", "m")) === Seq(("m", "Aa", 2L), ("m", "Zz", 3L)))
+    val mFiles = t.readWhere("kind", "m").inputFiles
+    assert(mFiles.nonEmpty && mFiles.forall(_.contains("/__kind=m/__bucket=b")),
+      s"a one-kind read must open only that kind's bucket files: ${mFiles.toSeq}")
+    // a delete by key removes the key's rows of every kind in one commit
+    t.deleteKeys("k", Seq("Aa"))
+    assert(t.retainedVersions.last === 1L)
+    assert(rows(t.read()) === Seq(("m", "Zz", 3L)))
+    assert(t.readWhere("kind", "o").count() === 0)
+  }
+
   test("deleteKeys with no intersecting segment is a free no-op") {
     val dir = Files.createTempDirectory("vt_del_noop").toString
     val t = new VersionedTable(spark, dir, schema, statsCol = Some("k"))

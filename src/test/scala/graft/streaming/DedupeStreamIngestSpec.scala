@@ -125,12 +125,12 @@ class DedupeStreamIngestSpec extends SparkSpec {
       .select(concat(lit("c-"), col("doc_id")).as("objectKey"),
         col("text").cast("binary").as("data"))
     docs.write.parquet(streamDir)
-    // engine whose OBJECTS table dies on its next append — the last commit
-    // of the ingest sequence, i.e. the narrow crash window where payload
-    // and map rows are already durable
+    // engine whose index dies on its next append — the crash lands after
+    // the payloads are durable and before the one index commit
     final class FailingOnce(inner: graft.sources.TableStore) extends graft.sources.TableStore {
       @volatile var armed = false
       override def read() = inner.read()
+      override private[graft] def readWhere(c: String, v: String) = inner.readWhere(c, v)
       override def append(df: org.apache.spark.sql.DataFrame): Unit = {
         if (armed) { armed = false; throw new RuntimeException("simulated crash in stream batch") }
         inner.append(df)
@@ -139,27 +139,27 @@ class DedupeStreamIngestSpec extends SparkSpec {
       override def deleteKeys(keyCol: String, keys: Seq[String]): Unit =
         inner.deleteKeys(keyCol, keys)
     }
-    var objectsTable: FailingOnce = null
+    var index: FailingOnce = null
     val engine = new DedupeEngine(spark, root.resolve("idx").toString,
       DedupeSettings(256, 2048, 8, 1), None,
       Some((p, s) => {
-        val inner = new graft.sources.VersionedTable(spark, p, s,
-          statsCol = s.fieldNames.headOption.filter(Set("objectKey", "chunkKey")))
-        if (s.fieldNames.contains("originalLength")) {
-          objectsTable = new FailingOnce(inner); objectsTable
-        } else inner
+        index = new FailingOnce(new graft.sources.VersionedTable(spark, p, s,
+          statsCol = Some("objectKey"), splitCol = Some("kind")))
+        index
       }))
     val ckpt = root.resolve("ckpt").toString
     val objSrc = () => spark.readStream.schema(objSchema).parquet(streamDir)
-    objectsTable.armed = true
+    index.armed = true
     val q = DedupeStreamIngest.start(engine, objSrc(), ckpt)
     val failed = intercept[Exception] { q.processAllAvailable() }
     q.stop()
     assert(failed.getMessage != null)
-    assert(engine.objects.count() === 0, "crash window: no objects row committed yet")
+    assert(engine.objects.count() === 0, "crash window: no objects row committed")
+    assert(engine.objmap.count() === 0, "crash window: no map row committed")
+    assert(engine.payloads.count() > 0, "the payloads landed before the crash")
     // restart from the SAME checkpoint: the failed batch replays (its
     // offsets never committed); the left-anti sees no objects rows, so the
-    // ingest re-runs and purges the orphaned map/payload debris itself
+    // ingest re-runs, and its payload left-anti reuses the orphaned payloads
     val q2 = DedupeStreamIngest.start(engine, objSrc(), ckpt)
     q2.processAllAvailable(); q2.stop()
     val reference = new DedupeEngine(spark, root.resolve("ref-idx").toString,
