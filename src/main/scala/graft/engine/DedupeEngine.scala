@@ -374,10 +374,11 @@ final class DedupeEngine(
     !objects.filter($"objectKey" === key).limit(1).isEmpty
 
   /** The object row and its address-ordered map rows — the one point
-    * lookup every point read goes through: ONE scan of the index for the
-    * key, both kinds at once, never a job per kind. */
+    * lookup every point read goes through: ONE keyed scan of the index,
+    * both kinds at once, never a job per kind; the parquet index opens only
+    * the entries whose objectKey range can hold the key. */
   private def lookup(key: String): Option[(ObjectRow, Seq[MapRow])] = {
-    val rows = index.read().filter($"objectKey" === key).collect()
+    val rows = index.readKeys("objectKey", Seq(key)).collect()
     rows.find(_.getString(0) == "o").map { r =>
       val obj = ObjectRow(
         r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getTimestamp(5))
@@ -422,9 +423,9 @@ final class DedupeEngine(
   /** Point metadata lookup enriched with ordered map + chunk info
     * (reference: SqliteProvider.cs:282-305): [[lookup]]'s union scan, then
     * [[refCounts]] for this object's chunk keys (refcounts are
-    * cross-object, so they need their own pass). Two query executions;
-    * each can add a file-listing job when its scan names more than
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold` segment paths. */
+    * cross-object, so they need their own pass). Two query executions, one
+    * job each: the parquet index lists its files from its manifest, so no
+    * scan adds a file-listing job however many entries it names. */
   def getMetadata(key: String): Option[ObjectMetadata] =
     lookup(key).map { case (obj, mapRows) =>
       ObjectMetadata(obj, mapRows, refCounts(mapRows.map(_.chunkKey).distinct))
@@ -492,14 +493,13 @@ final class DedupeEngine(
   /** Seekable java.io.InputStream over a deduped object (the reference's
     * DedupeStream facade) — each refill resolves the covering chunk via the
     * position lookup (C1) and copies the overlap. Opening costs the same two
-    * query executions as `get` ([[lookup]] + the batched payload fetch —
-    * never one job per chunk; a scan naming more than
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold` segment paths
-    * adds a file-listing job); reads and seeks after open touch no Spark at
-    * all. None for a committed object with no map rows. Diverges
-    * deliberately from two reference bugs (SURVEY §7): reads past EOF return
-    * -1 (not a buffer-offset bail, DedupeStream.cs:89) and seeking to any
-    * position in [0, length] is allowed (DedupeStream.cs:125 rejects
+    * jobs as `get` ([[lookup]] + the batched payload fetch — never one job
+    * per chunk, and no file-listing job: both tables list their files from
+    * their manifests); reads and seeks after open touch no Spark at all.
+    * None for a committed object with no map rows. Diverges deliberately
+    * from two reference bugs (SURVEY §7): reads past EOF return -1 (not a
+    * buffer-offset bail, DedupeStream.cs:89) and seeking to any position
+    * in [0, length] is allowed (DedupeStream.cs:125 rejects
     * offset == Length).
     */
   def openStream(key: String): Option[DedupeObjectStream] =

@@ -128,15 +128,16 @@ final class ParquetPayloadStore(spark: SparkSession, path: String)
 
   override def vacuum(): Unit = table.vacuum()
 
-  /** One filtered scan for the whole key set: an IN predicate (pushed to the
-    * parquet scan, where the ingest-time chunkKey sort makes row-group
-    * footer stats prune almost everything) — exactly ONE Spark job, unlike a
-    * broadcast semi-join whose broadcast build is a job of its own. Point
-    * reads are ≤ a few thousand keys by construction, well within IN-list
-    * planning range. */
+  /** One filtered scan for the whole key set, over only the manifest
+    * entries whose chunkKey stats can hold one of the keys (a bucketed
+    * commit's entry covers one leading character, so most entries are never
+    * opened), with an IN predicate pushed to the parquet scan, where the
+    * ingest-time chunkKey sort makes row-group footer stats prune almost
+    * everything — exactly ONE Spark job, unlike a broadcast semi-join whose
+    * broadcast build is a job of its own. Point reads are ≤ a few thousand
+    * keys by construction, well within IN-list planning range. */
   override def fetch(keys: Seq[String]): Map[String, Array[Byte]] =
-    read().filter(col("chunkKey").isInCollection(keys))
-      .as[(String, Array[Byte])].collect().toMap
+    table.readKeys("chunkKey", keys).as[(String, Array[Byte])].collect().toMap
 }
 
 /**

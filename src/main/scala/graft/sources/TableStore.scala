@@ -22,6 +22,11 @@ trait TableStore {
   private[graft] def readWhere(colName: String, value: String): DataFrame =
     read().filter(org.apache.spark.sql.functions.col(colName) === value)
 
+  /** The rows whose `keyCol` is in `keys`; a [[VersionedTable]] with stats
+    * on that column opens only the entries whose key range can hold one. */
+  private[graft] def readKeys(keyCol: String, keys: Seq[String]): DataFrame =
+    read().filter(org.apache.spark.sql.functions.col(keyCol).isInCollection(keys))
+
   /** Append-only commit of new rows — O(new data) and atomic: readers see
     * all of `df` or none of it. */
   def append(df: DataFrame): Unit

@@ -1,9 +1,15 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{col, concat, count, hex, lit, substring, max => sqlMax, min => sqlMin}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardOpenOption}
+import java.nio.file.attribute.BasicFileAttributes
 import java.util.Base64
 import scala.jdk.CollectionConverters._
 
@@ -147,7 +153,13 @@ object Segment {
  *     (reference semantics: SqliteProvider.cs:522-523); non-intersecting
  *     segment directories are never read, never rewritten;
  *   - `publish(df)` writes a full single-segment snapshot — the compaction
- *     path (O(table), rare by design).
+ *     path (O(table), rare by design);
+ *   - every read (`read`, [[readWhere]], [[readKeys]], [[readVersion]],
+ *     [[readWithVersion]], the tiered fold, `deleteKeys`) scans the files
+ *     of its manifest entries, listed on the driver: the manifest is the
+ *     file index, so Spark starts no listing job however many entries a
+ *     read names, and [[readKeys]] opens only the entries whose key range
+ *     can hold one of its keys (the same stats `deleteKeys` prunes by).
  *
  * With `splitCol`, a commit files its rows apart per value of that column
  * (alphanumeric values: they name directories), so one commit carries
@@ -214,14 +226,68 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
   }
 
   /** The rows of `segs` — an empty frame with the schema when there are
-    * none (before the first commit, or a version whose commits emptied it). */
+    * none (before the first commit, or a version whose commits emptied it).
+    * The one read path: the entries' files are listed here, on the driver,
+    * and handed to Spark as a [[ManifestFileIndex]], so no read starts a
+    * listing job however many entries it names. */
   private def readSegments(segs: Seq[Segment]): DataFrame =
     if (segs.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(segs.map(s => dir.resolve(s.name).toString): _*)
+    else scan(StructType(Nil), Seq(PartitionDirectory(InternalRow.empty, segs.flatMap(entryFiles).toArray)))
+
+  /** The table's rows in `dirs`' files, each row carrying its directory's
+    * values of `partitionSchema`. */
+  private def scan(partitionSchema: StructType, dirs: Seq[PartitionDirectory]): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(ManifestFileIndex(partitionSchema, dirs),
+      partitionSchema, schema, None, new ParquetFileFormat, Map.empty)(spark))
+
+  /** The data files of one manifest entry. A referenced entry that is gone,
+    * or holds no data file, is a missing-file error (which [[asConflict]]
+    * folds into a conflict), never a silently smaller read. */
+  private def entryFiles(s: Segment): Seq[FileStatus] = {
+    val files = listData(dir.resolve(s.name))._1
+    if (files.isEmpty)
+      throw new java.io.FileNotFoundException(
+        s"manifest entry ${s.name} of $path is missing or holds no data file")
+    files
+  }
+
+  /** The data files directly in `p`, and its subdirectories; `_*` markers
+    * and `.*` checksums are neither, partition directories (`__c=v`) are. */
+  private def listData(p: java.nio.file.Path): (Seq[FileStatus], Seq[java.nio.file.Path]) = {
+    val found = listDir(p).filterNot { f =>
+      val n = f.getFileName.toString
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+    }.map(f => f -> Files.readAttributes(f, classOf[BasicFileAttributes]))
+    (found.collect { case (f, a) if a.isRegularFile =>
+      new FileStatus(a.size, false, 1, 32L << 20, a.lastModifiedTime.toMillis, new Path(f.toUri))
+    }, found.collect { case (f, a) if a.isDirectory => f })
+  }
+
+  /** Every directory under `p`, itself included, that holds data files —
+    * the entries a commit just wrote. */
+  private def entriesUnder(p: java.nio.file.Path): Seq[(java.nio.file.Path, Seq[FileStatus])] = {
+    val (files, dirs) = listData(p)
+    (if (files.isEmpty) Nil else Seq(p -> files)) ++ dirs.flatMap(entriesUnder)
+  }
 
   /** Current snapshot as a DataFrame; empty (with schema) before first commit. */
   override def read(): DataFrame = readSegments(currentSnapshot()._2)
+
+  /** Only the entries whose key stats can hold one of `keys` are opened —
+    * when `keyCol` is the stats column; on any other column every entry. */
+  override private[graft] def readKeys(keyCol: String, keys: Seq[String]): DataFrame =
+    readSegments(mayHold(keyCol, keys, currentSnapshot()._2)._1)
+      .filter(col(keyCol).isInCollection(keys))
+
+  /** Split `segs` into the entries that may hold a row keyed by one of
+    * `keys` and the rest. Stats were computed over `statsCol`, so pruning
+    * on any other column would silently skip entries that hold the keys:
+    * a mismatched `keyCol` keeps every entry (correct, just unpruned). */
+  private def mayHold(keyCol: String, keys: Seq[String],
+      segs: Seq[Segment]): (Seq[Segment], Seq[Segment]) =
+    if (statsCol.contains(keyCol)) segs.partition(s => keys.exists(s.mayContain))
+    else (segs, Seq.empty[Segment])
 
   /** On the split column, only the entries filed under `value` are opened. */
   override private[graft] def readWhere(colName: String, value: String): DataFrame =
@@ -386,13 +452,7 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
   override def deleteKeys(keyCol: String, keys: Seq[String]): Unit = {
     if (keys.isEmpty) return
     val (v, segs) = currentSnapshot()
-    // segment stats were computed over statsCol — pruning on any OTHER
-    // column would silently skip segments that hold victims, so a
-    // mismatched keyCol degrades to touching every segment (correct, just
-    // unpruned) instead of a wrong answer
-    val (touched, untouched) =
-      if (statsCol.contains(keyCol)) segs.partition(s => keys.exists(s.mayContain))
-      else (segs, Seq.empty[Segment])
+    val (touched, untouched) = mayHold(keyCol, keys, segs)
     if (touched.isEmpty) return // no segment can hold a victim: free no-op
     asConflict("targeted delete") {
       val survivors = readSegments(touched)
@@ -418,10 +478,9 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
     // a bucketed table the key's leading character. A content-hash key's
     // min/max spans the keyspace, so only one-character buckets let a
     // delete skip segments. The bucket NAME is the hex of that char's
-    // UTF-8 bytes ('b' prefix keeps it inference-proof): Hadoop escapes
-    // '%', ':', '=', … in partition paths, and an escaped on-disk name
-    // recorded unescaped in the manifest would make every later read miss
-    // the path. mayContain reads the per-entry STATS, never the name.
+    // UTF-8 bytes ('b' prefix keeps it inference-proof), so no entry name
+    // needs Hadoop's escaping of '%', ':', '=', … in partition paths.
+    // mayContain reads the per-entry STATS, never the name.
     val parts = splitCol.toSeq.map(c => s"__$c" -> col(c)) ++
       statsCol.filter(_ => bucketed).map(c => "__bucket" -> concat(lit("b"), hex(substring(col(c), 0, 1))))
     val names = parts.map(_._1)
@@ -433,22 +492,21 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
         parts.foldLeft(newData) { case (d, (n, c)) => d.withColumn(n, c) }
           .write.mode("overwrite").partitionBy(names: _*).parquet(segPath.toString)
         // entries, stats and emptiness come from one narrow readback of the
-        // NEW files (the agg prunes to the key column); partition columns
-        // are declared strings, never inferred
+        // NEW files, listed here and tagged with their entry's ordinal (the
+        // agg prunes to the key column); an empty write may list no entry
+        val entries = entriesUnder(segPath)
         val stats =
-          try spark.read.schema(StructType(schema.fields ++ names.map(StructField(_, StringType))))
-            .parquet(segPath.toString)
-            .groupBy(names.map(col): _*)
+          if (entries.isEmpty) Nil
+          else scan(StructType(Seq(StructField("__entry", IntegerType))),
+              entries.zipWithIndex.map { case ((_, files), i) =>
+                PartitionDirectory(InternalRow(i), files.toArray) })
+            .groupBy(col("__entry"))
             .agg(count(lit(1)), statsCol.toSeq.flatMap(c =>
               Seq(sqlMin(col(c)).cast("string"), sqlMax(col(c)).cast("string"))): _*)
             .collect().toSeq
-          catch { // an empty write may leave no files to read
-            case _: org.apache.spark.sql.AnalysisException => Nil
-          }
-        stats.filter(_.getLong(names.size) > 0).map { r =>
-          val sub = names.indices.map(i => s"/${names(i)}=${r.getString(i)}").mkString
-          def stat(i: Int) = statsCol.flatMap(_ => Option(r.getString(names.size + i)))
-          Segment(segName + sub, stat(1), stat(2))
+        stats.filter(_.getLong(1) > 0).map { r =>
+          def stat(i: Int) = statsCol.flatMap(_ => Option(r.getString(1 + i)))
+          Segment(dir.relativize(entries(r.getInt(0))._1).toString, stat(1), stat(2))
         }.sortBy(_.name)
       }
     if (newSegs.isEmpty) deleteRecursively(segPath)
@@ -534,4 +592,24 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
 
   private def deleteRecursively(p: java.nio.file.Path): Unit =
     graft.core.FsUtil.deleteRecursively(p)
+}
+
+/** The files of a [[VersionedTable]] scan, listed on the driver from its
+  * manifest (or, for a commit's stats readback, from the directories it
+  * just wrote): Spark plans the scan from this list and never lists a
+  * directory itself. Partition values, when any, are the table's own
+  * tags, never parsed from paths; no scan filters on them, and Spark does
+  * not re-apply a partition filter after the scan, so one fails loudly. */
+private[sources] final case class ManifestFileIndex(partitionSchema: StructType,
+    dirs: Seq[PartitionDirectory]) extends FileIndex {
+  private def files = dirs.flatMap(_.files)
+  override def rootPaths: Seq[Path] = files.map(_.getPath.getParent).distinct
+  override def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    require(partitionFilters.isEmpty, s"unsupported partition filter: $partitionFilters")
+    dirs
+  }
+  override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+  override def refresh(): Unit = ()
+  override def sizeInBytes: Long = files.map(_.getLen).sum
 }

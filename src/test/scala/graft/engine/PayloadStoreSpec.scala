@@ -5,6 +5,7 @@ import graft.core.DedupeSettings
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
 
 /** The storage-strategy seam (reference: DedupeCallbacks.cs:15-58): the
   * engine must behave identically over the parquet snapshot store and the
@@ -107,6 +108,34 @@ class PayloadStoreSpec extends SparkSpec {
           s"[$label] $op ran $count Spark jobs — the payload prefetch must be ONE batched job, not one per chunk")
       }
     }
+  }
+
+  test("get and openStream stay at 2 Spark jobs over a payload table of more than 32 entries") {
+    // past 32 scan paths Spark lists them with a job of its own; a table
+    // that lists its files from its manifest starts none, and the fetch
+    // opens only the bucket entries its chunk keys can hit
+    val dir = Files.createTempDirectory("graft-ps-entries").toString
+    val e = new DedupeEngine(spark, dir, DedupeSettings(256, 2048, 8, 1))
+    val data = randomBytes(60000, 38)
+    e.write("big", data)
+    (1 to 3).foreach(i => e.write(s"more$i", randomBytes(60000, 38L + i)))
+    val manifests = Files.list(java.nio.file.Paths.get(dir, "payloads")).iterator()
+      .asScala.map(_.getFileName.toString).collect {
+        case n if n.startsWith("manifest-") =>
+          n.stripPrefix("manifest-").stripSuffix(".txt").toLong
+      }.toSeq
+    val entries = Files.readAllLines(
+      java.nio.file.Paths.get(dir, "payloads", s"manifest-${manifests.max}.txt")).asScala
+      .count(_.trim.nonEmpty)
+    assert(entries > 32, s"the payload manifest must hold more than 32 entries, has $entries")
+    val getJobs = jobsDuring(
+      assert(java.util.Arrays.equals(e.get("big").get, data), "get bytes"))
+    val streamJobs = jobsDuring {
+      val st = e.openStream("big").get
+      assert(java.util.Arrays.equals(st.readAllBytes(), data), "stream bytes")
+    }
+    for ((op, count) <- Seq("get" -> getJobs, "openStream" -> streamJobs))
+      assert(count <= 2, s"$op ran $count Spark jobs over $entries payload entries (budget 2)")
   }
 
   test("write of a fresh key stays within its Spark job budget") {

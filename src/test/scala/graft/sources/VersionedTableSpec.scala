@@ -337,6 +337,87 @@ class VersionedTableSpec extends SparkSpec {
     assert(t.readWhere("kind", "o").count() === 0)
   }
 
+  // ------------------------------------------------ keyed reads and the file index
+
+  test("readKeys returns exactly the rows of read().filter(isInCollection), opening only hit entries") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val schema3 = StructType(Seq(StructField("k", StringType), StructField("g", StringType),
+      StructField("n", LongType)))
+    // U+1F4F7 sorts above U+E000..U+FFFF in UTF-8 byte order (Spark's
+    // min/max) but below them in UTF-16 order: the second commit's stats
+    // are [a, camera], and only a UTF-8 compare sees that they cover
+    // privateUse
+    val camera = new String(Character.toChars(0x1F4F7)) + "b"
+    val privateUse = "\uE000z"
+    val commits = Seq(
+      Seq(("Sx", "y", 0L)),
+      Seq(("a", "x", 1L), (privateUse, "y", 2L), (camera, "x", 3L)),
+      Seq(("Aa", "y", 4L), ("Mb", "x", 5L), ("Zc", "y", 6L)),
+      Seq(("\uFFFFq", "x", 7L), ("Ad", "x", 8L)))
+    val keySets = Seq(Seq.empty[String], Seq(privateUse), Seq(camera), Seq("Mb"), Seq("Sx"),
+      Seq("Aa", "Zc", "\uFFFFq"), Seq("nowhere"), Seq("a", "Ad", "missing"))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).sorted.toSeq
+    for (bucketed <- Seq(false, true)) {
+      val dir = Files.createTempDirectory("vt_keys").toString
+      // the first commit lands on a stats-less table: its manifest line has
+      // no stats, like a pre-stats manifest, and must always be opened
+      new VersionedTable(spark, dir, schema3).append(commits.head.toDF("k", "g", "n"))
+      val t = new VersionedTable(spark, dir, schema3, statsCol = Some("k"), bucketed = bucketed)
+      commits.tail.foreach(c => t.append(c.toDF("k", "g", "n")))
+      val statless = t.read().inputFiles.filter(f => !f.contains("__bucket=") && f.contains("/seg-0-"))
+      assert(statless.nonEmpty, "the stats-less first commit is part of the table")
+      for (keyCol <- Seq("k", "g"); keys <- keySets ++ Seq(Seq("x"))) {
+        val label = s"[bucketed=$bucketed $keyCol in ${keys.mkString(",")}]"
+        val got = t.readKeys(keyCol, keys)
+        assert(got.schema === schema3, label)
+        assert(rows(got) === rows(t.read().filter(col(keyCol).isInCollection(keys))), label)
+        // (an empty IN list plans no scan at all, so only non-empty key
+        // sets show which files a read opens)
+        val opened = got.inputFiles.toSet
+        if (keys.nonEmpty && keyCol == "g") // not the stats column: no pruning
+          assert(opened === t.read().inputFiles.toSet, s"$label must open every entry")
+        else if (keys.nonEmpty)
+          assert(statless.forall(opened), s"$label must open the stats-less entry")
+      }
+      // pruning happens: a one-key read opens fewer files than the table has
+      assert(t.readKeys("k", Seq("Mb")).inputFiles.length < t.read().inputFiles.length)
+      if (bucketed) assert(t.readKeys("k", Seq("Mb")).inputFiles
+        .filter(_.contains("__bucket=")).forall(_.contains("__bucket=b4D")), // hex('M')
+        "a bucketed keyed read opens only the key's bucket entries")
+      assert(t.readKeys("k", Nil).count() === 0)
+    }
+  }
+
+  test("a manifest entry that vanished or holds no data file fails reads loudly") {
+    val dir = Files.createTempDirectory("vt_vanished").toString
+    val t = new VersionedTable(spark, dir, schema, statsCol = Some("k"), bucketed = true)
+    t.append(df("Aa" -> 1L, "Mb" -> 2L))
+    t.append(df("Ac" -> 3L, "Zd" -> 4L))
+    val mEntry = segDirs(dir).head + "/__bucket=b4D" // hex('M'), first commit
+    // an entry that holds only marker files lists no data file
+    Files.list(java.nio.file.Paths.get(dir, mEntry)).iterator().asScala.toList
+      .filter(_.getFileName.toString.startsWith("part-")).foreach(Files.delete)
+    def missing(e: Throwable) = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.io.FileNotFoundException])
+    val noData = intercept[Exception](t.read().collect())
+    assert(missing(noData), s"an entry with no data file must be a missing-file error: $noData")
+    assert(missing(intercept[Exception](t.readKeys("k", Seq("Mb")).collect())))
+    // an entry whose directory is gone
+    graft.core.FsUtil.deleteRecursively(java.nio.file.Paths.get(dir, mEntry))
+    val gone = intercept[Exception](t.read().collect())
+    assert(missing(gone), s"a vanished entry must be a missing-file error: $gone")
+    // the read is never quietly smaller, and the fold path reports it as
+    // the conflict it always has
+    implicit val signaler: org.scalatest.concurrent.Signaler =
+      org.scalatest.concurrent.ThreadSignaler
+    org.scalatest.concurrent.TimeLimits.failAfter(
+      org.scalatest.time.Span(120, org.scalatest.time.Seconds)) {
+      intercept[CommitConflictException](t.compact())
+    }
+  }
+
   test("deleteKeys with no intersecting segment is a free no-op") {
     val dir = Files.createTempDirectory("vt_del_noop").toString
     val t = new VersionedTable(spark, dir, schema, statsCol = Some("k"))
