@@ -170,7 +170,10 @@ object DedupeCli {
           case None => Console.err.println(s"not found: $key"); throw CliExit(1)
         }
       case "del" =>
-        val gcd = engine().delete(rest(0))
+        val gcd = try engine().delete(rest(0)) catch {
+          case _: NoSuchElementException =>
+            Console.err.println(s"not found: ${rest(0)}"); throw CliExit(1)
+        }
         println(s"deleted ${rest(0)}; gc'd ${gcd.size} chunks")
       case "clone" =>
         // dedupe-aware copy: index appends only, zero payload I/O (G3)
@@ -200,7 +203,7 @@ object DedupeCli {
               md.chunks.foreach(c => println(
                 f"  chunk ${c.chunkKey} len=${c.length}%7d refs=${c.refCount}"))
             }
-          case None => println(s"not found: ${pos(0)}"); throw CliExit(1)
+          case None => Console.err.println(s"not found: ${pos(0)}"); throw CliExit(1)
         }
       case "list" =>
         // --results = page size, --idxstart = keyset continuation

@@ -38,15 +38,6 @@ final case class ChunkWithData(ref: ChunkRef, data: Array[Byte])
  */
 object Chunker {
 
-  /** Probability of a content boundary per window step is
-    * 2^(-8 * boundaryCheckBytes); expected chunk size is roughly
-    * min + shift * 2^(8*boundaryCheckBytes), capped at max.
-    */
-  def expectedChunkSize(s: DedupeSettings): Double = {
-    val p = math.pow(2.0, -8.0 * s.boundaryCheckBytes)
-    math.min(s.minChunkSize + s.shiftCount / p, s.maxChunkSize.toDouble)
-  }
-
   /** URL-safe unpadded base64(SHA-256(data[off, off+len))). */
   def chunkKey(data: Array[Byte], off: Int, len: Int): String = {
     val md = MessageDigest.getInstance("SHA-256")

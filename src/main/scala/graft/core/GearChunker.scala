@@ -21,11 +21,6 @@ package graft.core
  */
 object GearChunker {
 
-  /** maskBits m => boundary probability 2^-m per byte => expected chunk
-    * size ~ min + 2^m bytes (before the max cap). */
-  def expectedChunkSize(minChunkSize: Int, maskBits: Int, maxChunkSize: Int): Double =
-    math.min(minChunkSize + math.pow(2.0, maskBits), maxChunkSize.toDouble)
-
   private val gear: Array[Long] = {
     var x = 0x9E3779B97F4A7C15L // fixed seed: chunking must be reproducible
     Array.fill(256) {

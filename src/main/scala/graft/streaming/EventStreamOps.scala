@@ -698,12 +698,6 @@ object EventStreamOps {
     val spark = rootSpark.newSession()
     spark.conf.set("spark.sql.shuffle.partitions", "2")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Propagate an explicit state-store provider override from the parent
-    // session (the RocksDB probe sets it there) — newSession() starts from
-    // context defaults, not the parent's runtime conf.
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    scala.util.Try(rootSpark.conf.get(provKey)).toOption
-      .foreach(p => spark.conf.set(provKey, p))
     // No-data micro-batches exist to evict state when a watermark advances
     // with no new input — on a finite replay that eviction is exactly what
     // the two explicit flush DATA batches do, so the automatic ones are
@@ -768,11 +762,6 @@ object EventStreamOps {
     dir
   }
 
-  /** (operatorName, numRowsTotal, stateMemoryBytes) of the last replay's
-    * final pre-flush micro-batch — probe-only telemetry (RocksDbProbe),
-    * never read by a query. */
-  @volatile private[graft] var lastStateOperators: Seq[(String, Long, Long)] = Nil
-
   private def runAppendStaged(spark: SparkSession, sourcePath: String,
       d: java.nio.file.Path, staged: Long, name: String,
       transform: DataFrame => DataFrame, flushTail: Boolean): DataFrame = {
@@ -785,13 +774,6 @@ object EventStreamOps {
       .queryName(name).start()
     try {
       q.processAllAvailable()
-      // last completed progress BEFORE the flush batches: the steady-state
-      // state-operator footprint (rows, bytes, provider) the RocksDB probe
-      // records — the flush batches evict state, understating it
-      lastStateOperators = Option(q.lastProgress)
-        .map(p => p.stateOperators.toSeq.map(s =>
-          (s.operatorName, s.numRowsTotal, s.memoryUsedBytes)))
-        .getOrElse(Nil)
       if (flushTail) {
         // TWO flush batches: watermarks advance at the END of a
         // micro-batch, and state eviction (outer-join NULLs, final

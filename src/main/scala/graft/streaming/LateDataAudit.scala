@@ -64,9 +64,6 @@ object LateDataAudit {
   private val LateWindowHours = 6
   private val LateShiftHours = 1
 
-  /** Dev-probe hook: the last run's per-batch progress lines. */
-  @volatile private[graft] var lastProgressDump: Seq[String] = Nil
-
   private val stageMemo =
     new graft.BenchMemos.CountedMemo[String, Seq[java.nio.file.Path]]("LateDataAudit")
 
@@ -177,11 +174,6 @@ object LateDataAudit {
       q.processAllAvailable()          // main batch + wm-committing no-data batch
       land(1); q.processAllAvailable() // late slice filters against main's wm
       land(2); q.processAllAvailable() // flush advances wm past every real window
-      lastProgressDump = q.recentProgress.toSeq.map { p =>
-        val so = p.stateOperators.headOption
-        s"batch=${p.batchId} rows=${p.numInputRows} wm=${p.eventTime.get("watermark")}" +
-          s" max=${p.eventTime.get("max")} dropped=${so.map(_.numRowsDroppedByWatermark)}"
-      }
       q.recentProgress.flatMap(_.stateOperators)
         .map(_.numRowsDroppedByWatermark).sum
     } finally q.stop()

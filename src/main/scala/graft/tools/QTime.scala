@@ -4,16 +4,16 @@ import org.apache.spark.sql.SparkSession
 /** Generic per-query timer for local iteration: warms each named query
   * once (codegen + scan), clears the session memos, then times a second
   * pass — the same steady-state protocol Bench uses, without running the
-  * whole suite. Usage: runMain graft.tools.QTime <sfDir> <q1,q2,...> [cores]
-  * (cores defaults to 32; pass 8 to reproduce the driver's low-core
-  * scaling runs — r18, the p6 8-core adjudication). */
+  * whole suite. Usage: runMain graft.tools.QTime <sfDir> <q1,q2,...>
+  * Cores come from SPARK_GRAFT_CPUS with Bench's default, so a QTime row
+  * compares with a Bench row. */
 object QTime {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(',').toSeq
-    val cores = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -27,6 +27,22 @@ trait SparkSpec extends AnyFunSuite {
     walk(root)
     out.result()
   }
+
+  /** Spark jobs started while `body` runs. The listener bus is drained
+    * before the count is read, so a slow bus cannot make it come out low. */
+  def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(jobStart: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusBridge.waitUntilEmpty(spark.sparkContext)
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

@@ -127,10 +127,19 @@ class DedupeCliSpec extends SparkSpec {
 
   test("get '-' of a missing key exits 1; a broken downstream pipe exits 3") {
     val dir = newIndex()
-    val missing = intercept[DedupeCli.CliExit](
-      Console.withOut(new java.io.PrintStream(new java.io.ByteArrayOutputStream()))(
-        DedupeCli.run(spark, dir, "get", Array("nope", "-"))))
-    assert(missing.code === 1)
+    // get '-', del and md of a missing key: exit 1, the message on stderr,
+    // nothing on stdout (the data channel)
+    for (cmd <- Seq(Array("get", "nope", "-"), Array("del", "nope"), Array("md", "nope"))) {
+      val out = new java.io.ByteArrayOutputStream()
+      val err = new java.io.ByteArrayOutputStream()
+      val missing = intercept[DedupeCli.CliExit](
+        Console.withOut(new java.io.PrintStream(out))(
+          Console.withErr(new java.io.PrintStream(err))(
+            DedupeCli.run(spark, dir, cmd.head, cmd.tail))))
+      assert(missing.code === 1, s"${cmd.head} of a missing key")
+      assert(err.toString("UTF-8").trim === "not found: nope", s"${cmd.head} stderr")
+      assert(out.size() === 0, s"${cmd.head} must print nothing on stdout")
+    }
     // a sink that fails mid-write (downstream pipe closed): PrintStream
     // swallows the IOException but latches its error flag — the CLI must
     // turn that into exit 3, never silent truncation

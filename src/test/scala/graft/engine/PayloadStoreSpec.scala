@@ -3,8 +3,6 @@ package graft.engine
 import graft.SparkSpec
 import graft.core.DedupeSettings
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import scala.jdk.CollectionConverters._
 
 /** The storage-strategy seam (reference: DedupeCallbacks.cs:15-58): the
@@ -66,19 +64,6 @@ class PayloadStoreSpec extends SparkSpec {
       assert(ex.getMessage == "object key already exists: c", s"[$label] ${ex.getMessage}")
       assert(e.indexStats() === before, s"[$label] a rejected write commits nothing")
     }
-  }
-
-  /** Spark jobs started while `body` runs (the listener bus is async, so
-    * give it a moment before reading the count). */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try { body; Thread.sleep(1500); jobs.get() }
-    finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("openStream + full sequential read executes at most 2 Spark jobs") {

@@ -70,17 +70,8 @@ class JdbcTableStoreSpec extends SparkSpec {
     // a read+sort+collect (several jobs); the JDBC override must run NONE —
     // that is the "never materialize a corpus-proportional objmap through
     // the driver-side publish" contract, observable
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      store.compactSorted(Seq("objectKey"))
-      Thread.sleep(1000) // listener events post asynchronously
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() == 0,
+    val jobs = jobsDuring(store.compactSorted(Seq("objectKey")))
+    assert(jobs == 0,
       "JDBC compact must not execute any Spark job (no driver-side table materialization)")
     assert(store.read().collect().map(_.getString(0)).sorted.toSeq == Seq("a", "b"),
       "rows must be untouched by the no-op compact")
