@@ -244,7 +244,7 @@ object DedupeCli {
           e.chunks.orderBy("chunkKey").collect().foreach(c =>
             println(f"  chunk ${c.chunkKey} len=${c.length}%7d refs=${c.refCount}"))
       case other =>
-        println(s"unknown command: $other"); throw CliExit(2)
+        Console.err.println(s"unknown command: $other"); throw CliExit(2)
     }
   }
 }

@@ -17,11 +17,17 @@ final case class ChunkWithData(ref: ChunkRef, data: Array[Byte])
  *
  * Splits a byte sequence into variable-size chunks at content-defined
  * boundaries so that identical sub-sequences produce identical chunks
- * regardless of surrounding bytes. Boundary rule (behavioral contract of
- * reference src/DedupeLibrary/DedupeLibrary.cs:605-717, re-implemented
- * from scratch as a single-pass index loop — no quadratic buffer growth):
+ * regardless of surrounding bytes. Each profile has ONE boundary rule — a
+ * function from a chunk's start to its end ([[cut]]) — and every entry
+ * point here (batch [[boundaries]], [[chunk]], [[chunkWithData]] and the
+ * bounded-memory [[chunkStream]]) tiles its input with that same rule for
+ * the settings' profile, so batch and stream output agree by construction.
  *
- *   - input of length <= minChunkSize is a single chunk;
+ * The MD5-window profile (behavioral contract of reference
+ * src/DedupeLibrary/DedupeLibrary.cs:605-717, re-implemented from scratch
+ * as a single-pass index loop — no quadratic buffer growth):
+ *
+ *   - a chunk of at most `minChunkSize` remaining bytes is the final chunk;
  *   - otherwise a window of `minChunkSize` bytes slides by `shiftCount`
  *     bytes per step over the current (growing) chunk's tail;
  *   - a boundary fires when the leading `boundaryCheckBytes` bytes of
@@ -29,6 +35,8 @@ final case class ChunkWithData(ref: ChunkRef, data: Array[Byte])
  *     reaches maxChunkSize (so sizes are in [min, max + shift));
  *   - the tail of the input always flushes as a final (possibly short)
  *     chunk.
+ *
+ * The gear profile's rule is [[GearChunker.cut]].
  *
  * Chunk identity: URL-safe unpadded base64 of SHA-256 over the chunk
  * bytes (reference: DedupeCommon.cs:106-111,146-154).
@@ -47,41 +55,49 @@ object Chunker {
 
   def chunkKey(data: Array[Byte]): String = chunkKey(data, 0, data.length)
 
-  /** Compute chunk boundaries as (address, length) pairs tiling
-    * [0, data.length). Single pass over the input; windows are hashed
-    * in place (no per-step allocation beyond the MD5 digest).
-    */
-  def boundaries(data: Array[Byte], s: DedupeSettings): IndexedSeq[(Long, Int)] = {
-    val len = data.length
-    require(len >= 1, "input must be non-empty")
-    if (len <= s.minChunkSize) return IndexedSeq((0L, len))
+  /** End of the chunk that starts at `from` in `buf[from, until)`, by the
+    * settings' profile. Neither rule looks past `from + maxChunkSize +
+    * shiftCount`, so a lookahead buffer that long decides exactly what the
+    * whole input would. */
+  private def cut(buf: Array[Byte], from: Int, until: Int, s: DedupeSettings): Int =
+    if (s.profile == DedupeSettings.GearProfile)
+      GearChunker.cut(buf, from, until, s.minChunkSize, s.maxChunkSize, s.gearMaskBits)
+    else md5Cut(buf, from, until, s)
 
+  /** The MD5-window rule; windows are hashed in place. */
+  private def md5Cut(buf: Array[Byte], from: Int, until: Int, s: DedupeSettings): Int = {
     val md5 = MessageDigest.getInstance("MD5")
+    var winEnd = from + s.minChunkSize // first window covers the chunk's first min bytes
+    while (winEnd < until) {
+      md5.reset()
+      md5.update(buf, winEnd - s.minChunkSize, s.minChunkSize)
+      val h = md5.digest()
+      var zero = true
+      var i = 0
+      while (zero && i < s.boundaryCheckBytes) { zero = h(i) == 0; i += 1 }
+      if (zero || winEnd - from >= s.maxChunkSize) return winEnd
+      winEnd += s.shiftCount
+    }
+    until
+  }
+
+  /** (address, length) pairs tiling [0, len), each chunk ending where
+    * `cutAt(its start)` says. */
+  private[core] def tile(len: Int)(cutAt: Int => Int): IndexedSeq[(Long, Int)] = {
+    require(len >= 1, "input must be non-empty")
     val out = IndexedSeq.newBuilder[(Long, Int)]
-    var chunkStart = 0
-    var winEnd = s.minChunkSize // first window of a chunk covers its first min bytes
-    while (chunkStart < len) {
-      if (winEnd >= len) {
-        out += ((chunkStart.toLong, len - chunkStart))
-        chunkStart = len
-      } else {
-        md5.reset()
-        md5.update(data, winEnd - s.minChunkSize, s.minChunkSize)
-        val h = md5.digest()
-        var zero = true
-        var i = 0
-        while (zero && i < s.boundaryCheckBytes) { zero = h(i) == 0; i += 1 }
-        if (zero || (winEnd - chunkStart) >= s.maxChunkSize) {
-          out += ((chunkStart.toLong, winEnd - chunkStart))
-          chunkStart = winEnd
-          winEnd = chunkStart + s.minChunkSize
-        } else {
-          winEnd += s.shiftCount
-        }
-      }
+    var from = 0
+    while (from < len) {
+      val end = cutAt(from)
+      out += ((from.toLong, end - from))
+      from = end
     }
     out.result()
   }
+
+  /** Chunk boundaries as (address, length) pairs tiling [0, data.length). */
+  def boundaries(data: Array[Byte], s: DedupeSettings): IndexedSeq[(Long, Int)] =
+    tile(data.length)(cut(data, _, data.length, s))
 
   /** Chunk refs (key, length, position, address) for the input. */
   def chunk(data: Array[Byte], s: DedupeSettings): IndexedSeq[ChunkRef] =
@@ -96,35 +112,14 @@ object Chunker {
       ChunkWithData(ChunkRef(chunkKey(slice), clen, pos, addr), slice)
     }
 
-  /** First chunk boundary of the buffer's leading chunk: the batch loop
-    * specialized to chunkStart = 0. `avail >= maxChunkSize + shiftCount`
-    * must hold unless the stream is exhausted (windows are sized so a
-    * boundary always fires inside that lookahead), which is what makes the
-    * per-chunk decisions byte-identical to the batch pass. */
-  private def firstCutMd5(buf: Array[Byte], avail: Int, s: DedupeSettings): Int = {
-    val md5 = MessageDigest.getInstance("MD5")
-    var winEnd = s.minChunkSize
-    while (winEnd < avail) {
-      md5.reset()
-      md5.update(buf, winEnd - s.minChunkSize, s.minChunkSize)
-      val h = md5.digest()
-      var zero = true
-      var i = 0
-      while (zero && i < s.boundaryCheckBytes) { zero = h(i) == 0; i += 1 }
-      if (zero || winEnd >= s.maxChunkSize) return winEnd
-      winEnd += s.shiftCount
-    }
-    avail // stream tail (only reachable at EOF)
-  }
-
   /**
    * Stream chunking with BOUNDED memory (maxChunkSize + shiftCount
    * lookahead) — the ingest path for objects larger than a JVM array
    * (behavioral contract of the reference's Stream consumption,
-   * DedupeLibrary.cs:605-717). Output is byte-identical to
-   * [[DedupeSettings.chunkWithData]] over the same bytes for BOTH profiles:
-   * neither boundary rule ever looks across a committed boundary, so
-   * processing one leading chunk at a time is exact.
+   * DedupeLibrary.cs:605-717). Each chunk is [[cut]] from the head of the
+   * lookahead buffer, which holds the whole lookahead unless the stream is
+   * exhausted, so the output is byte-identical to [[chunkWithData]] over
+   * the same bytes for both profiles.
    */
   def chunkStream(in: java.io.InputStream, s: DedupeSettings): Iterator[ChunkWithData] =
     new Iterator[ChunkWithData] {
@@ -145,16 +140,13 @@ object Chunker {
 
       override def next(): ChunkWithData = {
         if (!hasNext) throw new NoSuchElementException("stream exhausted")
-        val cut =
-          if (s.profile == DedupeSettings.GearProfile)
-            GearChunker.firstCut(buf, avail, s.minChunkSize, s.maxChunkSize, s.gearMaskBits)
-          else firstCutMd5(buf, avail, s)
-        val slice = java.util.Arrays.copyOfRange(buf, 0, cut)
-        val ref = ChunkRef(chunkKey(slice), cut, pos, address)
-        address += cut
+        val end = cut(buf, 0, avail, s)
+        val slice = java.util.Arrays.copyOfRange(buf, 0, end)
+        val ref = ChunkRef(chunkKey(slice), end, pos, address)
+        address += end
         pos += 1
-        System.arraycopy(buf, cut, buf, 0, avail - cut)
-        avail -= cut
+        System.arraycopy(buf, end, buf, 0, avail - end)
+        avail -= end
         ChunkWithData(ref, slice)
       }
     }

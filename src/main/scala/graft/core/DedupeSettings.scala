@@ -45,15 +45,7 @@ final case class DedupeSettings(
 
   /** Chunk with this settings' profile (same identity scheme either way). */
   def chunkWithData(data: Array[Byte]): IndexedSeq[ChunkWithData] =
-    if (profile == DedupeSettings.GearProfile)
-      GearChunker.chunkWithData(data, minChunkSize, maxChunkSize, gearMaskBits)
-    else Chunker.chunkWithData(data, this)
-
-  /** Stream-chunk with this settings' profile: output identical to
-    * [[chunkWithData]] over the same bytes, memory bounded by
-    * maxChunkSize + shiftCount — for objects larger than a JVM array. */
-  def chunkStream(in: java.io.InputStream): Iterator[ChunkWithData] =
-    Chunker.chunkStream(in, this)
+    Chunker.chunkWithData(data, this)
 
   /** Serialize for the config table (reference: DedupeLibrary.cs:589-592 keys
     * + the profile extension). */

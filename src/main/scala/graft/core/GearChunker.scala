@@ -6,14 +6,16 @@ package graft.core
  * hash advanced per byte as `h = (h << 1) + gear(b)`, boundary when
  * `h & mask == 0` past minChunkSize, hard cap at maxChunkSize.
  *
- * This is the opt-in THROUGHPUT profile next to `Chunker` (the
- * reference-fidelity MD5-window rule, reference
+ * This is the opt-in THROUGHPUT profile next to the reference-fidelity
+ * MD5-window rule in `Chunker` (reference
  * src/DedupeLibrary/DedupeLibrary.cs:605-717): the MD5 rule re-hashes a
  * full minChunkSize window every shiftCount bytes — ~minChunkSize/shiftCount
  * x work amplification — while the gear hash reads each input byte exactly
  * once. Chunk identity stays urlsafe-unpadded-base64(SHA-256), so the two
  * profiles differ only in WHERE boundaries fall, not in how chunks are
  * keyed; each index persists its profile so reads/writes stay consistent.
+ * The rule lives in one function, [[cut]]; every `Chunker` entry point,
+ * batch and stream, routes a gear settings to it.
  *
  * Deterministic: the gear table derives from a fixed seed via
  * SplitMix64, so identical (bytes, params) produce identical chunks on
@@ -33,70 +35,28 @@ object GearChunker {
     }
   }
 
-  /** Chunk boundaries as (address, length) pairs tiling [0, data.length).
-    * One pass, one table lookup + shift + add per byte. */
-  def boundaries(data: Array[Byte], minChunkSize: Int, maxChunkSize: Int,
-      maskBits: Int): IndexedSeq[(Long, Int)] = {
-    val len = data.length
-    require(len >= 1, "input must be non-empty")
-    require(maskBits >= 8 && maskBits <= 48, "maskBits in [8,48]")
-    val mask = (1L << maskBits) - 1
-    val out = IndexedSeq.newBuilder[(Long, Int)]
-    var start = 0
-    while (start < len) {
-      val hardEnd = math.min(start + maxChunkSize, len)
-      var i = start + minChunkSize
-      var cut = hardEnd
-      if (i < hardEnd) {
-        var h = 0L
-        var done = false
-        while (!done && i < hardEnd) {
-          h = (h << 1) + gear(data(i) & 0xff)
-          if ((h & mask) == 0L) { cut = i + 1; done = true }
-          i += 1
-        }
-      }
-      out += ((start.toLong, cut - start))
-      start = cut
-    }
-    out.result()
-  }
-
-  /** First boundary of the buffer's leading chunk (the batch loop
-    * specialized to start = 0); `avail >= maxChunkSize` must hold unless
-    * the stream is exhausted. Backs [[Chunker.chunkStream]]. */
-  private[core] def firstCut(buf: Array[Byte], avail: Int, minChunkSize: Int,
+  /** End of the chunk that starts at `from` in `buf[from, until)`: the
+    * first byte past minChunkSize whose rolling hash clears the mask, else
+    * the hard cap at maxChunkSize (or `until`). One table lookup + shift +
+    * add per byte. */
+  private[core] def cut(buf: Array[Byte], from: Int, until: Int, minChunkSize: Int,
       maxChunkSize: Int, maskBits: Int): Int = {
     val mask = (1L << maskBits) - 1
-    val hardEnd = math.min(maxChunkSize, avail)
-    var i = minChunkSize
-    var cut = hardEnd
-    if (i < hardEnd) {
-      var h = 0L
-      var done = false
-      while (!done && i < hardEnd) {
-        h = (h << 1) + gear(buf(i) & 0xff)
-        if ((h & mask) == 0L) { cut = i + 1; done = true }
-        i += 1
-      }
+    val hardEnd = math.min(from + maxChunkSize, until)
+    var i = from + minChunkSize
+    var h = 0L
+    while (i < hardEnd) {
+      h = (h << 1) + gear(buf(i) & 0xff)
+      if ((h & mask) == 0L) return i + 1
+      i += 1
     }
-    cut
+    hardEnd
   }
 
-  /** Chunk refs with the same identity scheme as the MD5-window chunker. */
-  def chunk(data: Array[Byte], minChunkSize: Int, maxChunkSize: Int,
-      maskBits: Int): IndexedSeq[ChunkRef] =
-    boundaries(data, minChunkSize, maxChunkSize, maskBits).zipWithIndex.map {
-      case ((addr, clen), pos) =>
-        ChunkRef(Chunker.chunkKey(data, addr.toInt, clen), clen, pos, addr)
-    }
-
-  /** Chunk refs plus payload slices (for ingest). */
-  def chunkWithData(data: Array[Byte], minChunkSize: Int, maxChunkSize: Int,
-      maskBits: Int): IndexedSeq[ChunkWithData] =
-    boundaries(data, minChunkSize, maxChunkSize, maskBits).zipWithIndex.map {
-      case ((addr, clen), pos) =>
-        val slice = java.util.Arrays.copyOfRange(data, addr.toInt, addr.toInt + clen)
-        ChunkWithData(ChunkRef(Chunker.chunkKey(slice), clen, pos, addr), slice)
-    }
+  /** Chunk boundaries as (address, length) pairs tiling [0, data.length). */
+  def boundaries(data: Array[Byte], minChunkSize: Int, maxChunkSize: Int,
+      maskBits: Int): IndexedSeq[(Long, Int)] = {
+    require(maskBits >= 8 && maskBits <= 48, "maskBits in [8,48]")
+    Chunker.tile(data.length)(cut(data, _, data.length, minChunkSize, maxChunkSize, maskBits))
+  }
 }

@@ -228,7 +228,7 @@ final class DedupeEngine(
     admit(Seq(key).toDF("objectKey"))
     val stage = s"$basePath/.stage-${java.util.UUID.randomUUID().toString.take(8)}"
     try {
-      val it = settings.chunkStream(in)
+      val it = Chunker.chunkStream(in, settings)
       require(it.hasNext, "data required")
       val batch = scala.collection.mutable.ArrayBuffer.empty[graft.core.ChunkWithData]
       var batchSize = 0L

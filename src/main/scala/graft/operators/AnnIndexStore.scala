@@ -204,8 +204,9 @@ object AnnIndexStore {
 
   /** Physically apply accumulated tombstones: republish the coded table
     * without the deleted rows, then subtract EXACTLY the applied set from
-    * the tombstone table — both CAS-retried version flips (claim pinned
-    * to the version read; conflict → re-read and retry), so a concurrent
+    * the tombstone table — both CAS-retried version flips
+    * ([[VersionedTable.rewrite]]: claim pinned to the version read;
+    * conflict → re-read and retry), so a concurrent
     * reader serves either the (tombstone-masked) old version or the
     * compacted new one, identical answers by construction (the spec
     * asserts the identity), and concurrent deleteIds/appendIncrement
@@ -230,7 +231,7 @@ object AnnIndexStore {
       // against concurrent appendIncrement commits: an unconditional
       // publish re-reads the version at claim time with keepSegs = Nil,
       // so an increment landing mid-compaction would be silently dropped.
-      casPublish(codedT, "coded compaction") { coded =>
+      codedT.rewrite("coded compaction") { coded =>
         coded.join(applied, Seq("neighbor_id"), "left_anti") }
       // Writeback 2 — clear ONLY the applied set. Publishing an empty
       // table here was the r12 lost-delete finding: a deleteIds commit
@@ -240,35 +241,12 @@ object AnnIndexStore {
       // the applied set, CAS'd on the exact version diffed — a concurrent
       // delete that wins the claim re-enters the loop with its ids in the
       // residual.
-      casPublish(tombsT, "tombstone clear") { cur =>
+      tombsT.rewrite("tombstone clear") { cur =>
         cur.join(applied, Seq("neighbor_id"), "left_anti") }
     } finally {
       try applied.unpersist() catch { case _: Throwable => () }
     }
   }
-
-  /** One CAS-retried read-modify-write round: read (version, snapshot),
-    * transform, materialize, publish pinned to version+1; a lost claim
-    * OR a mid-read segment retirement (the r13 advisor race: the lazy
-    * snapshot's files can vanish before localCheckpoint materializes
-    * them — asConflict folds that into the same conflict) re-enters with
-    * a fresh read. Each attempt's checkpointed blocks are unpersisted
-    * win or lose, so conflict storms don't pin executor storage. */
-  private def casPublish(t: VersionedTable, op: String)
-      (transform: DataFrame => DataFrame): Unit =
-    retryConflicts(op) {
-      var pinned: Option[DataFrame] = None
-      try {
-        val (v, out) = t.asConflict(s"$op read") {
-          val (v0, snap) = t.readWithVersion()
-          // materialize BEFORE the publish swaps manifests
-          (v0, transform(snap).localCheckpoint())
-        }
-        pinned = Some(out)
-        t.publishIfVersion(out, v)
-      } finally pinned.foreach(df =>
-        try df.unpersist() catch { case _: Throwable => () })
-    }
 
   /** Segment count of the coded table — the append-cost witness the
     * lifecycle spec asserts (base publish + one O(new) append = 2). */

@@ -395,7 +395,7 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
 
   /** Current snapshot WITH its version — for read-modify-write callers
     * that must CAS their writeback against concurrent commits (pair with
-    * [[publishIfVersion]]; see AnnIndexStore.compactDeletes). */
+    * [[publishIfVersion]], as [[rewrite]] does). */
   def readWithVersion(): (Long, DataFrame) = {
     val (v, segs) = currentSnapshot()
     (v, readSegments(segs))
@@ -413,25 +413,30 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
     commit(expected, Nil, df)
 
   /** Rewrite the current contents into a single segment (manifest GC).
-    * CAS-retried internally: compaction is pure read-modify-write, so an
-    * unconditional publish would erase any commit that landed between
-    * the read and the writeback — instead each attempt pins (version,
-    * rows) and claims version+1, re-reading on conflict. Answer-neutral
-    * by construction either way; the retry makes it LOSSLESS under
-    * concurrent writers too. The retry is bounded with backoff
-    * ([[CommitConflictException.retryConflicts]]): a conflict that never
-    * clears — a referenced segment deleted out from under the manifest —
-    * surfaces as a [[CommitConflictException]] instead of a hot spin. */
-  def compact(): Unit =
-    CommitConflictException.retryConflicts(s"compaction of $path") {
+    * Compaction is pure read-modify-write, so it goes through [[rewrite]]:
+    * an unconditional publish would erase any commit that landed between
+    * the read and the writeback. Answer-neutral by construction; the CAS
+    * makes it LOSSLESS under concurrent writers too. */
+  def compact(): Unit = rewrite(s"compaction of $path")(identity)
+
+  /** One CAS-retried read-modify-write of the whole table: each attempt
+    * reads (version, rows), applies `transform`, materializes the result
+    * and claims exactly version+1 ([[publishIfVersion]]); a lost claim OR
+    * a mid-read segment retirement (the lazy snapshot's files can vanish
+    * before localCheckpoint materializes them — [[asConflict]] folds that
+    * into the same conflict) re-enters with a fresh read. The retry is
+    * bounded with backoff ([[CommitConflictException.retryConflicts]]): a
+    * conflict that never clears — a referenced segment deleted out from
+    * under the manifest — surfaces as a [[CommitConflictException]]
+    * instead of a hot spin. */
+  private[graft] def rewrite(op: String)(transform: DataFrame => DataFrame): Unit =
+    CommitConflictException.retryConflicts(op) {
       var pinned: Option[DataFrame] = None
       try {
-        // the read + eager checkpoint can itself race a faster writer's
-        // segment retirement — asConflict folds that missing-file failure
-        // into the same retryable conflict as a lost manifest claim
-        val (v, df) = asConflict("compaction read") {
+        val (v, df) = asConflict(s"$op read") {
           val (v0, d0) = readWithVersion()
-          (v0, d0.localCheckpoint())
+          // materialize BEFORE the publish swaps manifests
+          (v0, transform(d0).localCheckpoint())
         }
         pinned = Some(df)
         publishIfVersion(df, v)

@@ -19,6 +19,7 @@ import org.apache.spark.sql.functions._
   *   - dimension tables (region, nation) stay single-copy, like real dims.
   *
   * Usage: runMain graft.tools.ScaleUp [srcDir] [outDir] [copies]
+  * Cores come from `SPARK_GRAFT_CPUS` (default 4, as Bench, Verify, QTime).
   * Then:  SPARK_GRAFT_SF_DIR=<outDir> runMain graft.Bench
   */
 object ScaleUp {
@@ -26,7 +27,7 @@ object ScaleUp {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

@@ -207,9 +207,15 @@ class DedupeCliSpec extends SparkSpec {
 
   test("unknown command exits 2") {
     val dir = newIndex()
+    val out = new java.io.ByteArrayOutputStream()
+    val err = new java.io.ByteArrayOutputStream()
     val e = intercept[DedupeCli.CliExit](
-      captureOut(DedupeCli.run(spark, dir, "frobnicate", Array())))
+      Console.withOut(new java.io.PrintStream(out))(
+        Console.withErr(new java.io.PrintStream(err))(
+          DedupeCli.run(spark, dir, "frobnicate", Array()))))
     assert(e.code === 2)
+    assert(err.toString("UTF-8").trim === "unknown command: frobnicate")
+    assert(out.size() === 0, "the message must not land on stdout, the data channel")
   }
 
   test("parseArgs splits positionals from --flags") {

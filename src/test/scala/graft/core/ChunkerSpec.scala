@@ -72,6 +72,23 @@ class ChunkerSpec extends AnyFunSuite {
     }
   }
 
+  test("every entry point chunks by the settings' profile, batch and stream alike") {
+    for (p <- Seq(DedupeSettings.Md5Profile, DedupeSettings.GearProfile))
+      forAll(bytesGen, settingsGen) { (data, s0) =>
+        val s = s0.copy(profile = p)
+        val expected = s.chunkWithData(data).map(_.ref)
+        val spans = expected.map(r => (r.address, r.length))
+        val streamed = Chunker.chunkStream(new java.io.ByteArrayInputStream(data), s)
+        assert(streamed.map(_.ref).toIndexedSeq == expected, s"chunkStream ($p)")
+        assert(Chunker.chunk(data, s) == expected, s"chunk ($p)")
+        assert(Chunker.chunkWithData(data, s).map(_.ref) == expected, s"chunkWithData ($p)")
+        assert(Chunker.boundaries(data, s) == spans, s"boundaries ($p)")
+        if (p == DedupeSettings.GearProfile)
+          assert(GearChunker.boundaries(data, s.minChunkSize, s.maxChunkSize,
+            s.gearMaskBits) == spans, "GearChunker.boundaries")
+      }
+  }
+
   test("chunkKey is urlsafe unpadded base64 of sha256") {
     val data = "hello world".getBytes("UTF-8")
     val md = java.security.MessageDigest.getInstance("SHA-256")

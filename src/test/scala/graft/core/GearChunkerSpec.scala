@@ -9,6 +9,8 @@ class GearChunkerSpec extends AnyFunSuite {
   private val min = 256
   private val max = 2048
   private val maskBits = 9 // expected chunk ~ min + 512
+  /** The gear settings whose derived mask width is `maskBits`. */
+  private val gearSettings = DedupeSettings(min, max, 2, 1, DedupeSettings.GearProfile)
 
   private def sample[A](g: Gen[A], seed: Long): A =
     g.apply(Gen.Parameters.default, Seed(seed)).get
@@ -36,20 +38,22 @@ class GearChunkerSpec extends AnyFunSuite {
   }
 
   test("deterministic: identical input => identical chunk keys") {
+    assert(gearSettings.gearMaskBits == maskBits)
     (1 to 10).foreach { i =>
       val data = sample(bytesGen, 2000 + i)
-      val a = GearChunker.chunk(data, min, max, maskBits)
-      val b = GearChunker.chunk(data.clone(), min, max, maskBits)
+      val a = Chunker.chunk(data, gearSettings)
+      val b = Chunker.chunk(data.clone(), gearSettings)
       assert(a == b)
     }
   }
 
   test("CDC realignment: a prefix edit re-synchronizes chunk keys") {
+    assert(gearSettings.gearMaskBits == maskBits)
     val r = new scala.util.Random(7)
     val data = new Array[Byte](40000); r.nextBytes(data)
     val edited = Array.fill(100)(r.nextInt().toByte) ++ data
-    val orig = GearChunker.chunk(data, min, max, maskBits).map(_.chunkKey).toSet
-    val after = GearChunker.chunk(edited, min, max, maskBits).map(_.chunkKey)
+    val orig = Chunker.chunk(data, gearSettings).map(_.chunkKey).toSet
+    val after = Chunker.chunk(edited, gearSettings).map(_.chunkKey)
     val shared = after.count(orig.contains)
     assert(shared * 2 > after.size,
       s"expected most chunks to realign after a prefix edit, shared=$shared/${after.size}")
