@@ -114,8 +114,9 @@ object DedupeCli {
         //
         // --offset/--length slice mid-object through the seekable stream
         // (the reference exposes the same seek/read surface interactively,
-        // Test.ReadStream/Program.cs:169-264); only the covering chunks'
-        // payloads are touched. The requested slice must lie entirely
+        // Test.ReadStream/Program.cs:169-264); opening the stream fetches
+        // every chunk's payload in one job, and the slice copies only the
+        // covering chunks' bytes. The requested slice must lie entirely
         // within the object — a CLI byte-range is a contract, so a slice
         // past EOF is a loud exit 4, never a silent short read.
         val (pos, flags) = parseArgs(rest)

@@ -44,7 +44,10 @@ object FsUtil {
     * was set to avoid) — and tmpfs is only chosen while it has usable
     * headroom (r17 advisor: /dev/shm is typically capped at 50% of RAM, and
     * an ENOSPC mid-bench at a larger SF would fail where the old
-    * disk-backed /tmp succeeded). */
+    * disk-backed /tmp succeeded). Every scratch dir in the library comes
+    * from here: the session memos' entries (`BenchMemos.CountedMemo`), the
+    * replay harness's staging, checkpoint, sink and flush dirs, and
+    * [[streamableDir]]'s copies. */
   private[graft] val ScratchMinUsableBytes = 8L * 1024 * 1024 * 1024
   def scratchDir(prefix: String): Path =
     scratchDir(prefix, sys.env.get("GRAFT_SCRATCH_DIR"))
@@ -67,5 +70,22 @@ object FsUtil {
       else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
     }
     Files.createTempDirectory(root, prefix)
+  }
+
+  private val streamable = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** A directory a file-stream source can read `path` from: `path` itself
+    * when it is not a regular file, else a [[scratchDir]] holding one copy
+    * of the file. The copy is made once per path per JVM — repeated stream
+    * runs (specs, bench warm+timed) share it — and deleted at exit. */
+  def streamableDir(path: String, prefix: String): String = {
+    val p = java.nio.file.Paths.get(path)
+    if (!Files.isRegularFile(p)) path
+    else streamable.computeIfAbsent(path, _ => {
+      val d = scratchDir(prefix)
+      deleteOnExitRecursively(d)
+      Files.copy(p, d.resolve(p.getFileName))
+      d.toString
+    })
   }
 }

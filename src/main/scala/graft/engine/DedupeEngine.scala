@@ -3,6 +3,8 @@ package graft.engine
 import graft.core.{Chunker, DedupeSettings}
 import graft.sources.{TableStore, VersionedTable}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.sql.Timestamp
@@ -173,11 +175,7 @@ final class DedupeEngine(
   /** Store one object through `ingest` — so through [[admit]], which
     * rejects a duplicate key like the reference (DedupeLibrary.cs:203)
     * before any commit. */
-  def write(key: String, data: Array[Byte]): Unit = {
-    require(key != null && key.nonEmpty, "object key required")
-    require(data != null && data.nonEmpty, "data required")
-    ingest(Seq(key -> data))
-  }
+  def write(key: String, data: Array[Byte]): Unit = ingest(Seq(key -> data))
 
   /** Upsert of a whole object (reference: DedupeLibrary.cs:301-318). */
   def writeOrReplace(key: String, data: Array[Byte]): Unit = {
@@ -190,10 +188,17 @@ final class DedupeEngine(
    * flatMap (pure function, no driver round-trips), runs [[admit]] over the
    * batch's keys (one position-0 chunk row per object), then hands the
    * single chunked dataset to [[commitChunks]], which derives the payload
-   * and index commits from it. No per-object loop.
+   * and index commits from it. No per-object loop. A driver-side batch
+   * is checked here first: every key and every object must be non-empty
+   * (the chunker tiles at least one byte).
    */
-  def ingest(batch: Seq[(String, Array[Byte])]): Unit =
+  def ingest(batch: Seq[(String, Array[Byte])]): Unit = {
+    batch.foreach { case (key, data) =>
+      require(key != null && key.nonEmpty, "object key required")
+      require(data != null && data.nonEmpty, s"data required: object '$key' is empty")
+    }
     ingest(spark.createDataset(batch))
+  }
 
   def ingest(ds: Dataset[(String, Array[Byte])]): Unit = {
     val s = settings
@@ -312,22 +317,33 @@ final class DedupeEngine(
     * binaryFile materializes each file as ONE row, so files beyond
     * `maxObjectBytes` (JVM array bound by default) are rejected loudly
     * up front — from a status-only scan, before any payload bytes move —
-    * with a pointer to the [[writeStream] ] path that handles them. */
+    * with a pointer to the [[writeStream] ] path that handles them. Empty
+    * files, which hold no chunk to store, are rejected up front too. */
   def ingestDirectory(path: String,
       maxObjectBytes: Long = DedupeEngine.MaxObjectBytes): Unit = {
     val root = java.nio.file.Paths.get(path).toAbsolutePath.normalize.toString
-    val oversized = spark.read.format("binaryFile")
+    val listed = spark.read.format("binaryFile")
       .option("recursiveFileLookup", "true").load(path)
+    // binaryFile's scan never sees a zero-length file (its file index lists
+    // it but plans no split for it), so the lengths come from that listing
+    val empty = listed.queryExecution.analyzed
+      .collect { case r: LogicalRelation => r.relation }
+      .collect { case r: HadoopFsRelation => r.location }
+      .collect { case i: PartitioningAwareFileIndex => i.allFiles() }
+      .flatten.filter(_.getLen == 0).map(_.getPath.toString).take(3)
+    val oversized = listed
       .select($"path", $"length") // file-status columns only: no content read
       .filter($"length" > maxObjectBytes)
       .limit(3).collect()
-    if (oversized.nonEmpty)
-      throw new IllegalArgumentException(
+    val problems =
+      (if (empty.isEmpty) Nil
+       else Seq(s"empty file(s) hold no object to ingest: ${empty.mkString(", ")}")) ++
+      (if (oversized.isEmpty) Nil else Seq(
         s"file(s) exceed the $maxObjectBytes-byte single-row ingest bound: " +
           oversized.map(r => s"${r.getString(0)} (${r.getLong(1)} B)").mkString(", ") +
-          " ...; ingest oversized objects individually via writeStream")
-    val files = spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true").load(path)
+          " ...; ingest oversized objects individually via writeStream"))
+    if (problems.nonEmpty) throw new IllegalArgumentException(problems.mkString("; "))
+    val files = listed
       .select($"path", $"content")
       .as[(String, Array[Byte])]
       .map { case (p, bytes) =>

@@ -2,10 +2,11 @@ package graft.engine
 
 /**
  * Seekable read-only stream over a deduped object (reference:
- * src/DedupeLibrary/DedupeStream.cs:13-175). Holds only the object map in
- * memory; chunk payloads are fetched on demand through `fetch` and the
- * current chunk is cached, so sequential reads fetch each chunk exactly
- * once and random access fetches only the covering chunk.
+ * src/DedupeLibrary/DedupeStream.cs:13-175). Reads resolve the covering
+ * chunk through `fetch` and cache the current chunk. `fetch` is a
+ * lookup, not a read: [[DedupeEngine.openStream]] hands in every chunk's
+ * payload, fetched in one job when the stream opens, so reads and seeks
+ * touch no storage.
  */
 final class DedupeObjectStream(
     val length: Long,

@@ -81,8 +81,8 @@ object AnnIndexStore {
     // back-fill each other's stragglers. Safety: each publish targets its
     // OWN VersionedTable directory (per-directory manifests — no shared
     // commit state, so cross-TABLE ordering does not exist to violate);
-    // the session memos are CountedMemo (ConcurrentHashMap) — per-key
-    // serialization keeps one build per memo; `coded` is sequenced after
+    // the session memos are CountedMemo — per-key serialization keeps
+    // one build per key; `coded` is sequenced after
     // both quantizer futures, so it reads settled memo entries only.
     // AnnIndexStoreSpec pins read-after-persist equivalence.
     runChains(3) { implicit ec =>
@@ -354,8 +354,8 @@ object AnnIndexStore {
     * either returns a legal answer or surfaces the bounded-retry
     * diagnostic. At 100 TB the equivalent knob is snapshot retention
     * (Delta/Iceberg hold N days of manifests so readers never lag out);
-    * with a one-version grace window the retry IS the retention policy,
-    * and tools/CasLiveness `rc` prices what it costs. */
+    * with a one-version grace window the retry IS the retention policy;
+    * BASELINE.md's r17 section prices what it costs. */
   def serveTopKPinned(spark: SparkSession, dir: String, root: String)
       : Array[org.apache.spark.sql.Row] =
     retryConflicts("serve under concurrent writers") {
@@ -424,21 +424,12 @@ object AnnIndexStore {
     }
   }
 
-  /** Staging root memo for the v19/v21 driver rows: one persist per
-    * (session, corpus, variant), after which every serve is storage-only. */
-  private val rootMemo =
-    new graft.BenchMemos.CountedMemo[String, String]("AnnIndexStore")
-
-  private[graft] def clearMemo(): Unit = {
-    // delete the superseded roots NOW, not at JVM exit: the bench's
-    // warm→timed cycle re-persists after a clear, and a corpus-sized
-    // coded table held twice doubles the suite's disk footprint at sf1
-    rootMemo.values().forEach(r =>
-      try graft.core.FsUtil.deleteRecursively(java.nio.file.Paths.get(r))
-      catch { case _: Throwable => () })
-    rootMemo.clear()
-  }
-
+  /** Staging root memo for the v19/v21/v23/v24 driver rows: one persist
+    * per (session, corpus, variant), after which every serve is
+    * storage-only. A clear deletes the superseded roots at once: the
+    * bench's warm→timed cycle re-persists, and a corpus-sized coded table
+    * held twice doubles the suite's disk footprint at sf1. */
+  private[graft] val memo = new graft.BenchMemos.CountedMemo("AnnIndexStore")
 
   /** v21: the full index-maintenance lifecycle as a driver query —
     * train-on-standing-corpus → persist → the increment arrives and is
@@ -451,14 +442,11 @@ object AnnIndexStore {
     * in the index is touched — which is the entire point of the
     * manifest-based table under it. */
   def v21IndexAppend(spark: SparkSession, dir: String): DataFrame = {
-    val root = rootMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}|$dir|incr", _ => {
-        val d = graft.core.FsUtil.scratchDir("graft-annidx-incr")
-        graft.core.FsUtil.deleteOnExitRecursively(d)
-        persistOldTrained(spark, dir, d.toString)
-        appendIncrement(spark, dir, d.toString, col("vec_id") % 7 === 0)
-        d.toString
-      })
+    val root = memo.withScratch(spark, dir, "graft-annidx-incr", tag = "incr") { d =>
+      persistOldTrained(spark, dir, d.toString)
+      appendIncrement(spark, dir, d.toString, col("vec_id") % 7 === 0)
+      d.toString
+    }
     serveTopK(spark, dir, root)
   }
 
@@ -477,14 +465,11 @@ object AnnIndexStore {
     * serve adds one broadcast anti-join on an id set — the index body
     * is never rewritten until [[compactDeletes]] chooses to. */
   def v23IndexDelete(spark: SparkSession, dir: String): DataFrame = {
-    val root = rootMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}|$dir|del", _ => {
-        val d = graft.core.FsUtil.scratchDir("graft-annidx-del")
-        graft.core.FsUtil.deleteOnExitRecursively(d)
-        persist(spark, dir, d.toString)
-        deleteIds(spark, dir, d.toString)
-        d.toString
-      })
+    val root = memo.withScratch(spark, dir, "graft-annidx-del", tag = "del") { d =>
+      persist(spark, dir, d.toString)
+      deleteIds(spark, dir, d.toString)
+      d.toString
+    }
     serveTopK(spark, dir, root)
   }
 
@@ -510,14 +495,11 @@ object AnnIndexStore {
     * segments); the retention horizon is the commit loop's grace-window
     * constant, widened by policy on a production lake. */
   def v24TimeTravel(spark: SparkSession, dir: String): DataFrame = {
-    val root = rootMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}|$dir|tt", _ => {
-        val d = graft.core.FsUtil.scratchDir("graft-annidx-tt")
-        graft.core.FsUtil.deleteOnExitRecursively(d)
-        persistOldTrained(spark, dir, d.toString)
-        appendIncrement(spark, dir, d.toString, col("vec_id") % 7 === 0)
-        d.toString
-      })
+    val root = memo.withScratch(spark, dir, "graft-annidx-tt", tag = "tt") { d =>
+      persistOldTrained(spark, dir, d.toString)
+      appendIncrement(spark, dir, d.toString, col("vec_id") % 7 === 0)
+      d.toString
+    }
     val codedT = table(spark, root, "coded", codedSchema)
     codedT.retainedVersions.map { v =>
       codedT.readVersion(v)
@@ -534,13 +516,10 @@ object AnnIndexStore {
     * is v12's SQL verbatim: a hash-match proves the whole
     * persist→reopen→serve cycle loses nothing. */
   def v19PersistedServe(spark: SparkSession, dir: String): DataFrame = {
-    val root = rootMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}|$dir", _ => {
-        val d = graft.core.FsUtil.scratchDir("graft-annidx")
-        graft.core.FsUtil.deleteOnExitRecursively(d)
-        persist(spark, dir, d.toString)
-        d.toString
-      })
+    val root = memo.withScratch(spark, dir, "graft-annidx") { d =>
+      persist(spark, dir, d.toString)
+      d.toString
+    }
     serveTopK(spark, dir, root)
   }
 }

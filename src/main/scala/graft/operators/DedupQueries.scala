@@ -89,18 +89,16 @@ object DedupQueries {
   }
 
   /** Session-scoped memo of the expensive shared stages — the per-doc
-    * shingle-set arrays and the verified near-dup pair set — keyed by
-    * (SparkContext, corpus dir). A real dedupe sweep computes pairs AND
-    * clusters in one session (the bench does too); without sharing, x7
-    * re-ran x3's whole candidate build — the costliest narrow stage in the
-    * repo — doubling the corpus pass. Entries are localCheckpointed (an
-    * un-materialized DataFrame would re-execute per action, memoizing only
-    * the plan), tiny relative to the corpus (arrays of longs / verified
-    * pairs), and FIFO-capped: dropping the reference lets Spark's
-    * ContextCleaner reclaim the checkpoint blocks. Correctness assumes a
-    * corpus dir is immutable within a session — the testdata contract, and
-    * the safe default for an immutable-input batch pipeline. */
-  private val memo = new java.util.LinkedHashMap[String, DataFrame]()
+    * shingle-set arrays and the verified near-dup pair set — tagged by
+    * stage. A real dedupe sweep computes pairs AND clusters in one session
+    * (the bench does too); without sharing, x7 re-ran x3's whole candidate
+    * build — the costliest narrow stage in the repo — doubling the corpus
+    * pass. Entries are localCheckpointed (an un-materialized DataFrame
+    * would re-execute per action, memoizing only the plan) and tiny
+    * relative to the corpus (arrays of longs / verified pairs). Correctness
+    * assumes a corpus dir is immutable within a session — the testdata
+    * contract, and the safe default for an immutable-input batch pipeline. */
+  private[graft] val memo = new graft.BenchMemos.CountedMemo("DedupQueries")
 
   /** MinHash family parameters (x4/x11's banding contract): k signatures,
     * 4 bands × 4 rows, affine over the Mersenne prime 2^61−1. m1 + 15·m2
@@ -108,29 +106,6 @@ object DedupQueries {
   private val MinhashK = 16
   private val MinhashRowsPerBand = 4
   private val MinhashP = 2305843009213693951L // 2^61 - 1
-
-  /** Drop every memoized stage. The bench calls this between its untimed
-    * codegen-warmup pass and its timed pass so the timed sweep pays the
-    * candidate build exactly ONCE, at the query that triggers it — a
-    * pre-warmed memo would report a cache lookup as x3's cost. */
-  private[graft] def clearMemo(): Unit = memo.synchronized(memo.clear())
-
-
-  private def memoized(spark: SparkSession, dir: String, stage: String)(
-      build: => DataFrame): DataFrame = memo.synchronized {
-    val key = s"${spark.sparkContext.applicationId}|$stage|$dir"
-    val hit = memo.get(key)
-    if (hit != null) hit
-    else {
-      // build provenance for the bench's memo_built markers — this is the
-      // family's one choke point, the LinkedHashMap twin of CountedMemo
-      graft.BenchMemos.recordBuild("DedupQueries")
-      val df = build
-      memo.put(key, df)
-      if (memo.size > 16) { val it = memo.keySet.iterator; it.next(); it.remove() }
-      df
-    }
-  }
 
   /** The ONE tokenize+shingle pass over the corpus, memoized: per doc the
     * sorted xxhash64 shingle set `hs` (the set-identity/verification lane
@@ -188,7 +163,7 @@ object DedupQueries {
   }
 
   private def docShingleStats(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "docShingleStats") {
+    memo(spark, dir, "docShingleStats") {
       import spark.implicits._
       // fan out before the tokenize+md5 map — the costliest narrow stage
       // in the repo ran on ONE task at bench SFs (r17, Tables.fanOutSmallScan)
@@ -265,7 +240,7 @@ object DedupQueries {
     * x4 MinHash-LSH is the approximate alternative with per-doc signatures.
     */
   def x3NgramJaccardPairs(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "x3pairs") {
+    memo(spark, dir, "x3pairs") {
       x3Build(spark, dir).localCheckpoint() // verified pairs: tiny; shared with x7
     }
 
@@ -435,7 +410,7 @@ object DedupQueries {
     * The md5 pass is x6-local (x5's rationale); the xxhash64 memo still
     * backs the set-identity consumers. */
   private[operators] def hyperplaneBanded(spark: SparkSession, dir: String): DataFrame =
-   memoized(spark, dir, "hyperplaneBanded") {
+   memo(spark, dir, "hyperplaneBanded") {
     import spark.implicits._
     val dim = 64
     val numPlanes = 32
@@ -532,7 +507,7 @@ object DedupQueries {
     // the labels are memoized like the pair set: x10's keep-table consumes
     // them in the same sweep, and without sharing it would re-run the whole
     // propagation loop (finding from the round-6 review)
-    memoized(spark, dir, "x7Labels") { x7Propagate(spark, dir) }
+    memo(spark, dir, "x7Labels") { x7Propagate(spark, dir) }
       .select(col("doc").as("doc_id"), col("cluster_id"))
       .orderBy("doc_id")
 
@@ -997,7 +972,7 @@ object DedupQueries {
     * checkpointed the identical lineage separately, running p6's
     * dominant scan twice per invocation. */
   private def kmvSideHashes(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "kmvSideHashes") {
+    memo(spark, dir, "kmvSideHashes") {
       kmvHashesBuild(spark, dir)
         .localCheckpoint() // five consumers (2 sketches, 2 exact lanes, union)
     }

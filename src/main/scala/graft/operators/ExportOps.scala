@@ -64,33 +64,20 @@ object ExportOps {
   }
 
   /** Export root memo — one write per (session, corpus); the manifest
-    * query and the round-trip spec both read the same landed files. */
-  private val exportMemo =
-    new graft.BenchMemos.CountedMemo[String, String]("ExportOps")
-
-  private[graft] def clearMemo(): Unit = {
-    // delete superseded exports now (bench warm→timed re-exports; a
-    // second full shard tree until JVM exit is pure disk-footprint tax)
-    exportMemo.values().forEach(r =>
-      try graft.core.FsUtil.deleteRecursively(
-        java.nio.file.Paths.get(r).getParent)
-      catch { case _: Throwable => () })
-    exportMemo.clear()
-  }
-
+    * query and the round-trip spec both read the same landed files. A
+    * clear deletes the superseded export (bench warm→timed re-exports; a
+    * second full shard tree until JVM exit is pure disk-footprint tax). */
+  private[graft] val memo = new graft.BenchMemos.CountedMemo("ExportOps")
 
   /** Write the sharded export (idempotent per session) and return its
     * root: `<root>/shard_id=<n>/part-*.parquet`. */
   private[operators] def exportRoot(spark: SparkSession, dir: String): String =
-    exportMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}|$dir", _ => {
-        val d = graft.core.FsUtil.scratchDir("graft-z8-export")
-        graft.core.FsUtil.deleteOnExitRecursively(d)
-        val out = d.resolve("shards").toString
-        shardRows(spark, dir)
-          .write.partitionBy("shard_id").mode("overwrite").parquet(out)
-        out
-      })
+    memo.withScratch(spark, dir, "graft-z8-export") { d =>
+      val out = d.resolve("shards").toString
+      shardRows(spark, dir)
+        .write.partitionBy("shard_id").mode("overwrite").parquet(out)
+      out
+    }
 
   /** z8: the export manifest, read back from the WRITTEN shards — per
     * (shard, source) document count and token fill. A hash-match against

@@ -26,31 +26,13 @@ object GraphOps {
     * reports MEASURED sizes — a localCheckpoint would carry the build
     * plan's ~2 MB size estimate for a ~70 MB table and lure every
     * downstream unhinted join into auto-broadcasting the corpus-scale
-    * edge set (the r17 stats hazard; see coPurchaseEdges). */
-  private val edgeMemo =
-    new graft.BenchMemos.CountedMemo[String, DataFrame]("GraphOps")
-
-  /** Frames persisted by coPartitionedCheckpoint — NOT memoized (each
-    * gated run builds its own), so without tracking they would outlive
-    * clearMemo() and accumulate CacheManager entries (plus pin the
-    * superseded localCheckpointed edge blocks they read) across bench
+    * edge set (the r17 stats hazard; see coPurchaseEdges). Frames that
+    * coPartitionedCheckpoint persists per gated run are not memoized, but
+    * the memo holds them, so the same clear unpersists them (without
+    * that they would accumulate CacheManager entries across bench
     * warm→timed cycles — the r8 sf1 OOM class shifted into the cache
-    * layer. Tracked here so clearMemo() releases them too. */
-  private val checkpointCache =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[DataFrame]())
-
-  private[graft] def clearMemo(): Unit = {
-    // Both memo entries live in the cache layer now (base edges
-    // MEMORY_AND_DISK, oriented DAG DISK_ONLY) — unpersist releases their
-    // blocks for spec suites that clear the memo between gated runs.
-    edgeMemo.values().forEach(df =>
-      try df.unpersist(blocking = false) catch { case _: Throwable => () })
-    edgeMemo.clear()
-    checkpointCache.forEach(df =>
-      try df.unpersist(blocking = false) catch { case _: Throwable => () })
-    checkpointCache.clear()
-  }
-
+    * layer). */
+  private[graft] val memo = new graft.BenchMemos.CountedMemo("GraphOps")
 
   /** Size gate for the iterative joins' node-sized side (ranks/scores).
     * At or below this many node rows the side is forced-broadcast (a
@@ -91,8 +73,7 @@ object GraphOps {
     val cached = df.repartition(col(key))
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     cached.count()
-    checkpointCache.add(cached)
-    cached
+    memo.hold(cached)
   }
 
   /** `(src, dst, w)` — directed both ways (symmetric), `w` = number of
@@ -107,25 +88,24 @@ object GraphOps {
     * the pair fan-out is ≤ |basket|² rows from one array, never a
     * shuffled wedge stream. */
   private[graft] def coPurchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    edgeMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}|$dir", _ => {
-        // Materialized through the CACHE layer, not localCheckpoint (r17):
-        // a LogicalRDD checkpoint carries the BUILD plan's size estimate,
-        // and the basket-agg build estimates ~2 MB where the edge set is
-        // really ~70 MB — under the auto-broadcast threshold, so every
-        // downstream unhinted join (n1's out-weight join, n3/n4's frontier
-        // joins) silently broadcast the CORPUS-SCALE edge table (measured:
-        // n1's iteration jobs 0.9→3.5 s at sf0.1; at 100 TB it is a driver
-        // OOM). InMemoryRelation reports MEASURED block sizes once built,
-        // so the planner sees the honest edge-scale number. Storage level
-        // matches what the old localCheckpoint used (MEMORY_AND_DISK) —
-        // every iteration re-reads this table, and the r8 DISK_ONLY rule
-        // was for the oriented DERIVED copy, not this base.
-        val e = edgeBuild(spark, dir)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        e.count()
-        e
-      })
+    memo(spark, dir) {
+      // Materialized through the CACHE layer, not localCheckpoint (r17):
+      // a LogicalRDD checkpoint carries the BUILD plan's size estimate,
+      // and the basket-agg build estimates ~2 MB where the edge set is
+      // really ~70 MB — under the auto-broadcast threshold, so every
+      // downstream unhinted join (n1's out-weight join, n3/n4's frontier
+      // joins) silently broadcast the CORPUS-SCALE edge table (measured:
+      // n1's iteration jobs 0.9→3.5 s at sf0.1; at 100 TB it is a driver
+      // OOM). InMemoryRelation reports MEASURED block sizes once built,
+      // so the planner sees the honest edge-scale number. Storage level
+      // matches what the old localCheckpoint used (MEMORY_AND_DISK) —
+      // every iteration re-reads this table, and the r8 DISK_ONLY rule
+      // was for the oriented DERIVED copy, not this base.
+      val e = edgeBuild(spark, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      e.count()
+      e
+    }
 
   /** The pre-checkpoint edge-build plan (exposed to
     * [[graft.tools.ExplainDump]] like DedupQueries.x3Build: the memoized
@@ -492,32 +472,26 @@ object GraphOps {
     * n7): every undirected co-purchase edge oriented from its
     * (degree, id)-smaller endpoint, so each triangle appears exactly once
     * and oriented out-degrees stay ≤ √(2m) however skewed the raw graph.
-    * Materializes the BASE memo entry before entering computeIfAbsent —
-    * coPurchaseEdges is itself a computeIfAbsent on edgeMemo, and nesting
-    * the two only worked while the keys landed in different hash bins
-    * (a same-bin collision throws "Recursive update"). */
-  private[operators] def orientedEdges(spark: SparkSession, dir: String): DataFrame = {
-    val base = coPurchaseEdges(spark, dir)
-    edgeMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}|$dir|oriented", _ => {
-        val e = base.select("src", "dst")
-        // Materialized CO-PARTITIONED by src through the cache layer
-        // (r18; the coPartitionedCheckpoint mechanism — an
-        // InMemoryRelation keeps HashPartitioning under AQE): n5's
-        // adjacency build (groupBy src) AND its first adjacency join
-        // (on src) both consume this partitioning, so neither plans an
-        // exchange — before this, the honest-stats fix (r17) made both
-        // re-exchange the edge-scale table (the adjacency side is
-        // Σ out-degree ≈ |E| longs, EDGE-scale in bytes, so the n1-style
-        // broadcast gate is the wrong recovery here — co-location is).
-        // One exchange paid once inside the memo build, at every scale.
-        val oriented = orientedBuild(e)
-          .repartition(col("src"))
-          .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        oriented.count()
-        oriented
-      })
-  }
+    * Tagged `oriented` in the edge memo, beside the base entry it reads. */
+  private[operators] def orientedEdges(spark: SparkSession, dir: String): DataFrame =
+    memo(spark, dir, "oriented") {
+      val e = coPurchaseEdges(spark, dir).select("src", "dst")
+      // Materialized CO-PARTITIONED by src through the cache layer
+      // (r18; the coPartitionedCheckpoint mechanism — an
+      // InMemoryRelation keeps HashPartitioning under AQE): n5's
+      // adjacency build (groupBy src) AND its first adjacency join
+      // (on src) both consume this partitioning, so neither plans an
+      // exchange — before this, the honest-stats fix (r17) made both
+      // re-exchange the edge-scale table (the adjacency side is
+      // Σ out-degree ≈ |E| longs, EDGE-scale in bytes, so the n1-style
+      // broadcast gate is the wrong recovery here — co-location is).
+      // One exchange paid once inside the memo build, at every scale.
+      val oriented = orientedBuild(e)
+        .repartition(col("src"))
+        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      oriented.count()
+      oriented
+    }
 
   /** The pre-persist orientation plan (evidence seam for ExplainDump's
     * co-partitioned vs r17-unpartitioned n5 comparison). Takes the

@@ -384,17 +384,7 @@ object LayoutOps {
 
   /** Export root memo for z10 — one write per (session, corpus), the z8
     * discipline: the driver row reads back what is actually on disk. */
-  private val hilbertExportMemo =
-    new graft.BenchMemos.CountedMemo[String, String]("LayoutOps")
-
-  private[graft] def clearMemo(): Unit = {
-    hilbertExportMemo.values().forEach(r =>
-      try graft.core.FsUtil.deleteRecursively(
-        java.nio.file.Paths.get(r).getParent)
-      catch { case _: Throwable => () })
-    hilbertExportMemo.clear()
-  }
-
+  private[graft] val memo = new graft.BenchMemos.CountedMemo("LayoutOps")
 
   /** Write lineitem sharded along the HILBERT curve (idempotent per
     * session) and return the root: `<root>/hshard=<n>/part-*.parquet`.
@@ -452,14 +442,11 @@ object LayoutOps {
         col("hshard"))
 
   private[operators] def hilbertExportRoot(spark: SparkSession, dir: String): String =
-    hilbertExportMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}|$dir", _ => {
-        val d = graft.core.FsUtil.scratchDir("graft-z10-export")
-        graft.core.FsUtil.deleteOnExitRecursively(d)
-        val out = d.resolve("shards").toString
-        landHilbertShards(quantizedLineitem(spark, dir), out, "overwrite")
-        out
-      })
+    memo.withScratch(spark, dir, "graft-z10-export") { d =>
+      val out = d.resolve("shards").toString
+      landHilbertShards(quantizedLineitem(spark, dir), out, "overwrite")
+      out
+    }
 
   /** z10: the Hilbert sharded WRITER — z9 measured the Hilbert curve
     * reading ~1.6× fewer overhang rows than Morton at the misaligned

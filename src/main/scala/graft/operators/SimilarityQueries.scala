@@ -367,51 +367,45 @@ object SimilarityQueries {
     lloydCentroids(spark, e, k, iters).toDF("cell", "centroid")
   }
 
-  /** Session memo for the k-means cell assignment (same pattern and
-    * rationale as DedupQueries' memo): v5's probe and v7's kNN join consume
-    * the SAME quantizer, and the Lloyd loop is `iters + 1` corpus scans
-    * plus per-iteration driver collects — a sweep must pay it once. The
-    * memoized frame is localCheckpointed (materialized, lineage-free);
-    * corpus dirs are immutable within a session (the testdata contract). */
-  private val assignMemo = new graft.BenchMemos.CountedMemo[String, DataFrame]("SimilarityQueries")
-
-  /** Session memo for the trained CENTROIDS themselves (k×dim driver-side
-    * Seqs): the Lloyd loop is the expensive part, and FOUR consumer
-    * families want the same quantizer in different shapes — the full-corpus
-    * one (kmeansAssigned/v14's fresh side) and the old-slice one (v8's
-    * incremental assignment, st9's streamed assignment, v14's stale side).
-    * Keyed by an explicit slice tag because the training frame's identity
-    * can't key a map. */
-  private val centroidMemo =
-    new graft.BenchMemos.CountedMemo[String, Seq[(Int, Seq[Double])]]("SimilarityQueries")
-
-  private[graft] def clearMemo(): Unit =
-    { assignMemo.clear(); pqMemo.clear(); centroidMemo.clear() }
+  /** Session memo for the quantizers, tagged by kind (same pattern and
+    * rationale as DedupQueries' memo; corpus dirs are immutable within a
+    * session, the testdata contract):
+    *  - `assign|k|iters`, the k-means cell assignment: v5's probe and v7's
+    *    kNN join consume the SAME quantizer, and the Lloyd loop is
+    *    `iters + 1` corpus scans plus per-iteration driver collects — a
+    *    sweep must pay it once. localCheckpointed (materialized,
+    *    lineage-free).
+    *  - `centroids|slice|k|iters`, the trained CENTROIDS themselves (k×dim
+    *    driver-side Seqs): FOUR consumer families want the same quantizer
+    *    in different shapes — the full-corpus one (kmeansAssigned/v14's
+    *    fresh side) and the old-slice one (v8's incremental assignment,
+    *    st9's streamed assignment, v14's stale side). The slice is an
+    *    explicit tag because the training frame's identity can't key a map.
+    *  - `pq|slice`, the PQ codebooks (see [[pqCodebooks]]). */
+  private[graft] val memo = new graft.BenchMemos.CountedMemo("SimilarityQueries")
 
 
   /** Memoized Lloyd training over a named slice of the embeddings table. */
   private[operators] def trainedCentroids(spark: SparkSession, dir: String,
       slice: String, k: Int, iters: Int): Seq[(Int, Seq[Double])] =
-    centroidMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}|$dir|$slice|$k|$iters", _ => {
-        val e = t(spark, dir, "embeddings")
-        val src = slice match {
-          case "full" => e
-          case "old"  => e.filter(col("vec_id") % 7 =!= 0)
-        }
-        lloydCentroids(spark, src, k, iters)
-      })
+    memo(spark, dir, s"centroids|$slice|$k|$iters") {
+      val e = t(spark, dir, "embeddings")
+      val src = slice match {
+        case "full" => e
+        case "old"  => e.filter(col("vec_id") % 7 =!= 0)
+      }
+      lloydCentroids(spark, src, k, iters)
+    }
 
   /** `(vec_id, embedding, cell)` under the k-means coarse quantizer —
     * the IVF index body. One broadcast assignment pass over the corpus
     * after the Lloyd loop. */
   private[operators] def kmeansAssigned(spark: SparkSession, dir: String,
-      k: Int, iters: Int): DataFrame = assignMemo.computeIfAbsent(
-    s"${spark.sparkContext.applicationId}|$dir|$k|$iters", _ => {
-      val e = t(spark, dir, "embeddings")
-      assignCells(e, trainedCentroids(spark, dir, "full", k, iters))
-        .localCheckpoint() // assignment feeds every consumer materialized
-    })
+      k: Int, iters: Int): DataFrame = memo(spark, dir, s"assign|$k|$iters") {
+    val e = t(spark, dir, "embeddings")
+    assignCells(e, trainedCentroids(spark, dir, "full", k, iters))
+      .localCheckpoint() // assignment feeds every consumer materialized
+  }
 
   /** IVF probe search over the k-means quantizer (the production IVF shape;
     * v4 is the supervised-label variant). Assignment + probe are the same
@@ -597,55 +591,52 @@ object SimilarityQueries {
   private val PqM = 4; private val PqSubDim = 16
   private val PqK = 4; private val PqIters = 3
 
-  /** Per-corpus PQ codebook memo (same contract as [[assignMemo]]):
+  /** Per-corpus PQ codebooks, memoized like the coarse quantizer:
     * training is `iters` corpus scans plus per-iteration driver collects
     * of k×dim doubles; a sweep that encodes (v9) AND searches (v10) the
     * same corpus must pay it once. */
-  private val pqMemo =
-    new graft.BenchMemos.CountedMemo[String, IndexedSeq[Seq[(Int, Seq[Double])]]]("SimilarityQueries")
-
   private[operators] def pqCodebooks(spark: SparkSession, dir: String,
-      sliceTag: String = "full"): IndexedSeq[Seq[(Int, Seq[Double])]] = pqMemo.computeIfAbsent(
-    s"${spark.sparkContext.applicationId}|$dir|$sliceTag", _ => {
-    import spark.implicits._
-    val (m, subDim, k, iters) = (PqM, PqSubDim, PqK, PqIters)
-    // slice tags mirror trainedCentroids: "old" trains the codebooks on
-    // the standing corpus only (the index-maintenance regime — v21
-    // encodes the increment with these, never retraining)
-    val e = sliceTag match {
-      case "full" => t(spark, dir, "embeddings")
-      case "old"  => t(spark, dir, "embeddings").filter(col("vec_id") % 7 =!= 0)
-    }
-    // The M Lloyd loops run FUSED: one pass per iteration computes every
-    // subspace's assignment and per-(subspace, cell, pos) decimal mean
-    // (rows are disjoint by subspace, so the groups — and the math — are
-    // exactly the per-subspace jobs'), cutting m×iters tiny jobs to iters.
-    var cents: IndexedSeq[Seq[(Int, Seq[Double])]] = {
-      val init = e.filter(col("vec_id") < k)
-        .select(col("vec_id").cast("int"), col("embedding"))
-        .as[(Int, Array[Float])].collect().toSeq.sortBy(_._1)
-      (0 until m).map(s => init.map { case (id, emb) =>
-        (id, emb.slice(s * subDim, (s + 1) * subDim).map(_.toDouble).toSeq) })
-    }
-    for (_ <- 1 to iters) {
-      val subCols = (0 until m).map { s =>
-        val sub = slice(col("embedding"), s * subDim + 1, subDim)
-        val (cell, _, _) = assignExprs(sub, cents(s))
-        struct(lit(s).as("s"), cell.as("cell"), sub.as("semb"))
+      sliceTag: String = "full"): IndexedSeq[Seq[(Int, Seq[Double])]] =
+    memo(spark, dir, s"pq|$sliceTag") {
+      import spark.implicits._
+      val (m, subDim, k, iters) = (PqM, PqSubDim, PqK, PqIters)
+      // slice tags mirror trainedCentroids: "old" trains the codebooks on
+      // the standing corpus only (the index-maintenance regime — v21
+      // encodes the increment with these, never retraining)
+      val e = sliceTag match {
+        case "full" => t(spark, dir, "embeddings")
+        case "old"  => t(spark, dir, "embeddings").filter(col("vec_id") % 7 =!= 0)
       }
-      val agg = e.select(explode(array(subCols: _*)).as("u"))
-        .select(col("u.s").as("s"), col("u.cell").as("cell"), posexplode(col("u.semb")))
-        .groupBy("s", "cell", "pos")
-        .agg((sum(col("col").cast("decimal(28,10)")).cast("double") / count(lit(1))).as("c"))
-        .groupBy("s", "cell")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-          x => x.getField("c")).as("centroid"))
-        .as[(Int, Int, Seq[Double])].collect()
-      cents = (0 until m).map(s =>
-        agg.filter(_._1 == s).map(r => (r._2, r._3)).toSeq.sortBy(_._1))
+      // The M Lloyd loops run FUSED: one pass per iteration computes every
+      // subspace's assignment and per-(subspace, cell, pos) decimal mean
+      // (rows are disjoint by subspace, so the groups — and the math — are
+      // exactly the per-subspace jobs'), cutting m×iters tiny jobs to iters.
+      var cents: IndexedSeq[Seq[(Int, Seq[Double])]] = {
+        val init = e.filter(col("vec_id") < k)
+          .select(col("vec_id").cast("int"), col("embedding"))
+          .as[(Int, Array[Float])].collect().toSeq.sortBy(_._1)
+        (0 until m).map(s => init.map { case (id, emb) =>
+          (id, emb.slice(s * subDim, (s + 1) * subDim).map(_.toDouble).toSeq) })
+      }
+      for (_ <- 1 to iters) {
+        val subCols = (0 until m).map { s =>
+          val sub = slice(col("embedding"), s * subDim + 1, subDim)
+          val (cell, _, _) = assignExprs(sub, cents(s))
+          struct(lit(s).as("s"), cell.as("cell"), sub.as("semb"))
+        }
+        val agg = e.select(explode(array(subCols: _*)).as("u"))
+          .select(col("u.s").as("s"), col("u.cell").as("cell"), posexplode(col("u.semb")))
+          .groupBy("s", "cell", "pos")
+          .agg((sum(col("col").cast("decimal(28,10)")).cast("double") / count(lit(1))).as("c"))
+          .groupBy("s", "cell")
+          .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
+            x => x.getField("c")).as("centroid"))
+          .as[(Int, Int, Seq[Double])].collect()
+        cents = (0 until m).map(s =>
+          agg.filter(_._1 == s).map(r => (r._2, r._3)).toSeq.sortBy(_._1))
+      }
+      cents
     }
-    cents
-  })
 
   def v9ProductQuantization(spark: SparkSession, dir: String): DataFrame = {
     val (m, subDim) = (PqM, PqSubDim)

@@ -60,9 +60,10 @@ object CommitConflictException {
 }
 
 /** Advisory CAS-contention counters (r15): session-global, monotonic,
-  * consumed by tools/CasLiveness to PRICE multi-writer goodput — never
-  * by any engine decision (the safety story is the CAS itself; these
-  * only measure how much work it wastes under contention).
+  * asserted by the specs and used to PRICE multi-writer goodput (the
+  * r15–r17 numbers in BASELINE.md) — never by any engine decision (the
+  * safety story is the CAS itself; these only measure how much work it
+  * wastes under contention).
   *   - `claim_lost`   — commits whose segment fully wrote but whose
   *     manifest hard-link lost the race (the unit of wasted work);
   *   - `read_conflict` — read-side missing-file failures folded to

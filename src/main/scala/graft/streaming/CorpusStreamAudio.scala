@@ -64,13 +64,9 @@ object CorpusStreamAudio {
   private[streaming] val NewSliceSql =
     "(doc_id % 140) % 5 = 0 OR doc_id % 3 = 0"
 
-  private val memo =
-    new graft.BenchMemos.CountedMemo[String, DataFrame]("CorpusStreamAudio")
-  private val stageMemo =
-    new graft.BenchMemos.CountedMemo[String, String]("CorpusStreamAudio")
-
-  private[graft] def clearMemo(): Unit = { memo.clear(); stageMemo.clear() }
-
+  /** The standing fingerprint store and the staged incoming slice,
+    * tagged `stage`. */
+  private[graft] val memo = new graft.BenchMemos.CountedMemo("CorpusStreamAudio")
 
   /** Decode a doc-id frame through the real WAV parser and reduce each
     * clip to (n_samples, sum_abs, peak, fingerprint) — the one pass both
@@ -107,7 +103,7 @@ object CorpusStreamAudio {
     * contains what admission admitted). One decode pass per session,
     * localCheckpointed: (doc_id, fp) rows, KB-scale. */
   private[streaming] def standingFps(spark: SparkSession, dir: String): DataFrame =
-    memo.computeIfAbsent(s"${spark.sparkContext.applicationId}|$dir", _ =>
+    memo(spark, dir) {
       // fan out the STANDING-index decode (the st17 rationale — one scan
       // partition serialized the WAV decode at bench SFs); per-batch
       // decodes stay as-arrived
@@ -116,21 +112,20 @@ object CorpusStreamAudio {
             .filter(not(expr(NewSliceSql))), "doc_id"))
         .filter(gatePass)
         .select("doc_id", "fp")
-        .localCheckpoint())
+        .localCheckpoint()
+    }
 
   /** Stage the incoming slice as 4 range-partitioned part files (st17's
     * staging discipline: pinned batch contents, several real batches). */
   private[streaming] def stagedNewDocs(spark: SparkSession, dir: String): String =
-    stageMemo.computeIfAbsent(s"${spark.sparkContext.applicationId}|$dir", _ => {
-      val d = graft.core.FsUtil.scratchDir("graft-st19")
-      graft.core.FsUtil.deleteOnExitRecursively(d)
+    memo.withScratch(spark, dir, "graft-st19", tag = "stage") { d =>
       val out = d.resolve("new").toString
       Tables.t(spark, dir, "documents").filter(expr(NewSliceSql))
         .select("doc_id")
         .repartitionByRange(4, col("doc_id"))
         .write.mode("overwrite").parquet(out)
       out
-    })
+    }
 
   /** The admission verdicts for one frame of arriving doc ids against
     * the standing fingerprint table — the per-micro-batch plan, and

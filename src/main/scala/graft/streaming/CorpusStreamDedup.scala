@@ -44,19 +44,13 @@ object CorpusStreamDedup {
   private[streaming] val newDocsSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType)))
 
-  private val stageMemo =
-    new graft.BenchMemos.CountedMemo[String, String]("CorpusStreamDedup")
-
-  private[graft] def clearMemo(): Unit = stageMemo.clear()
-
+  private[graft] val memo = new graft.BenchMemos.CountedMemo("CorpusStreamDedup")
 
   /** Stage the NEW slice (doc_id % 7 = 0 — x11's increment) as 4 parquet
     * part files so maxFilesPerTrigger=1 yields several REAL micro-batches;
     * memoized per (session, corpus). */
   private[streaming] def stagedNewDocs(spark: SparkSession, dir: String): String =
-    stageMemo.computeIfAbsent(s"${spark.sparkContext.applicationId}|$dir", _ => {
-      val d = graft.core.FsUtil.scratchDir("graft-st14")
-      graft.core.FsUtil.deleteOnExitRecursively(d)
+    memo.withScratch(spark, dir, "graft-st14") { d =>
       val out = d.resolve("new").toString
       // Range-partition (EventStreamOps' staging discipline), not
       // round-robin: per-doc verdict independence makes st14 immune to
@@ -68,7 +62,7 @@ object CorpusStreamDedup {
         .repartitionByRange(4, col("doc_id"))
         .write.mode("overwrite").parquet(out)
       out
-    })
+    }
 
   /** The streamed admission table: one row per new doc with its
     * keep/drop verdict, the best old-corpus match, and its Jaccard. */

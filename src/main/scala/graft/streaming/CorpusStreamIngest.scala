@@ -31,17 +31,11 @@ object CorpusStreamIngest {
 
   val CorruptBucket = "__corrupt__"
 
-  private val stageMemo =
-    new graft.BenchMemos.CountedMemo[String, java.nio.file.Path]("CorpusStreamIngest")
-
-  private[graft] def clearMemo(): Unit = stageMemo.clear()
-
+  private[graft] val memo = new graft.BenchMemos.CountedMemo("CorpusStreamIngest")
 
   /** Stage `documents` as JSONL part files + one torn-lines file. */
   private def stagedJsonl(spark: SparkSession, dir: String): java.nio.file.Path =
-    stageMemo.computeIfAbsent(s"${spark.sparkContext.applicationId}|$dir", _ => {
-      val d = graft.core.FsUtil.scratchDir("graft-st13")
-      graft.core.FsUtil.deleteOnExitRecursively(d)
+    memo.withScratch(spark, dir, "graft-st13") { d =>
       val docs = graft.operators.Tables.t(spark, dir, "documents")
         .select("doc_id", "text", "lang", "source", "n_chars")
       writeDocumentsJsonl(docs, d.resolve("good").toString)
@@ -68,7 +62,7 @@ object CorpusStreamIngest {
       java.nio.file.Files.write(d.resolve("torn.jsonl"),
         torn.mkString("\n").getBytes("UTF-8"))
       d
-    })
+    }
 
   /** Per-source admission counts of the streamed ingest (one row per real
     * source + the `__corrupt__` bucket). */

@@ -36,25 +36,19 @@ object CorpusStreamKmv {
   private[streaming] val newDocsSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType)))
 
-  private val stageMemo =
-    new graft.BenchMemos.CountedMemo[String, String]("CorpusStreamKmv")
-
-  private[graft] def clearMemo(): Unit = stageMemo.clear()
-
+  private[graft] val memo = new graft.BenchMemos.CountedMemo("CorpusStreamKmv")
 
   /** Stage side A (p6's source split) as 4 range-partitioned part files
     * so maxFilesPerTrigger=1 yields several REAL micro-batches. */
   private[streaming] def stagedSideA(spark: SparkSession, dir: String): String =
-    stageMemo.computeIfAbsent(s"${spark.sparkContext.applicationId}|$dir", _ => {
-      val d = graft.core.FsUtil.scratchDir("graft-st18")
-      graft.core.FsUtil.deleteOnExitRecursively(d)
+    memo.withScratch(spark, dir, "graft-st18") { d =>
       val out = d.resolve("new").toString
       Tables.t(spark, dir, "documents").filter(expr(DedupQueries.KmvSideASql))
         .select("doc_id", "text")
         .repartitionByRange(4, col("doc_id"))
         .write.mode("overwrite").parquet(out)
       out
-    })
+    }
 
   /** The estimator row assembled from the STREAM-built side-A sketch. */
   def st18StreamKmv(spark: SparkSession, dir: String): DataFrame = {

@@ -100,37 +100,17 @@ object EventStreamOps {
     } finally deleteStagingDir(d)
   }
 
-  /** One cached staging dir per single-file source path: repeated stream
-    * runs (specs, bench warm+timed) must not each copy the file into a
-    * fresh never-deleted temp dir. */
-  private val stagedDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Open the events parquet path as a stream. The file source requires a
     * directory; a single-file path (the test corpus shape) is staged into a
-    * cached temp dir once. `maxFilesPerTrigger` bounds per-batch work at scale. */
+    * cached scratch dir once ([[graft.core.FsUtil.streamableDir]]).
+    * `maxFilesPerTrigger` bounds per-batch work at scale. */
   def readEventStream(spark: SparkSession, path: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val p = java.nio.file.Paths.get(path)
-    val dir =
-      if (java.nio.file.Files.isRegularFile(p)) {
-        stagedDirs.computeIfAbsent(path, _ => {
-          val d = graft.core.FsUtil.scratchDir("graft-stream")
-          val staged = d.resolve(p.getFileName)
-          java.nio.file.Files.copy(p, staged)
-          // register the FILE too: File.delete on a non-empty dir is a
-          // silent no-op, so the dir registration alone would leak the copy.
-          // deleteOnExit runs in REVERSE registration order — dir first here,
-          // so at exit the file goes first and the then-empty dir second.
-          d.toFile.deleteOnExit()
-          staged.toFile.deleteOnExit()
-          d.toString
-        })
-      } else path
     graft.operators.Tables.normalizeEventTs(
       spark.readStream
         .schema(eventSchema(sourceTsType(spark, path)))
         .option("maxFilesPerTrigger", "4")
-        .parquet(dir))
+        .parquet(graft.core.FsUtil.streamableDir(path, "graft-stream")))
   }
 
   /** Tumbling 1-hour windowed counts/sums per event type with a 30-minute
@@ -640,7 +620,7 @@ object EventStreamOps {
       val tsT = sourceTsType(spark, sourcePath)
       import spark.implicits._
       Array.tabulate(2) { k =>
-        val d = java.nio.file.Files.createTempDirectory(s"graft-flush${k + 1}")
+        val d = graft.core.FsUtil.scratchDir(s"graft-flush${k + 1}")
         graft.core.FsUtil.deleteOnExitRecursively(d)
         val flushUs = maxUs + (k + 1) * 365L * 24 * 3600 * 1000000L
         val tsCol = tsT match {
@@ -709,19 +689,15 @@ object EventStreamOps {
     spark
   }
 
-  /** Checkpoint root for finite replays: tmpfs when available — offset,
-    * commit and state-store files are fsync'd once per micro-batch, and on
-    * an overlay filesystem that metadata churn dominates a small replay's
-    * wall time. The dir registers for exit cleanup; a real deployment sets
-    * a durable checkpointLocation instead (this path is for the
-    * test/bench replay harness only, where the checkpoint has no
-    * restart value). */
+  /** Checkpoint root for finite replays, a [[graft.core.FsUtil.scratchDir]]
+    * — offset, commit and state-store files are fsync'd once per
+    * micro-batch, and on an overlay filesystem that metadata churn
+    * dominates a small replay's wall time. The dir registers for exit
+    * cleanup; a real deployment sets a durable checkpointLocation instead
+    * (this path is for the test/bench replay harness only, where the
+    * checkpoint has no restart value). */
   private[streaming] def replayCheckpointDir(name: String): String = {
-    val base = java.nio.file.Paths.get("/dev/shm")
-    val root =
-      if (java.nio.file.Files.isDirectory(base) && java.nio.file.Files.isWritable(base)) base
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val d = java.nio.file.Files.createTempDirectory(root, s"graft-ckpt-$name-")
+    val d = graft.core.FsUtil.scratchDir(s"graft-ckpt-$name-")
     graft.core.FsUtil.deleteOnExitRecursively(d)
     d.toString
   }
@@ -744,8 +720,8 @@ object EventStreamOps {
     } finally deleteStagingDir(d)
   }
 
-  /** Sink root for finite replays — tmpfs like the checkpoints, for the
-    * same churn reason. A FILE sink, not memory: the memory sink holds
+  /** Sink root for finite replays — a scratch dir like the checkpoints,
+    * for the same churn reason. A FILE sink, not memory: the memory sink holds
     * the query's entire output driver-resident (st2's session table is
     * ~95k rows at sf0.1 and 10× that at sf1 — corpus-proportional), while
     * the parquet sink streams each micro-batch's rows to files and the
@@ -753,11 +729,7 @@ object EventStreamOps {
     * exactly the shape a production Append query ships with. The dir
     * registers for exit cleanup; the returned frame reads lazily from it. */
   private[streaming] def replaySinkDir(name: String): java.nio.file.Path = {
-    val base = java.nio.file.Paths.get("/dev/shm")
-    val root =
-      if (java.nio.file.Files.isDirectory(base) && java.nio.file.Files.isWritable(base)) base
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val dir = java.nio.file.Files.createTempDirectory(root, s"graft-sink-$name-")
+    val dir = graft.core.FsUtil.scratchDir(s"graft-sink-$name-")
     graft.core.FsUtil.deleteOnExitRecursively(dir)
     dir
   }

@@ -33,26 +33,15 @@ object IndexStreamMaintenance {
   private[streaming] val idSchema: StructType = StructType(Seq(
     StructField("neighbor_id", LongType)))
 
-  private val stageMemo =
-    new graft.BenchMemos.CountedMemo[String, String]("IndexStreamMaintenance")
-  private val rootMemo =
-    new graft.BenchMemos.CountedMemo[String, String]("IndexStreamMaintenance")
-
-  private[graft] def clearMemo(): Unit = {
-    rootMemo.values().forEach(r =>
-      try graft.core.FsUtil.deleteRecursively(java.nio.file.Paths.get(r))
-      catch { case _: Throwable => () })
-    rootMemo.clear()
-    stageMemo.clear()
-  }
-
+  /** The maintained index root and the staged retraction queue, tagged
+    * `stage`. */
+  private[graft] val memo =
+    new graft.BenchMemos.CountedMemo("IndexStreamMaintenance")
 
   /** Stage the retraction queue (v23's delete slice) as 4 range files —
     * several real micro-batches with pinned contents. */
   private[streaming] def stagedDeletes(spark: SparkSession, dir: String): String =
-    stageMemo.computeIfAbsent(s"${spark.sparkContext.applicationId}|$dir", _ => {
-      val d = graft.core.FsUtil.scratchDir("graft-st21")
-      graft.core.FsUtil.deleteOnExitRecursively(d)
+    memo.withScratch(spark, dir, "graft-st21", tag = "stage") { d =>
       val out = d.resolve("deletes").toString
       Tables.t(spark, dir, "embeddings")
         .filter(expr(AnnIndexStore.V23DeleteSql))
@@ -60,14 +49,12 @@ object IndexStreamMaintenance {
         .repartitionByRange(4, col("neighbor_id"))
         .write.mode("overwrite").parquet(out)
       out
-    })
+    }
 
   /** Persist the full index once, then drain the retraction stream into
     * it (idempotent per session); returns the index root. */
   private[graft] def maintainedRoot(spark: SparkSession, dir: String): String =
-    rootMemo.computeIfAbsent(s"${spark.sparkContext.applicationId}|$dir", _ => {
-      val d = graft.core.FsUtil.scratchDir("graft-annidx-st21")
-      graft.core.FsUtil.deleteOnExitRecursively(d)
+    memo.withScratch(spark, dir, "graft-annidx-st21") { d =>
       AnnIndexStore.persist(spark, dir, d.toString)
       val stream = spark.readStream
         .schema(idSchema)
@@ -81,7 +68,7 @@ object IndexStreamMaintenance {
         .queryName("st21").start()
       try q.processAllAvailable() finally q.stop()
       d.toString
-    })
+    }
 
   /** The driver row: serve AFTER the retraction stream drained — v23's
     * oracle verbatim (same index, same final tombstone set). */

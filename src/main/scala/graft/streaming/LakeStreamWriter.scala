@@ -40,38 +40,23 @@ object LakeStreamWriter {
   // "LakeStreamWriter", a bench row's memo_built marker could not say
   // WHICH build it paid — the 4-file staging write vs the full streamed
   // lake (4 micro-batches + ~342-dir commits, the expensive one).
-  private val stageMemo =
-    new graft.BenchMemos.CountedMemo[String, String]("LakeStreamWriter.stage")
-  private val lakeMemo =
-    new graft.BenchMemos.CountedMemo[String, String]("LakeStreamWriter.lake")
-
-  private[graft] def clearStageMemo(): Unit = stageMemo.clear()
-
-  private[graft] def clearLakeMemo(): Unit = {
-    lakeMemo.values().forEach(r =>
-      try graft.core.FsUtil.deleteRecursively(
-        java.nio.file.Paths.get(r).getParent)
-      catch { case _: Throwable => () })
-    lakeMemo.clear()
-  }
-
-  private[graft] def clearMemo(): Unit = { clearLakeMemo(); clearStageMemo() }
-
+  private[graft] val stageMemo =
+    new graft.BenchMemos.CountedMemo("LakeStreamWriter.stage")
+  private[graft] val lakeMemo =
+    new graft.BenchMemos.CountedMemo("LakeStreamWriter.lake")
 
   /** Stage the quantized corpus as 4 range-partitioned files (the st14
     * discipline: pinned batch contents, several real micro-batches). The
     * quantization is [[LayoutOps.quantizedLineitem]] — the identical key
     * math both writers cut. */
   private[streaming] def stagedRows(spark: SparkSession, dir: String): String =
-    stageMemo.computeIfAbsent(s"${spark.sparkContext.applicationId}|$dir", _ => {
-      val d = graft.core.FsUtil.scratchDir("graft-st20")
-      graft.core.FsUtil.deleteOnExitRecursively(d)
+    stageMemo.withScratch(spark, dir, "graft-st20") { d =>
       val out = d.resolve("rows").toString
       LayoutOps.quantizedLineitem(spark, dir)
         .repartitionByRange(4, col("l_orderkey"))
         .write.mode("overwrite").parquet(out)
       out
-    })
+    }
 
   /** Run the streamed writer to completion (idempotent per session) and
     * return the landed lake root. Every return path runs [[repairShards]]
@@ -92,9 +77,7 @@ object LakeStreamWriter {
   }
 
   private def streamedLakeRootNoRepair(spark: SparkSession, dir: String): String =
-    lakeMemo.computeIfAbsent(s"${spark.sparkContext.applicationId}|$dir", _ => {
-      val d = graft.core.FsUtil.scratchDir("graft-st20-lake")
-      graft.core.FsUtil.deleteOnExitRecursively(d)
+    lakeMemo.withScratch(spark, dir, "graft-st20-lake") { d =>
       val out = d.resolve("shards").toString
       val stream = spark.readStream
         .schema(rowSchema)
@@ -108,7 +91,7 @@ object LakeStreamWriter {
         .queryName("st20").start()
       try q.processAllAvailable() finally q.stop()
       out
-    })
+    }
 
   /** The driver row: z10's from-disk zone-skip audit over the lake the
     * STREAM landed — z10's oracle verbatim. */

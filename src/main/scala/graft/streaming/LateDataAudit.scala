@@ -64,28 +64,14 @@ object LateDataAudit {
   private val LateWindowHours = 6
   private val LateShiftHours = 1
 
-  private val stageMemo =
-    new graft.BenchMemos.CountedMemo[String, Seq[java.nio.file.Path]]("LateDataAudit")
-
-  private[graft] def clearMemo(): Unit = {
-    // delete superseded staged slices now (they include a coalesced full
-    // copy of events.parquet — see AnnIndexStore.clearMemo's rationale)
-    stageMemo.values().forEach(ps =>
-      try ps.headOption.foreach(p =>
-        graft.core.FsUtil.deleteRecursively(p.getParent))
-      catch { case _: Throwable => () })
-    stageMemo.clear()
-  }
-
+  private[graft] val memo = new graft.BenchMemos.CountedMemo("LateDataAudit")
 
   /** Prepare the three slice part-files (main, late, flush) ONCE per
     * (session, corpus). They are NOT placed in the watched dir here —
     * each run lands them phased (see [[st15LateAudit]]). */
   private def stagedSlices(spark: SparkSession, dir: String): Seq[java.nio.file.Path] =
-    stageMemo.computeIfAbsent(s"${spark.sparkContext.applicationId}|$dir", _ => {
+    memo.withScratch(spark, dir, "graft-st15") { d =>
       import spark.implicits._
-      val d = graft.core.FsUtil.scratchDir("graft-st15")
-      graft.core.FsUtil.deleteOnExitRecursively(d)
       // nanos-generation corpora (the sf1 ScaleUp snapshot) store ts as
       // INT64 nanos — probe-read them as long, normalize below
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -110,7 +96,7 @@ object LateDataAudit {
           java.nio.file.Files.copy(part, dst)
           dst
       }
-    })
+    }
 
   /** The streamed audit table: per-hour admitted rows + the engine's own
     * `__dropped__` counter row.

@@ -51,13 +51,9 @@ object MediaStreamDedup {
   private[streaming] val NewSliceDuck =
     "(doc_id // 2) % 3 = 0 OR (doc_id % 2 = 1 AND (doc_id // 2) % 3 = 1)"
 
-  private val memo =
-    new graft.BenchMemos.CountedMemo[String, DataFrame]("MediaStreamDedup")
-  private val stageMemo =
-    new graft.BenchMemos.CountedMemo[String, String]("MediaStreamDedup")
-
-  private[graft] def clearMemo(): Unit = { memo.clear(); stageMemo.clear() }
-
+  /** The standing fingerprint index and the staged incoming slice,
+    * tagged `stage`. */
+  private[graft] val memo = new graft.BenchMemos.CountedMemo("MediaStreamDedup")
 
   /** Fingerprints of a doc-id frame: generate payload, decode, dHash —
     * the m8 pass, shared verbatim by the static index and each batch. */
@@ -80,29 +76,28 @@ object MediaStreamDedup {
     * (localCheckpoint — KBs of (doc_id, hash) rows), like the dedupe
     * family's session memos. */
   private[streaming] def oldHashes(spark: SparkSession, dir: String): DataFrame =
-    memo.computeIfAbsent(s"${spark.sparkContext.applicationId}|$dir", _ =>
+    memo(spark, dir) {
       // fan out the STANDING-index decode (corpus-scale, one scan
       // partition at bench SFs — r17, Tables.fanOutSmallScan); per-batch
       // decodes stay as-arrived, batch-scale work by contract
       hashesOf(graft.operators.Tables.fanOutSmallScan(
         Tables.t(spark, dir, "documents")
-          .filter(not(expr(NewSliceSql))), "doc_id")).localCheckpoint())
+          .filter(not(expr(NewSliceSql))), "doc_id")).localCheckpoint()
+    }
 
   /** Stage the incoming slice as 4 range-partitioned part files so
     * maxFilesPerTrigger=1 yields several REAL micro-batches (st14's
     * staging discipline — range, not round-robin, so batch contents are
     * pinned across sessions). */
   private[streaming] def stagedNewDocs(spark: SparkSession, dir: String): String =
-    stageMemo.computeIfAbsent(s"${spark.sparkContext.applicationId}|$dir", _ => {
-      val d = graft.core.FsUtil.scratchDir("graft-st17")
-      graft.core.FsUtil.deleteOnExitRecursively(d)
+    memo.withScratch(spark, dir, "graft-st17", tag = "stage") { d =>
       val out = d.resolve("new").toString
       Tables.t(spark, dir, "documents").filter(expr(NewSliceSql))
         .select("doc_id")
         .repartitionByRange(4, col("doc_id"))
         .write.mode("overwrite").parquet(out)
       out
-    })
+    }
 
   /** The streamed admission table: one row per incoming image with its
     * keep/drop verdict, the best standing match, and its Hamming

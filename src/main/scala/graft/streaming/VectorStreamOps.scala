@@ -36,23 +36,6 @@ object VectorStreamOps {
     StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
 
-  /** One cached staging dir per single-file source (readEventStream's
-    * pattern): the file stream source requires a directory. */
-  private val stagedDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def stagedDirFor(path: String): String = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.isRegularFile(p)) path
-    else stagedDirs.computeIfAbsent(path, _ => {
-      val d = graft.core.FsUtil.scratchDir("graft-vec-stream")
-      val staged = d.resolve(p.getFileName)
-      java.nio.file.Files.copy(p, staged)
-      d.toFile.deleteOnExit()
-      staged.toFile.deleteOnExit()
-      d.toString
-    })
-  }
-
   /** Sequential double left-fold — DotProductF's exact arithmetic. */
   private def dotFD(a: Array[Float], c: Array[Double]): Double = {
     var acc = 0.0; var i = 0
@@ -82,7 +65,7 @@ object VectorStreamOps {
     val assigned = spark.readStream
       .schema(embeddingSchema)
       .option("maxFilesPerTrigger", "4")
-      .parquet(stagedDirFor(s"$dir/embeddings.parquet"))
+      .parquet(graft.core.FsUtil.streamableDir(s"$dir/embeddings.parquet", "graft-vec-stream"))
       .filter(col("vec_id") % 7 === 0)
       .select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])]

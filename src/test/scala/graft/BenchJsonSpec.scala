@@ -357,20 +357,21 @@ class BenchJsonSpec extends AnyFunSuite {
   }
 
   test("CountedMemo counts builds, not lookups; an equal-size rebuild is detected") {
-    val m = new BenchMemos.CountedMemo[String, String]("LayoutOps")
+    val m = new BenchMemos.CountedMemo("LayoutOps")
+    val key = ("app", "dir", "k")
     val s0 = BenchMemos.buildSnapshot()
-    assert(m.computeIfAbsent("k", _ => "v1") === "v1")
-    assert(m.computeIfAbsent("k", _ => "SHOULD NOT BUILD") === "v1")
+    assert(m.get(key, None)(_ => "v1") === "v1")
+    assert(m.get(key, None)(_ => "SHOULD NOT BUILD") === "v1")
     val s1 = BenchMemos.buildSnapshot()
     assert(s1("LayoutOps") === s0("LayoutOps") + 1,
-      "two computeIfAbsent on one key = exactly one build")
+      "two lookups of one key = exactly one build")
     assert(BenchMemos.builtSince(s0).contains("LayoutOps"))
     // the r13 advisor scenario: clear then rebuild the SAME key — the memo
     // SIZE is unchanged (the old size-delta inference saw nothing), the
     // build counter moves
     val sizeBefore = m.size
     m.clear()
-    m.computeIfAbsent("k", _ => "v2")
+    m.get(key, None)(_ => "v2")
     assert(m.size === sizeBefore)
     assert(BenchMemos.builtSince(s1).contains("LayoutOps"),
       "a same-size rebuild must still stamp the family")

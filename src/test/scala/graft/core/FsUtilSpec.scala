@@ -26,4 +26,22 @@ class FsUtilSpec extends AnyFunSuite {
       }
     } finally FsUtil.deleteRecursively(root)
   }
+
+  test("scratch placement lives in FsUtil alone: no other main source names /dev/shm or deleteOnExit()") {
+    import scala.jdk.CollectionConverters._
+    val main = java.nio.file.Paths.get("src/main")
+    assert(Files.isDirectory(main), s"run from the repo root: ${main.toAbsolutePath}")
+    val walk = Files.walk(main)
+    val offenders = try walk.iterator().asScala
+      .filter(f => Files.isRegularFile(f) && f.toString.endsWith(".scala") &&
+        f.getFileName.toString != "FsUtil.scala")
+      .flatMap { f =>
+        Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains("/dev/shm") || line.contains(".deleteOnExit()") =>
+            s"$f:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    finally walk.close()
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }

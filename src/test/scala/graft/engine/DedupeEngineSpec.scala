@@ -644,6 +644,22 @@ class DedupeEngineSpec extends SparkSpec {
     assert(e.indexStats().objectCount === 0, "rejection must happen before any ingest")
   }
 
+  test("empty objects are rejected on the driver, naming the file or key, before any commit") {
+    val e = newEngine()
+    e.write("seed", randomBytes(400, 74))
+    val before = e.indexStats()
+    val src = Files.createTempDirectory("graft-empty")
+    Files.write(src.resolve("ok.bin"), randomBytes(400, 75))
+    Files.write(src.resolve("hollow.bin"), Array.emptyByteArray)
+    val ex = intercept[IllegalArgumentException](e.ingestDirectory(src.toString))
+    assert(ex.getMessage.contains("hollow.bin"), s"error must name the empty file: ${ex.getMessage}")
+    assert(!ex.getMessage.contains("ok.bin"), ex.getMessage)
+    val ex2 = intercept[IllegalArgumentException](
+      e.ingest(Seq("full" -> randomBytes(400, 76), "void" -> Array.emptyByteArray)))
+    assert(ex2.getMessage.contains("void"), s"error must name the empty object: ${ex2.getMessage}")
+    assert(e.indexStats() === before, "a rejected batch commits nothing")
+  }
+
   test("writeOrReplace upserts content") {
     val e = newEngine()
     val v1 = randomBytes(5000, 11)

@@ -22,7 +22,7 @@ class AnnIndexStoreSpec extends SparkSpec {
     // train-once / serve-many: wipe every training memo (the cross-session
     // stand-in — memo keys are application-scoped) and serve again PURELY
     // from storage; equality proves no retraining state is needed
-    SimilarityQueries.clearMemo()
+    graft.BenchMemos.clearAll()
     val servedCold = v12Rows(AnnIndexStore.serveTopK(spark, sfDir, root))
     assert(servedCold == expected, "cold reopen (no training state) must match")
   }
@@ -61,7 +61,7 @@ class AnnIndexStoreSpec extends SparkSpec {
     AnnIndexStore.persistOldTrained(spark, sfDir, root)
     // the increment encodes against the REOPENED quantizer after a memo
     // wipe — proof the arrival path needs no training state at all
-    SimilarityQueries.clearMemo()
+    graft.BenchMemos.clearAll()
     AnnIndexStore.appendIncrement(spark, sfDir, root, col("vec_id") % 7 === 0)
     val e = Tables.t(spark, sfDir, "embeddings")
     val coded = AnnIndexStore.openCoded(spark, root)

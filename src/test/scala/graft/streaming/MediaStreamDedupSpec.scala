@@ -17,7 +17,7 @@ class MediaStreamDedupSpec extends SparkSpec {
     (id / 2) % 3 == 0 || (id % 2 == 1 && (id / 2) % 3 == 1)
 
   test("st17: streamed admissions equal the brute-force new-vs-old truth; both verdicts real") {
-    MediaStreamDedup.clearMemo()
+    graft.BenchMemos.clearAll()
     val ids = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id").as[Long].collect().sorted
     val hash = ids.map(id => id -> MultimodalOps.dHash56(
