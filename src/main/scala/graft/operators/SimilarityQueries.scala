@@ -384,7 +384,6 @@ object SimilarityQueries {
     *  - `pq|slice`, the PQ codebooks (see [[pqCodebooks]]). */
   private[graft] val memo = new graft.BenchMemos.CountedMemo("SimilarityQueries")
 
-
   /** Memoized Lloyd training over a named slice of the embeddings table. */
   private[operators] def trainedCentroids(spark: SparkSession, dir: String,
       slice: String, k: Int, iters: Int): Seq[(Int, Seq[Double])] =
