@@ -18,9 +18,11 @@ import java.nio.file.{Files, Paths}
  * seekable-stream path.
  *
  * Contracts:
- *   - `append` receives only NEW chunk keys (the engine dedupes against
- *     `read()` before calling). Two CONCURRENT ingests can both pass that
- *     check against one stale snapshot and append the same key twice —
+ *   - `append` receives only NEW chunk keys (the engine dedupes before
+ *     calling: a batch of up to `DedupeEngine.KeyedProbeMax` chunk rows
+ *     drops the keys [[keysIn]] reports, a larger one left-anti-joins
+ *     `read()`'s keys). Two CONCURRENT ingests can both pass that check
+ *     against one stale snapshot and append the same key twice —
  *     `read()` may therefore expose duplicate chunkKey rows until
  *     [[healDuplicates]] runs. Payloads for one key are byte-identical by
  *     construction (SHA-256 content keys), so every engine read path
@@ -43,6 +45,15 @@ trait PayloadStore {
     * (see the trait contract); key-only uses (left-anti, distinct counts)
     * are unaffected. */
   def read(): DataFrame
+
+  /** The subset of `keys` the store holds — the dedupe probe of a small
+    * write, which needs keys only: never payload bytes, and never a failure
+    * for a missing key (unlike [[fetch]]). Default: one key-only filtered
+    * read, which a store whose `read()` materializes bytes should override. */
+  private[graft] def keysIn(keys: Seq[String]): Set[String] =
+    if (keys.isEmpty) Set.empty
+    else read().select(col("chunkKey")).filter(col("chunkKey").isInCollection(keys))
+      .collect().map(_.getString(0)).toSet
 
   /** Append a batch of (chunkKey, data) rows — all keys new by contract. */
   def append(payloads: DataFrame): Unit
@@ -138,6 +149,11 @@ final class ParquetPayloadStore(spark: SparkSession, path: String)
     * keys by construction, well within IN-list planning range. */
   override def fetch(keys: Seq[String]): Map[String, Array[Byte]] =
     table.readKeys("chunkKey", keys).as[(String, Array[Byte])].collect().toMap
+
+  /** [[fetch]]'s pruned scan with only the key column read — and no scan at
+    * all when no entry's chunkKey stats can hold one of the keys. */
+  override private[graft] def keysIn(keys: Seq[String]): Set[String] =
+    table.readKeys("chunkKey", keys).select($"chunkKey").as[String].collect().toSet
 }
 
 /**
@@ -173,7 +189,7 @@ final class FlatFilePayloadStore(spark: SparkSession, dir: String)
       .foreachPartition { (it: Iterator[(String, Array[Byte])]) =>
         // write-to-temp + fsync + ATOMIC_MOVE (see writeAtomic): a crash
         // mid-write or mid-host-failure must never leave a TORN
-        // chunks/<key> — the ingest retry's left-anti dedupe is
+        // chunks/<key> — the ingest retry's dedupe probe is
         // key-existence-only, so a truncated file would be skipped on
         // rewrite and poison every later read of this chunk. The
         // dot-prefixed temp name keeps Spark's binaryFile reader (read(),
@@ -224,6 +240,11 @@ final class FlatFilePayloadStore(spark: SparkSession, dir: String)
     keys.iterator.map { k =>
       k -> Files.readAllBytes(Paths.get(dir, k))
     }.toMap
+
+  /** One existence check per key on the driver: no Spark job, no bytes
+    * read (`read()` would load every payload file's content). */
+  override private[graft] def keysIn(keys: Seq[String]): Set[String] =
+    keys.iterator.filter(k => Files.exists(Paths.get(dir, k))).toSet
 
   /** One file per key: duplicates are structurally impossible — skip even
     * the detection scan (read() here materializes payload bytes). */

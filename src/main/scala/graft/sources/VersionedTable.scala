@@ -91,34 +91,40 @@ object CasStats {
   * min/max stats over the table's key column (absent on pre-stats manifests
   * or key-less tables — treated as "may contain anything"). */
 final case class Segment(name: String, minKey: Option[String], maxKey: Option[String]) {
-  /** Could a row with this key live here? Unknown stats ⇒ yes. The compare
-    * MUST match the ordering that produced the stats: Spark's string min/max
-    * ranks by unsigned UTF-8 bytes (UTF8String), which disagrees with Java's
-    * UTF-16 compareTo for supplementary characters vs [U+E000, U+FFFF] — a
-    * String-order compare here could silently skip a segment that holds the
-    * victim. */
-  def mayContain(key: String): Boolean = (minKey, maxKey) match {
-    case (Some(lo), Some(hi)) =>
-      Segment.utf8Compare(key, lo) >= 0 && Segment.utf8Compare(key, hi) <= 0
-    case _ => true
-  }
+  private lazy val bounds = for (lo <- minKey; hi <- maxKey) yield (Segment.utf8(lo), Segment.utf8(hi))
+
+  /** Could a row keyed by one of `keys` live here? `keys` must be
+    * [[Segment.sortedUtf8]]'s output; unknown stats ⇒ yes, for any key. One
+    * binary search finds the least key ≥ the entry's min, which is in range
+    * iff it is ≤ the max. The order MUST be the one that produced the stats:
+    * Spark's string min/max ranks by unsigned UTF-8 bytes (UTF8String),
+    * which disagrees with Java's UTF-16 compareTo for supplementary
+    * characters vs [U+E000, U+FFFF] — a String-order search here could
+    * silently skip an entry that holds the key. */
+  def mayContainAny(keys: IndexedSeq[Array[Byte]]): Boolean = keys.nonEmpty && (bounds match {
+    case Some((lo, hi)) =>
+      var from = 0
+      var until = keys.length
+      while (from < until) {
+        val mid = (from + until) >>> 1
+        if (Segment.Utf8Order.lt(keys(mid), lo)) from = mid + 1 else until = mid
+      }
+      from < keys.length && Segment.Utf8Order.lteq(keys(from), hi)
+    case None => true
+  })
 }
 
 object Segment {
-  /** Unsigned lexicographic compare of the UTF-8 encodings — Spark's
-    * StringType ordering. */
-  private[sources] def utf8Compare(a: String, b: String): Int = {
-    val x = a.getBytes("UTF-8")
-    val y = b.getBytes("UTF-8")
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    x.length - y.length
-  }
+  private def utf8(s: String): Array[Byte] = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  /** Unsigned lexicographic order of UTF-8 encodings — Spark's StringType
+    * ordering. */
+  private[sources] val Utf8Order: Ordering[Array[Byte]] = (x, y) =>
+    java.util.Arrays.compareUnsigned(x, y)
+
+  /** `keys` encoded once and sorted for [[Segment.mayContainAny]]. */
+  private[sources] def sortedUtf8(keys: Seq[String]): IndexedSeq[Array[Byte]] =
+    keys.map(utf8).sorted(Utf8Order).toIndexedSeq
 }
 
 /**
@@ -226,14 +232,15 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
       s"manifest of $path kept vanishing mid-read after 8 attempts — writers are outpacing the grace window")
   }
 
-  /** The rows of `segs` — an empty frame with the schema when there are
-    * none (before the first commit, or a version whose commits emptied it).
+  /** The rows of `segs` — an empty local frame with the schema when there
+    * are none (before the first commit, a version whose commits emptied it,
+    * or a keyed read no entry can answer), whose actions start no Spark job.
     * The one read path: the entries' files are listed here, on the driver,
     * and handed to Spark as a [[ManifestFileIndex]], so no read starts a
     * listing job however many entries it names. */
   private def readSegments(segs: Seq[Segment]): DataFrame =
     if (segs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
     else scan(StructType(Nil), Seq(PartitionDirectory(InternalRow.empty, segs.flatMap(entryFiles).toArray)))
 
   /** The table's rows in `dirs`' files, each row carrying its directory's
@@ -282,13 +289,17 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
       .filter(col(keyCol).isInCollection(keys))
 
   /** Split `segs` into the entries that may hold a row keyed by one of
-    * `keys` and the rest. Stats were computed over `statsCol`, so pruning
-    * on any other column would silently skip entries that hold the keys:
-    * a mismatched `keyCol` keeps every entry (correct, just unpruned). */
+    * `keys` and the rest: the keys are encoded and sorted once, then each
+    * entry costs one binary search — O((keys + entries) · log keys), not
+    * keys × entries. Stats were computed over `statsCol`, so pruning on any
+    * other column would silently skip entries that hold the keys: a
+    * mismatched `keyCol` keeps every entry (correct, just unpruned). */
   private def mayHold(keyCol: String, keys: Seq[String],
       segs: Seq[Segment]): (Seq[Segment], Seq[Segment]) =
-    if (statsCol.contains(keyCol)) segs.partition(s => keys.exists(s.mayContain))
-    else (segs, Seq.empty[Segment])
+    if (statsCol.contains(keyCol)) {
+      val sorted = Segment.sortedUtf8(keys)
+      segs.partition(_.mayContainAny(sorted))
+    } else (segs, Seq.empty[Segment])
 
   /** On the split column, only the entries filed under `value` are opened. */
   override private[graft] def readWhere(colName: String, value: String): DataFrame =
@@ -486,7 +497,7 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
     // delete skip segments. The bucket NAME is the hex of that char's
     // UTF-8 bytes ('b' prefix keeps it inference-proof), so no entry name
     // needs Hadoop's escaping of '%', ':', '=', … in partition paths.
-    // mayContain reads the per-entry STATS, never the name.
+    // mayContainAny reads the per-entry STATS, never the name.
     val parts = splitCol.toSeq.map(c => s"__$c" -> col(c)) ++
       statsCol.filter(_ => bucketed).map(c => "__bucket" -> concat(lit("b"), hex(substring(col(c), 0, 1))))
     val names = parts.map(_._1)

@@ -28,24 +28,43 @@ trait SparkSpec extends AnyFunSuite {
     out.result()
   }
 
-  /** Spark jobs started while `body` runs. The listener bus is drained
-    * before the count is read, so a slow bus cannot make it come out low. */
-  def jobsDuring(body: => Unit): Int = {
+  /** Spark jobs started while `body` runs. */
+  def jobsDuring(body: => Unit): Int = workDuring(body).jobs
+
+  /** The Spark work `body` starts: jobs, the summed input bytes of their
+    * tasks and the files their scans read (the "number of files read" of
+    * every scan in the SQL executions it ran). The listener bus is drained
+    * before the counts are read, so a slow bus cannot make them come out
+    * low. */
+  def workDuring(body: => Unit): SparkSpec.Work = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val inputBytes = new java.util.concurrent.atomic.AtomicLong(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(jobStart: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
+      override def onTaskEnd(taskEnd: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(taskEnd.taskMetrics).foreach(m => inputBytes.addAndGet(m.inputMetrics.bytesRead))
     }
+    val sql = spark.sharedState.statusStore
+    val before = sql.executionsList().map(_.executionId).foldLeft(-1L)(math.max)
     spark.sparkContext.addSparkListener(listener)
     try {
       body
       org.apache.spark.ListenerBusBridge.waitUntilEmpty(spark.sparkContext)
-      jobs.get()
+      val filesRead = sql.executionsList().filter(_.executionId > before).map { e =>
+        val values = sql.executionMetrics(e.executionId)
+        e.metrics.filter(_.name == "number of files read")
+          .flatMap(m => values.get(m.accumulatorId)).map(_.replace(",", "").toLong).sum
+      }.sum
+      SparkSpec.Work(jobs.get(), inputBytes.get(), filesRead)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
 
 object SparkSpec {
+  /** What [[SparkSpec.workDuring]] measured. */
+  final case class Work(jobs: Int, inputBytes: Long, filesRead: Long)
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

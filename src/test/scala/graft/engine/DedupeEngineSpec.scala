@@ -670,6 +670,62 @@ class DedupeEngineSpec extends SparkSpec {
     assert(e.indexStats().objectCount == 1)
   }
 
+  test("writeOrReplace checks the new data before it touches the stored object") {
+    val e = newEngine()
+    val old = randomBytes(5000, 13)
+    e.write("k", old)
+    intercept[IllegalArgumentException](e.writeOrReplace("k", Array.emptyByteArray))
+    assert(e.get("k").exists(java.util.Arrays.equals(_, old)), "bad input must leave the old object intact")
+  }
+
+  test("a batch one chunk row past KeyedProbeMax stores exactly what smaller batches store") {
+    // the join path (one batch of KeyedProbeMax + 1 chunk rows) and the
+    // keyed path (the same objects in batches under the bound) must leave
+    // the same index, the same payload rows and the same bytes: both
+    // dedupe within the batch and against chunks stored before it
+    val settings = DedupeSettings(256, 2048, 8, 1)
+    val shared = randomBytes(3000, 90)
+    val seed = Seq("seed" -> (shared ++ randomBytes(3000, 91)))
+    val bound = DedupeEngine.KeyedProbeMax + 1
+    val objs = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte])]
+    var rows = 0
+    var full = false
+    while (!full) {
+      // every third object repeats the seed's chunks, every fifth an earlier
+      // object of this batch
+      val i = objs.size
+      val data =
+        if (i % 3 == 0) shared ++ randomBytes(1000, 100L + i)
+        else if (i % 5 == 0) objs(i / 2)._2
+        else randomBytes(3000, 100L + i)
+      val n = settings.chunkWithData(data).size
+      if (rows + n > bound) full = true
+      else { objs += f"obj-$i%03d" -> data; rows += n }
+    }
+    // pad with single-chunk objects (under the 256-byte minimum chunk)
+    while (rows < bound) { objs += f"pad-$rows%05d" -> randomBytes(100, rows); rows += 1 }
+    assert(objs.map(o => settings.chunkWithData(o._2).size).sum === bound)
+    val whole = newEngine()
+    whole.ingest(seed)
+    whole.ingest(objs.toSeq)
+    val split = newEngine()
+    split.ingest(seed)
+    val (left, right) = objs.toSeq.splitAt(objs.size / 2)
+    val halves = Seq(left, right)
+    assert(halves.forall(_.map(o => settings.chunkWithData(o._2).size).sum <= DedupeEngine.KeyedProbeMax))
+    halves.foreach(split.ingest)
+    assert(whole.indexStats() === split.indexStats())
+    def payloadRows(e: DedupeEngine) =
+      e.payloads.collect().map(r => r.chunkKey -> r.data.toSeq).sortBy(_._1).toSeq
+    val stored = payloadRows(whole)
+    assert(stored.map(_._1).distinct.size === stored.size, "one payload row per chunk key")
+    assert(stored === payloadRows(split))
+    for ((k, data) <- seed ++ objs) {
+      val (a, b) = (whole.get(k), split.get(k))
+      assert(a.exists(java.util.Arrays.equals(_, data)) && b.exists(java.util.Arrays.equals(_, data)), k)
+    }
+  }
+
   test("reconstructAll rebuilds every object distributively") {
     val e = newEngine()
     val objs = (1 to 6).map(i => s"r$i" -> randomBytes(8000 + i * 500, 100 + i))

@@ -124,13 +124,86 @@ class PayloadStoreSpec extends SparkSpec {
   }
 
   test("write of a fresh key stays within its Spark job budget") {
-    // chunk checkpoint, ONE admission query (in-batch duplicate and
-    // existing-key checks together), then the payload and index commits
+    // chunk checkpoint, ONE collect of the batch's key columns, the keyed
+    // admission and payload probes (no job when no entry can hold a key),
+    // then the payload and index commits
     val e = engines().head._2
     e.write("seed", randomBytes(20000, 34))
     val count = jobsDuring(e.write("fresh", randomBytes(30000, 35)))
     assert(count >= 1, "listener must have observed the write")
-    assert(count <= 13, s"write ran $count Spark jobs (budget 13)")
+    assert(count <= 10, s"write ran $count Spark jobs (budget 10)")
+  }
+
+  test("mapForPosition stays within its Spark job budget") {
+    // the one keyed lookup of the object's rows; the interval find runs on
+    // the driver
+    val e = engines().head._2
+    val data = randomBytes(30000, 39)
+    e.write("pos", data)
+    e.write("other", randomBytes(20000, 40))
+    val count = jobsDuring {
+      val hit = e.mapForPosition("pos", 12345).get
+      assert(hit.chunkAddress <= 12345 && 12345 < hit.chunkAddress + hit.chunkLength)
+    }
+    assert(count >= 1, "listener must have observed the lookup")
+    assert(count <= 1, s"mapForPosition ran $count Spark jobs (budget 1)")
+  }
+
+  test("a fresh write, exists and mapForPosition read O(their keys): nothing grows with the store") {
+    // single-chunk objects (under the 256-byte minimum chunk) keep one key
+    // per commit, so every entry's stats cover exactly its key; doubling
+    // the entries (well under the 32-commit fold, which would widen their
+    // ranges) must not grow what a keyed operation reads
+    val dir = Files.createTempDirectory("graft-ps-okeys").toString
+    val e = new DedupeEngine(spark, dir, DedupeSettings(256, 2048, 8, 1))
+    def grow(from: Int, until: Int): Unit =
+      (from until until).foreach(i => e.write(f"obj-$i%03d", randomBytes(200, 1000L + i)))
+    def entries(table: String): Int = {
+      val d = java.nio.file.Paths.get(dir, table)
+      val last = Files.list(d).iterator().asScala.map(_.getFileName.toString).collect {
+        case n if n.matches("manifest-\\d+\\.txt") => n.stripPrefix("manifest-").stripSuffix(".txt").toLong
+      }.max
+      Files.readAllLines(d.resolve(s"manifest-$last.txt")).asScala.count(_.trim.nonEmpty)
+    }
+    val fresh = randomBytes(3000, 999) // several chunks
+    def measure(): Seq[(String, graft.SparkSpec.Work)] = {
+      val ops = Seq(
+        "absent exists" -> workDuring(assert(!e.exists("zz-fresh"))),
+        "write" -> workDuring(e.write("zz-fresh", fresh)),
+        "exists" -> workDuring(assert(e.exists("zz-fresh"))),
+        "mapForPosition" -> workDuring(assert(e.mapForPosition("zz-fresh", 1500).isDefined)))
+      e.delete("zz-fresh")
+      ops
+    }
+    grow(0, 6)
+    val before = (entries("index"), entries("payloads"))
+    val small = measure()
+    grow(6, 12)
+    assert((entries("index"), entries("payloads")) === ((2 * before._1, 2 * before._2)))
+    val large = measure()
+    val grew = small.zip(large).collect {
+      case ((op, s), (_, l)) if l.inputBytes > s.inputBytes || l.filesRead > s.filesRead =>
+        s"$op: ${s.inputBytes} -> ${l.inputBytes} task input bytes, ${s.filesRead} -> ${l.filesRead} files"
+    }
+    assert(grew.isEmpty, s"with twice the entries: ${grew.mkString("; ")}")
+    // a key no entry can hold: the admission probe starts no Spark job
+    assert(small.head._2.jobs === 0 && large.head._2.jobs === 0)
+  }
+
+  test("flat-file store: a fresh write reads less task input than the store's payload bytes") {
+    // the dedupe probe checks key files exist; it never reads their bytes
+    val dir = Files.createTempDirectory("graft-ps-ffprobe").toString
+    val payloadDir = s"$dir/payloads-ff"
+    val e = new DedupeEngine(spark, dir, DedupeSettings(256, 2048, 8, 1),
+      Some(new FlatFilePayloadStore(spark, payloadDir)))
+    (0 until 4).foreach(i => e.write(s"big$i", randomBytes(100000, 50L + i)))
+    val stored = Files.list(java.nio.file.Paths.get(payloadDir)).iterator().asScala
+      .map(Files.size).sum
+    val fresh = randomBytes(2000, 60)
+    val work = workDuring(e.write("fresh", fresh))
+    assert(work.inputBytes < stored,
+      s"a write read ${work.inputBytes} task input bytes over $stored stored payload bytes")
+    assert(e.get("fresh").exists(java.util.Arrays.equals(_, fresh)))
   }
 
   test("delete of an object with one sharer stays within its Spark job budget") {

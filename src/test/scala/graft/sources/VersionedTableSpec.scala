@@ -274,7 +274,7 @@ class VersionedTableSpec extends SparkSpec {
   test("deleteKeys range checks use UTF-8 byte order (supplementary chars don't dodge deletion)") {
     // U+1F4F7 (camera emoji, 4-byte UTF-8) sorts ABOVE U+E000 in UTF-8 byte
     // order (Spark's min/max) but BELOW it in Java UTF-16 order — a
-    // String-order mayContain would classify the segment as untouched and
+    // String-order key search would classify the segment as untouched and
     // silently skip the delete
     val dir = Files.createTempDirectory("vt_utf8").toString
     val t = new VersionedTable(spark, dir, schema, statsCol = Some("k"))
