@@ -1,13 +1,16 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.functions.{col, concat, count, hex, lit, substring, max => sqlMax, min => sqlMin}
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader}
+import org.apache.spark.sql.functions.{col, concat, hex, lit, substring}
+import org.apache.spark.sql.types.{StringType, StructType}
 import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardOpenOption}
 import java.nio.file.attribute.BasicFileAttributes
 import java.util.Base64
@@ -97,10 +100,11 @@ final case class Segment(name: String, minKey: Option[String], maxKey: Option[St
     * [[Segment.sortedUtf8]]'s output; unknown stats ⇒ yes, for any key. One
     * binary search finds the least key ≥ the entry's min, which is in range
     * iff it is ≤ the max. The order MUST be the one that produced the stats:
-    * Spark's string min/max ranks by unsigned UTF-8 bytes (UTF8String),
-    * which disagrees with Java's UTF-16 compareTo for supplementary
-    * characters vs [U+E000, U+FFFF] — a String-order search here could
-    * silently skip an entry that holds the key. */
+    * they are parquet's column-chunk min/max, whose order for UTF-8 strings
+    * is unsigned UTF-8 bytes (as Spark's UTF8String), and that disagrees
+    * with Java's UTF-16 compareTo for supplementary characters vs
+    * [U+E000, U+FFFF] — a String-order search here could silently skip an
+    * entry that holds the key. */
   def mayContainAny(keys: IndexedSeq[Array[Byte]]): Boolean = keys.nonEmpty && (bounds match {
     case Some((lo, hi)) =>
       var from = 0
@@ -118,7 +122,7 @@ object Segment {
   private def utf8(s: String): Array[Byte] = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
   /** Unsigned lexicographic order of UTF-8 encodings — Spark's StringType
-    * ordering. */
+    * ordering and parquet's for its UTF-8 string statistics. */
   private[sources] val Utf8Order: Ordering[Array[Byte]] = (x, y) =>
     java.util.Arrays.compareUnsigned(x, y)
 
@@ -139,7 +143,9 @@ object Segment {
  * Delta Lake / Iceberg use.
  *
  * Commit protocol (multi-writer safe):
- *   1. write the new rows as an immutable, uniquely-named segment directory;
+ *   1. write the new rows as an immutable, uniquely-named segment directory
+ *      — the commit's only Spark job: each entry's row count and key stats
+ *      are read on the driver from the footers of the files just written;
  *   2. write the full manifest body to a temp file;
  *   3. CLAIM the version by hard-linking the temp file to
  *      `manifest-<v+1>.txt` — link(2) fails atomically if the name exists,
@@ -180,6 +186,11 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
     statsCol: Option[String] = None, bucketed: Boolean = false,
     splitCol: Option[String] = None)
     extends TableStore {
+
+  // the stats are UTF-8 strings compared in byte order: a numeric column's
+  // values would be ranked as text ("10" < "9") and pruned wrongly
+  require(statsCol.forall(c => schema.exists(f => f.name == c && f.dataType == StringType)),
+    s"statsCol ${statsCol.mkString} must name a string column of $schema")
 
   private val dir = Paths.get(path)
   private val ManifestName = "^manifest-(\\d+)\\.txt$".r
@@ -241,13 +252,8 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
   private def readSegments(segs: Seq[Segment]): DataFrame =
     if (segs.isEmpty)
       spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-    else scan(StructType(Nil), Seq(PartitionDirectory(InternalRow.empty, segs.flatMap(entryFiles).toArray)))
-
-  /** The table's rows in `dirs`' files, each row carrying its directory's
-    * values of `partitionSchema`. */
-  private def scan(partitionSchema: StructType, dirs: Seq[PartitionDirectory]): DataFrame =
-    spark.baseRelationToDataFrame(HadoopFsRelation(ManifestFileIndex(partitionSchema, dirs),
-      partitionSchema, schema, None, new ParquetFileFormat, Map.empty)(spark))
+    else spark.baseRelationToDataFrame(HadoopFsRelation(ManifestFileIndex(segs.flatMap(entryFiles)),
+      StructType(Nil), schema, None, new ParquetFileFormat, Map.empty)(spark))
 
   /** The data files of one manifest entry. A referenced entry that is gone,
     * or holds no data file, is a missing-file error (which [[asConflict]]
@@ -500,32 +506,15 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
     // mayContainAny reads the per-entry STATS, never the name.
     val parts = splitCol.toSeq.map(c => s"__$c" -> col(c)) ++
       statsCol.filter(_ => bucketed).map(c => "__bucket" -> concat(lit("b"), hex(substring(col(c), 0, 1))))
-    val names = parts.map(_._1)
-    val newSegs: Seq[Segment] =
-      if (names.isEmpty && statsCol.isEmpty) {
-        newData.write.mode("overwrite").parquet(segPath.toString)
-        Seq(Segment(segName, None, None))
-      } else {
-        parts.foldLeft(newData) { case (d, (n, c)) => d.withColumn(n, c) }
-          .write.mode("overwrite").partitionBy(names: _*).parquet(segPath.toString)
-        // entries, stats and emptiness come from one narrow readback of the
-        // NEW files, listed here and tagged with their entry's ordinal (the
-        // agg prunes to the key column); an empty write may list no entry
-        val entries = entriesUnder(segPath)
-        val stats =
-          if (entries.isEmpty) Nil
-          else scan(StructType(Seq(StructField("__entry", IntegerType))),
-              entries.zipWithIndex.map { case ((_, files), i) =>
-                PartitionDirectory(InternalRow(i), files.toArray) })
-            .groupBy(col("__entry"))
-            .agg(count(lit(1)), statsCol.toSeq.flatMap(c =>
-              Seq(sqlMin(col(c)).cast("string"), sqlMax(col(c)).cast("string"))): _*)
-            .collect().toSeq
-        stats.filter(_.getLong(1) > 0).map { r =>
-          def stat(i: Int) = statsCol.flatMap(_ => Option(r.getString(1 + i)))
-          Segment(dir.relativize(entries(r.getInt(0))._1).toString, stat(1), stat(2))
-        }.sortBy(_.name)
-      }
+    parts.foldLeft(newData) { case (d, (n, c)) => d.withColumn(n, c) }
+      .write.mode("overwrite").partitionBy(parts.map(_._1): _*).parquet(segPath.toString)
+    // the write is the commit's only Spark job: each new entry's row count
+    // and key stats are read on the driver from the footers of the files
+    // just written; an entry with no rows (an empty write) is left out
+    val conf = spark.sessionState.newHadoopConf()
+    val newSegs = entriesUnder(segPath).flatMap { case (p, files) =>
+      footerSegment(dir.relativize(p).toString, files, conf)
+    }.sortBy(_.name)
     if (newSegs.isEmpty) deleteRecursively(segPath)
     val segs = keepSegs ++ newSegs
     val body = segs.map(segLine).mkString("", "\n", "\n")
@@ -567,6 +556,36 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
         case _ => ()
       }
     }
+  }
+
+  /** The manifest entry `name` for `files`, from their parquet footers:
+    * rows are the row groups' counts summed, None when there are none. The
+    * `statsCol` range combines each row group's column-chunk min/max in
+    * [[Segment.Utf8Order]], parquet's own order for UTF-8 strings. An
+    * all-null chunk adds nothing; a chunk with rows but no usable min/max
+    * (parquet drops a chunk's stats when a value exceeds 4 KiB) leaves the
+    * whole entry's range unknown — never pruned, never read as "no keys". */
+  private def footerSegment(name: String, files: Seq[FileStatus],
+      conf: Configuration): Option[Segment] = {
+    var rows = 0L
+    var known = true
+    var lo, hi: Array[Byte] = null
+    for (f <- files; block <- ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
+        ParquetMetadataConverter.NO_FILTER).getBlocks.asScala if block.getRowCount > 0) {
+      rows += block.getRowCount
+      statsCol.foreach { c =>
+        block.getColumns.asScala.find(_.getPath.toDotString == c)
+          .flatMap(chunk => Option(chunk.getStatistics)) match {
+          case Some(s) if s.hasNonNullValue =>
+            if (lo == null || Segment.Utf8Order.lt(s.getMinBytes, lo)) lo = s.getMinBytes
+            if (hi == null || Segment.Utf8Order.gt(s.getMaxBytes, hi)) hi = s.getMaxBytes
+          case Some(s) if s.isNumNullsSet && s.getNumNulls == block.getRowCount => ()
+          case _ => known = false
+        }
+      }
+    }
+    def key(b: Array[Byte]) = Option(b).filter(_ => known).map(new String(_, "UTF-8"))
+    if (rows == 0) None else Some(Segment(name, key(lo), key(hi)))
   }
 
   /** Sweep crash debris: segment directories referenced by no retained
@@ -612,19 +631,17 @@ class VersionedTable(spark: SparkSession, path: String, schema: StructType,
 }
 
 /** The files of a [[VersionedTable]] scan, listed on the driver from its
-  * manifest (or, for a commit's stats readback, from the directories it
-  * just wrote): Spark plans the scan from this list and never lists a
-  * directory itself. Partition values, when any, are the table's own
-  * tags, never parsed from paths; no scan filters on them, and Spark does
-  * not re-apply a partition filter after the scan, so one fails loudly. */
-private[sources] final case class ManifestFileIndex(partitionSchema: StructType,
-    dirs: Seq[PartitionDirectory]) extends FileIndex {
-  private def files = dirs.flatMap(_.files)
+  * manifest: Spark plans the scan from this list and never lists a
+  * directory itself. The table has no partition columns here (its entry
+  * directories are the manifest's business), so no scan can carry a
+  * partition filter; one would fail loudly. */
+private[sources] final case class ManifestFileIndex(files: Seq[FileStatus]) extends FileIndex {
+  override def partitionSchema: StructType = StructType(Nil)
   override def rootPaths: Seq[Path] = files.map(_.getPath.getParent).distinct
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     require(partitionFilters.isEmpty, s"unsupported partition filter: $partitionFilters")
-    dirs
+    Seq(PartitionDirectory(InternalRow.empty, files.toArray))
   }
   override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
   override def refresh(): Unit = ()

@@ -337,6 +337,89 @@ class VersionedTableSpec extends SparkSpec {
     assert(t.readWhere("kind", "o").count() === 0)
   }
 
+  // ------------------------------------------------ manifest stats from parquet footers
+
+  /** The current manifest's lines as (entry, min, max), stats decoded. */
+  private def manifestEntries(dir: String): Seq[(String, Option[String], Option[String])] = {
+    val root = java.nio.file.Paths.get(dir)
+    val last = Files.list(root).iterator().asScala.map(_.getFileName.toString).collect {
+      case n if n.matches("manifest-\\d+\\.txt") => n.stripPrefix("manifest-").stripSuffix(".txt").toLong
+    }.max
+    def unb64(s: String) = new String(java.util.Base64.getUrlDecoder.decode(s), "UTF-8")
+    Files.readAllLines(root.resolve(s"manifest-$last.txt")).asScala.toSeq.filter(_.trim.nonEmpty)
+      .map(_.split("\t", -1) match {
+        case Array(n, lo, hi) => (n, Some(unb64(lo)), Some(unb64(hi)))
+        case parts => (parts(0), None, None)
+      })
+  }
+
+  test("manifest stats from the footers equal min/max over each entry's own rows") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{col, count, lit, max, min}
+    val schema3 = StructType(Seq(StructField("kind", StringType), StructField("k", StringType),
+      StructField("n", LongType)))
+    // one row per task, so one file per row in its entry: an entry's range
+    // combines several files' footers
+    def rowsDf(rows: (String, String)*) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.zipWithIndex.map { case ((kind, k), i) =>
+        Row(kind, k, i.toLong) }, rows.length), schema3)
+    val camera = new String(Character.toChars(0x1F4F7)) + "b"
+    val privateUse = "z"
+    // parquet drops a column chunk's stats when its min and max exceed 4 KiB:
+    // the long key's file has none, the other files of its entry do, and a
+    // range built from those alone would exclude it
+    val long = "z" * 5000
+    val commits = Seq(
+      Seq("o" -> privateUse, "m" -> camera, "m" -> "a"), // the UTF-8 order case
+      Seq("m" -> null, "o" -> "Mx", "m" -> null, "m" -> "Ma"), // mixed null / non-null
+      Seq("m" -> null, "o" -> null), // all null
+      Seq("m" -> "a1", "m" -> "za", "m" -> long, "m" -> "a2"))
+    for (bucketed <- Seq(false, true); split <- Seq(None, Some("kind"))) {
+      val label = s"[bucketed=$bucketed split=$split]"
+      val dir = Files.createTempDirectory("vt_footer").toString
+      val t = new VersionedTable(spark, dir, schema3, statsCol = Some("k"), bucketed = bucketed,
+        splitCol = split)
+      commits.foreach(c => t.append(rowsDf(c: _*)))
+      // (nulls, keys) per entry: an all-null entry must get no stats, a
+      // mixed one the range of its keys
+      val shapes = manifestEntries(dir).map { case (name, lo, hi) =>
+        val rows = spark.read.schema(schema3).parquet(java.nio.file.Paths.get(dir, name).toString)
+        val r = rows.agg(min(col("k")), max(col("k")), count(lit(1)), count(col("k"))).head()
+        if (rows.filter(col("k") === long).isEmpty)
+          assert((lo, hi) === ((Option(r.getString(0)), Option(r.getString(1)))), s"$label entry $name")
+        else assert((lo, hi) === ((None, None)), s"$label the long key's entry $name has no stats")
+        (r.getLong(2) - r.getLong(3), r.getLong(3))
+      }
+      assert(shapes.exists { case (nulls, keys) => nulls > 0 && keys == 0 }, s"$label all-null entry")
+      if (!bucketed) // buckets file null keys apart
+        assert(shapes.exists { case (nulls, keys) => nulls > 0 && keys > 0 }, s"$label mixed entry")
+      assert(t.readKeys("k", Seq(long)).collect().map(_.getString(1)).toSeq === Seq(long), label)
+      t.deleteKeys("k", Seq(long))
+      assert(t.read().filter(col("k") === long).isEmpty, s"$label the long key is deleted")
+      assert(t.read().count() === commits.map(_.size).sum - 1, label)
+    }
+  }
+
+  test("append and deleteKeys each run one Spark job, the write") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("vt_jobs").toString
+    val kinds = StructType(Seq(StructField("kind", StringType), StructField("k", StringType),
+      StructField("n", LongType)))
+    val t = new VersionedTable(spark, dir, kinds, statsCol = Some("k"), bucketed = true,
+      splitCol = Some("kind"))
+    t.append(Seq(("o", "Aa", 1L), ("m", "Zz", 2L)).toDF("kind", "k", "n"))
+    val rows = Seq(("o", "Ab", 3L), ("m", "Ab", 4L), ("m", "Mc", 5L)).toDF("kind", "k", "n")
+    assert(jobsDuring(t.append(rows)) === 1, "append")
+    assert(jobsDuring(t.deleteKeys("k", Seq("Ab"))) === 1, "deleteKeys")
+    assert(t.read().count() === 3)
+  }
+
+  test("a statsCol that is not a string column is refused") {
+    val dir = Files.createTempDirectory("vt_stats_type").toString
+    intercept[IllegalArgumentException](new VersionedTable(spark, dir, schema, statsCol = Some("n")))
+    intercept[IllegalArgumentException](new VersionedTable(spark, dir, schema, statsCol = Some("x")))
+  }
+
   // ------------------------------------------------ keyed reads and the file index
 
   test("readKeys returns exactly the rows of read().filter(isInCollection), opening only hit entries") {
